@@ -502,39 +502,16 @@ def _kg_triples(spark: SparkSession) -> DataFrame:
             project_manifest_df,
             source_files_df,
         )
-        from codeontologypython_spark.operators.canonicalize import canonicalize_stage
-        from codeontologypython_spark.operators.extract import (
-            extract_stage,
-            split_extraction,
-        )
-        from codeontologypython_spark.operators.linking import link_stage
-        pre_ids = {r.id() for r
-                   in spark.sparkContext._jsc.getPersistentRDDs().values()}
-        src = source_files_df(spark)
-        out = extract_stage(src).localCheckpoint()
-        entities, triples, mentions, _ = split_extraction(out)
-        resolved, extra_entities, triples = link_stage(entities, triples,
-                                                       mentions)
-        final = canonicalize_stage(entities.unionByName(extra_entities),
-                                   triples.unionByName(resolved),
-                                   manifest=project_manifest_df(spark))
-        ck = final.localCheckpoint()
-        _KG_CACHE[key] = ck
-        # the eager localCheckpoint above materialized every stage cache —
-        # release them (stage caches live only until the stage output
-        # materializes; run_pipeline sweeps the same way) so the 40+
-        # queries sharing this session don't carry dead cached tables.
-        # The sweep set is snapshotted AFTER the checkpoint ran: SQL
-        # InMemoryRelation buffers register their RDD ids lazily at first
-        # materialization, so a pre-checkpoint snapshot would miss exactly
-        # the large canonicalize caches this sweep targets. The checkpoint's
-        # own persisted RDD (the LogicalRDD behind ck — its lineage is
-        # truncated, so unpersisting it breaks every later query) is
-        # excluded by id.
-        ck_id = ck._jdf.queryExecution().analyzed().rdd().id()
-        for r in spark.sparkContext._jsc.getPersistentRDDs().values():
-            if r.id() not in pre_ids and r.id() != ck_id:
-                r.unpersist(False)
+        from codeontologypython_spark.operators.extract import extract_stage
+        from codeontologypython_spark.plans.pipeline import build_kg
+        from codeontologypython_spark.session import cache_scope
+        # the eager localCheckpoint materializes every stage cache, which
+        # the scope then releases, so the 40+ queries sharing this session
+        # don't carry dead cached tables; the checkpoint itself is kept
+        with cache_scope(spark) as keep:
+            out = extract_stage(source_files_df(spark)).localCheckpoint()
+            final = build_kg(out, manifest=project_manifest_df(spark))
+            _KG_CACHE[key] = keep(final.localCheckpoint())
     return _KG_CACHE[key]
 
 

@@ -24,19 +24,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens_col(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
-def avg_token_len(text: Column) -> Column:
-    """Mean token length as an exact ratio (computed in long arithmetic,
-    cast at the end -> bit-identical to the SQL oracle)."""
-    toks = tokens_col(text)
-    total = F.aggregate(toks, F.lit(0).cast("long"),
-                        lambda acc, x: acc + F.length(x).cast("long"))
-    return (total.cast("double") / F.size(toks).cast("double"))
-
-
 def stopword_ratio(text: Column) -> Column:
     toks = tokens_col(text)
     hits = F.size(F.filter(toks, lambda x: F.lower(x).isin(STOPWORDS_EN)))

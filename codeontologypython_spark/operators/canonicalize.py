@@ -93,10 +93,10 @@ def dedup_literal_triples(lit: DataFrame) -> tuple[DataFrame, DataFrame]:
     dup-key anti/semi joins), so it must stay cached until the caller
     materializes the stage output; it cannot be unpersisted inside this
     function or canonicalize_stage without recomputing the literal-stream
-    groupBy. ``run_pipeline`` / ``__spark_entry__`` release it (and every
-    other stage cache) with a delta-sweep of ``getPersistentRDDs`` right
-    after the stage-3 result lands; long-lived sessions calling
-    canonicalize_stage directly should do the same.
+    groupBy. Callers release it (and every other stage cache) by running
+    the build inside ``session.cache_scope``, which frees the caches the
+    block created once the stage-3 result has materialized, as
+    ``run_pipeline`` and ``__spark_entry__._kg_triples`` do.
     """
     cols = ["repo", "commit", "subj", "pred", "obj", "obj_is_literal"]
     lit2 = lit.withColumn("digest", F.sha2("obj", 256))

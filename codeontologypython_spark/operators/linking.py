@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from codeontologypython_spark.operators.relational import (
     reliable_barrier,
     salted_join,
-    top1_per_group,
 )
 
 WOC = "http://rdf.webofcode.org/woc/"
@@ -415,9 +414,7 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
       (to union with ``base_triples``),
     - ``extra_entities``: Stage-2-materialized individuals (Field,
       FieldDeclarationStatement) to union with the Stage-1 entities,
-    - ``base_triples``: the input triples minus internal field-fact rows
-      (subjects containing the ``\\x02`` fact marker), whose winners were
-      re-subjected onto Field individuals.
+    - ``base_triples``: :func:`base_triples` of the input triples.
     """
     from codeontologypython_spark.operators.fields import (
         materialize_fields,
@@ -483,7 +480,7 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
     mro = contrib.filter(F.col("out") == "mro")
     overrides = resolve_overrides(entities, triples, mro)
 
-    is_fact = F.col("subj").contains("\x02")
+    is_fact = _is_field_fact()
     ffid_types = (resolved.filter(is_fact).drop("raw")
                   .unionByName(triples.filter(is_fact)))
     f_entities, f_triples = materialize_fields(
@@ -494,4 +491,17 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
            .unionByName(wild)
            .unionByName(overrides)
            .unionByName(f_triples))
-    return out, f_entities, triples.filter(~is_fact)
+    return out, f_entities, base_triples(triples)
+
+
+def _is_field_fact():
+    """Internal field-fact rows: Stage 1 subjects them ``<cls>\\x02<order>``
+    (operators/fields.py); Stage 2 re-subjects their winners onto Field
+    individuals, so they never reach the canonical graph."""
+    return F.col("subj").contains("\x02")
+
+
+def base_triples(triples: DataFrame) -> DataFrame:
+    """The Stage-1 triple stream without its internal field-fact rows — the
+    triples Stage 3 takes alongside :func:`link_stage`'s resolved ones."""
+    return triples.filter(~_is_field_fact())

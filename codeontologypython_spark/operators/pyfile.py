@@ -486,25 +486,6 @@ def literal_type_name(node) -> str | None:
     return None
 
 
-def value_type_name(node) -> str | None:
-    """L7 value inference (reference ``resolve_value``, tracking.py:383-428):
-    astroid ``infer()`` resolves literals to builtin classes and constructor
-    calls ``Foo()`` to the class ``Foo``. The join analog: literals yield the
-    builtin type name, a Call of a plain (dotted) name yields that name as a
-    type mention candidate; everything else degrades to None, matching the
-    reference's give-up-on-failure (tracking.py:395, :422).
-
-    The env-aware general form (module functions with inferable returns,
-    module constants) is :meth:`FileExtractor._value_type`, built on
-    :func:`build_local_infer_env`."""
-    lit = literal_type_name(node)
-    if lit is not None:
-        return lit
-    if isinstance(node, ast.Call):
-        return dotted_name(node.func)
-    return None
-
-
 def _collect_returns(fn):
     """Source-ordered ``return`` value expressions of a function body, not
     descending into nested defs/lambdas; ``None`` in the list marks a bare

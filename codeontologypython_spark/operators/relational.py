@@ -1,7 +1,7 @@
 """Generic distributed-relational primitives the KG pipeline is built from.
 
 These are the Spark-native replacements for the reference's recursive
-pointer-chasing (SURVEY.md §2.3/§2.4): broadcast + salted hash joins,
+pointer-chasing (SURVEY.md §2.3/§2.4): salted hash joins,
 top-1-per-group windows, bounded transitive closure, window dedup with a
 deterministic tiebreak. They are exposed directly (and exercised against the
 TPC-H-ish driver tables in ``__spark_entry__.py``) because they ARE the
@@ -61,6 +61,11 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     ``multiplier=1`` (one task per core) measured best for expression-heavy
     map work at bench scale; finer grains only add scheduling overhead to
     the downstream small-shuffle jobs.
+
+    Precondition: ``df`` is a scan-level input (a table read, plus at most
+    narrow projections/filters). The width probe ``df.rdd.getNumPartitions()``
+    plans the physical query; with an upstream exchange under AQE that
+    executes the intermediate query stages at plan-build time.
     """
     target = df.sparkSession.sparkContext.defaultParallelism * multiplier
     if df.rdd.getNumPartitions() >= target:
@@ -172,13 +177,3 @@ def transitive_closure(
     # keep min depth (and min carry) per pair
     aggs = [F.min("depth").alias("depth")] + [F.min(c).alias(c) for c in carry_cols]
     return closure.groupBy("src", "dst").agg(*aggs)
-
-
-def broadcast_if_small(df: DataFrame, threshold_rows: int | None = None):
-    """Hint helper: broadcast the project-level symbol table when it is small
-    (north_star), fall back to a shuffle join otherwise. Catalyst's AQE also
-    auto-broadcasts below spark.sql.autoBroadcastJoinThreshold; the explicit
-    hint covers the planned-size-unknown UDF-output case."""
-    if threshold_rows is None:
-        return F.broadcast(df)
-    return df

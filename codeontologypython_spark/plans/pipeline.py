@@ -4,14 +4,16 @@ stage checkpoints per-partition lineage and triple-count metrics to enable
 resume-from-failure").
 
 Stages (serializer.py:86-117 reordered for dataflow purity):
-  1. extract  — mapInPandas per-file extraction      (P1, P3-P11)
+  1. extract  — mapInArrow per-file extraction       (P1, P3-P11)
   2. link     — symbol-table joins                   (L1-L7, P4)
   3. canonical— IRI hashing + dedup + inverses       (C1, C3, C4)
   4. materialize — partitioned triple table + NT sink (S6)
 
-Each stage lands in ``<workdir>/stageN_*`` parquet. Resume is repo-granular:
-completed repos are read from the stage-1 checkpoint and anti-joined out of
-the input, so a killed run redoes only unfinished repos.
+Stages 2-3 are :func:`build_kg`, the one whole-KG build path; run_pipeline
+only adds checkpoints, lineage and resume around it. Each stage lands in
+``<workdir>/stageN_*`` parquet. Resume is repo-granular: completed repos
+are read from the stage-1 checkpoint and anti-joined out of the input, so a
+killed run redoes only unfinished repos.
 """
 
 from __future__ import annotations
@@ -25,8 +27,12 @@ from pyspark.sql import functions as F
 
 from codeontologypython_spark.operators.canonicalize import canonicalize_stage
 from codeontologypython_spark.operators.closure import select_import_closure
-from codeontologypython_spark.operators.extract import extract_stage, split_extraction
-from codeontologypython_spark.operators.linking import link_stage
+from codeontologypython_spark.operators.extract import (
+    extract_stage,
+    split_extraction,
+)
+from codeontologypython_spark.operators.linking import base_triples, link_stage
+from codeontologypython_spark.session import cache_scope
 from codeontologypython_spark.sources.ntriples import write_ntriples
 from codeontologypython_spark.sources.tables import write_triple_table
 
@@ -54,6 +60,43 @@ def _append_lineage(spark: SparkSession, lineage_path: str, stage: str,
      .write.mode("append").parquet(lineage_path))
 
 
+def build_kg(
+    extracted: DataFrame,
+    manifest: DataFrame | None = None,
+    broadcast_symtab: bool | str = "auto",
+    salt: int = 0,
+    land=None,
+) -> DataFrame:
+    """Stages 2-3: the Stage-1 record stream -> canonical triples. The one
+    whole-KG build path (run_pipeline, the driver queries, golden
+    regeneration, streaming compaction and the tests all go through here).
+
+    The split views are persisted — many downstream joins reuse them — and
+    so are several link/canonicalize tables; release them with
+    ``session.cache_scope`` once the result has materialized.
+
+    ``land(stage, build)`` wraps Stage 2 (``"link"``) and Stage 3
+    (``"canonicalize"``): ``build()`` computes the stage's frames as a tuple
+    (``(resolved, extra_entities)``, then ``(triples,)``), and ``land``
+    returns the frames the build continues with. The default just calls
+    ``build``; run_pipeline lands them as parquet checkpoints or, on resume,
+    reuses the ones a previous run landed.
+    """
+    entities, triples, mentions, _ = split_extraction(extracted)
+    entities = entities.persist()
+    triples = triples.persist()
+    mentions = mentions.persist()
+    land = land or (lambda stage, build: build())
+    resolved, extra_entities = land("link", lambda: link_stage(
+        entities, triples, mentions,
+        broadcast_symtab=broadcast_symtab, salt=salt)[:2])
+    (final,) = land("canonicalize", lambda: (canonicalize_stage(
+        entities.unionByName(extra_entities),
+        base_triples(triples).unionByName(resolved),
+        manifest=manifest),))
+    return final
+
+
 def run_pipeline(
     spark: SparkSession,
     src_df: DataFrame,
@@ -66,125 +109,97 @@ def run_pipeline(
     manifest: DataFrame | None = None,
 ) -> PipelineResult:
     t0 = time.time()
-    # every stage persist (split views here; entity/nonlit/iri_map/literal-
-    # digest caches inside canonicalize_stage) is dead once stage 3 lands on
-    # parquet — sweep exactly the caches THIS run created, so long-lived
-    # sessions (resume loops, query servers) don't accumulate one cached
-    # table per pipeline invocation. Caller-owned caches (ids captured
-    # before the run) are left alone.
-    _pre_cache_ids = {r.id() for r
-                      in spark.sparkContext._jsc.getPersistentRDDs().values()}
-    s1_path = os.path.join(workdir, "stage1_extract")
-    s3_path = os.path.join(workdir, "stage3_triples")
-    nt_path = os.path.join(workdir, "triples_nt")
-    lineage_path = os.path.join(workdir, "lineage")
+    # every stage cache (split views, link barriers, canonicalize tables) is
+    # dead once stage 3 lands on parquet: the scope releases exactly the
+    # caches this run created, leaving caller-owned ones alone
+    with cache_scope(spark):
+        s1_path = os.path.join(workdir, "stage1_extract")
+        nt_path = os.path.join(workdir, "triples_nt")
+        lineage_path = os.path.join(workdir, "lineage")
 
-    if root_repos:
-        # P2 lazy pruning: only the import closure of the root repos is
-        # extracted; unreferenced dependency repos cost nothing downstream
-        src_df = select_import_closure(src_df, root_repos)
+        if root_repos:
+            # P2 lazy pruning: only the import closure of the root repos is
+            # extracted; unreferenced dependency repos cost nothing
+            # downstream
+            src_df = select_import_closure(src_df, root_repos)
 
-    # ---- Stage 1: extract (resumable at repo granularity) -----------------
-    # the done-set comes from LINEAGE, not from the stage-1 parquet dir:
-    # append-mode tasks commit individually, so a killed run leaves partial
-    # repo data in the dir — lineage rows are written only after the whole
-    # stage write succeeded, making them the safe resume marker
-    done = None
-    if resume and _exists(spark, lineage_path) and _exists(spark, s1_path):
-        done = (spark.read.parquet(lineage_path)
-                .filter((F.col("stage") == "extract")
-                        & (F.col("status") == "ok"))
-                .select("repo").distinct())
-        todo = src_df.join(done, "repo", "left_anti")
-        # drop any partial output of repos that never reached lineage
-        stale = (spark.read.parquet(s1_path).select("repo").distinct()
-                 .join(done, "repo", "left_anti"))
-        if not stale.isEmpty():
-            kept = (spark.read.parquet(s1_path)
-                    .join(done, "repo", "left_semi").localCheckpoint())
-            kept.write.mode("overwrite").parquet(s1_path)
-    else:
-        todo = src_df
-    stage1_fresh = not todo.isEmpty()
-    if stage1_fresh:
-        out = extract_stage(todo)
-        out.write.mode("append" if done is not None else "overwrite").parquet(s1_path)
-    extracted = spark.read.parquet(s1_path)
+        # ---- Stage 1: extract (resumable at repo granularity) -------------
+        # the done-set comes from LINEAGE, not from the stage-1 parquet dir:
+        # append-mode tasks commit individually, so a killed run leaves
+        # partial repo data in the dir — lineage rows are written only after
+        # the whole stage write succeeded, making them the safe resume marker
+        done = None
+        if (resume and _exists(spark, lineage_path)
+                and _exists(spark, s1_path)):
+            done = (spark.read.parquet(lineage_path)
+                    .filter((F.col("stage") == "extract")
+                            & (F.col("status") == "ok"))
+                    .select("repo").distinct())
+            todo = src_df.join(done, "repo", "left_anti")
+            # drop any partial output of repos that never reached lineage
+            stale = (spark.read.parquet(s1_path).select("repo").distinct()
+                     .join(done, "repo", "left_anti"))
+            if not stale.isEmpty():
+                kept = (spark.read.parquet(s1_path)
+                        .join(done, "repo", "left_semi").localCheckpoint())
+                kept.write.mode("overwrite").parquet(s1_path)
+        else:
+            todo = src_df
+        stage1_fresh = not todo.isEmpty()
+        if stage1_fresh:
+            out = extract_stage(todo)
+            out.write.mode("append" if done is not None
+                           else "overwrite").parquet(s1_path)
+        extracted = spark.read.parquet(s1_path)
 
-    rows_in = src_df.groupBy("repo").agg(F.count("*").alias("rows_in"))
-    # per-partition triple-count metrics (north_star: "checkpoints
-    # per-partition lineage and triple-count metrics")
-    rows_out = (extracted
-                .groupBy("repo", F.spark_partition_id().alias("partition_id"))
-                .agg(F.count("*").alias("rows_out")))
-    _append_lineage(spark, lineage_path, "extract",
-                    rows_out.join(rows_in, "repo", "left"))
+        rows_in = src_df.groupBy("repo").agg(F.count("*").alias("rows_in"))
+        # per-partition triple-count metrics (north_star: "checkpoints
+        # per-partition lineage and triple-count metrics")
+        rows_out = (extracted
+                    .groupBy("repo",
+                             F.spark_partition_id().alias("partition_id"))
+                    .agg(F.count("*").alias("rows_out")))
+        _append_lineage(spark, lineage_path, "extract",
+                        rows_out.join(rows_in, "repo", "left"))
 
-    entities, triples, mentions, errors = split_extraction(extracted)
-    # reused by many downstream joins — cache the split views
-    entities = entities.persist()
-    triples = triples.persist()
-    mentions = mentions.persist()
+        # ---- Stages 2-3: a parquet checkpoint per stage (resume + plan
+        # isolation) around the one build path
+        stage_paths = {
+            "link": (os.path.join(workdir, "stage2_resolved"),
+                     os.path.join(workdir, "stage2_entities")),
+            "canonicalize": (os.path.join(workdir, "stage3_triples"),),
+        }
 
-    # downstream checkpoints are reusable on resume only when stage 1 added
-    # nothing new (their inputs are then byte-identical to the prior run)
-    def _stage_done(stage: str, *paths: str) -> bool:
-        if not (resume and not stage1_fresh):
-            return False
-        if not all(_exists(spark, p) for p in paths):
-            return False
-        return not (spark.read.parquet(lineage_path)
-                    .filter((F.col("stage") == stage)
-                            & (F.col("status") == "ok")).isEmpty())
+        def land(stage, build):
+            paths = stage_paths[stage]
+            # a checkpoint is reusable on resume only when stage 1 added
+            # nothing new (its inputs are then byte-identical to the prior
+            # run)
+            if (resume and not stage1_fresh
+                    and all(_exists(spark, p) for p in paths)
+                    and not (spark.read.parquet(lineage_path)
+                             .filter((F.col("stage") == stage)
+                                     & (F.col("status") == "ok")).isEmpty())):
+                return tuple(spark.read.parquet(p) for p in paths)
+            for df, p in zip(build(), paths):
+                df.write.mode("overwrite").parquet(p)
+            frames = tuple(spark.read.parquet(p) for p in paths)
+            _append_lineage(
+                spark, lineage_path, stage,
+                frames[0].groupBy("repo").agg(F.count("*").alias("rows_out"))
+                .withColumn("rows_in", F.lit(None).cast("long")))
+            return frames
 
-    # ---- Stage 2: link (parquet checkpoint for resume + plan isolation) ---
-    s2_path = os.path.join(workdir, "stage2_resolved")
-    s2_ents_path = os.path.join(workdir, "stage2_entities")
-    if _stage_done("link", s2_path, s2_ents_path):
-        resolved = spark.read.parquet(s2_path)
-        extra_entities = spark.read.parquet(s2_ents_path)
-    else:
-        resolved, extra_entities, triples = link_stage(
-            entities, triples, mentions,
-            broadcast_symtab=broadcast_symtab, salt=salt)
-        resolved.write.mode("overwrite").parquet(s2_path)
-        resolved = spark.read.parquet(s2_path)
-        extra_entities.write.mode("overwrite").parquet(s2_ents_path)
-        extra_entities = spark.read.parquet(s2_ents_path)
-        _append_lineage(
-            spark, lineage_path, "link",
-            resolved.groupBy("repo").agg(F.count("*").alias("rows_out"))
-            .withColumn("rows_in", F.lit(None).cast("long")))
+        final = build_kg(extracted, manifest=manifest,
+                         broadcast_symtab=broadcast_symtab, salt=salt,
+                         land=land)
 
-    # ---- Stage 3: canonicalize -------------------------------------------
-    if _stage_done("canonicalize", s3_path):
-        final = spark.read.parquet(s3_path)
-    else:
-        # NOTE: when stage 2 was skipped, `triples` still contains the raw
-        # field-fact rows — recompute the base split the same way link_stage
-        # does so the union matches the non-resumed plan
-        base_triples = triples.filter(~F.col("subj").contains("\x02"))
-        final = canonicalize_stage(entities.unionByName(extra_entities),
-                                   base_triples.unionByName(resolved),
-                                   manifest=manifest)
-        final.write.mode("overwrite").parquet(s3_path)
-        final = spark.read.parquet(s3_path)
-        _append_lineage(
-            spark, lineage_path, "canonicalize",
-            final.groupBy("repo").agg(F.count("*").alias("rows_out"))
-            .withColumn("rows_in", F.lit(None).cast("long")))
-
-    # ---- Stage 4: materialize --------------------------------------------
-    triples_path = os.path.join(workdir, "triple_table")
-    write_triple_table(final, triples_path)
-    if write_nt:
-        write_ntriples(final, nt_path)
-
-    n = final.count()
-    # stage output is parquet-backed from here on: release this run's caches
-    for r in spark.sparkContext._jsc.getPersistentRDDs().values():
-        if r.id() not in _pre_cache_ids:
-            r.unpersist(False)
+        # ---- Stage 4: materialize ----------------------------------------
+        triples_path = os.path.join(workdir, "triple_table")
+        write_triple_table(final, triples_path)
+        if write_nt:
+            write_ntriples(final, nt_path)
+        n = final.count()
     return PipelineResult(triples_path, nt_path if write_nt else None,
                           lineage_path, n, time.time() - t0)
 

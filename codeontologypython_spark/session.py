@@ -8,8 +8,18 @@ batching sized for large ``content`` blobs).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _default_driver_memory() -> str:
+    """About 40% of physical memory (MemTotal), in whole GiB: the local-mode
+    JVM hosts the driver AND every executor, and the Python workers and page
+    cache need the rest. A heap sized past physical memory is never
+    collected before the kernel kills the JVM."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(total * 0.4) >> 30)}g"
 
 
 def get_spark(
@@ -48,7 +58,9 @@ def get_spark(
         # stage keeps ~cpus concurrent ~100MB Arrow batches in flight, and an
         # undersized heap turns into kernel-side reclaim storms (measured
         # 31% system time at 16g / 32 cores)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -57,3 +69,35 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def cache_scope(spark: SparkSession):
+    """Release every RDD persisted inside the block when it exits.
+
+    Stage caches (the split views, canonicalize's entity / iri_map /
+    literal-digest tables, loop barriers) are dead once the stage output has
+    materialized; without a release, long-lived sessions (resume loops,
+    query servers) accumulate one set of cached tables per build. RDDs
+    persisted before the block (caller-owned caches) are left alone.
+
+    The release set is read at exit: SQL InMemoryRelation buffers register
+    their RDD ids lazily at first materialization, so the block's result
+    must have materialized before it exits. ``keep(df)``, the context value,
+    exempts a checkpointed DataFrame's own RDD (its lineage is truncated, so
+    releasing it breaks every later use) and returns ``df``.
+    """
+    jsc = spark.sparkContext._jsc
+    before = {r.id() for r in jsc.getPersistentRDDs().values()}
+    kept: set[int] = set()
+
+    def keep(df: DataFrame) -> DataFrame:
+        kept.add(df._jdf.queryExecution().analyzed().rdd().id())
+        return df
+
+    try:
+        yield keep
+    finally:
+        for r in jsc.getPersistentRDDs().values():
+            if r.id() not in before and r.id() not in kept:
+                r.unpersist(False)

@@ -49,15 +49,6 @@ def read_triple_table(spark: SparkSession, path: str,
     return spark.read.format(fmt).load(path)
 
 
-def read_source_files(spark: SparkSession, path: str) -> DataFrame:
-    """Read a source_files table (input_hint shape)."""
-    return spark.read.parquet(path)
-
-
-def write_source_files(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").parquet(path)
-
-
 def ingest_invariant(src_df: DataFrame) -> DataFrame:
     """Per-row content-integrity column (BASELINE.json input_hint: sha256
     equality vs the reference ingest). Returns rows violating the invariant

@@ -86,10 +86,11 @@ def compact(spark: SparkSession, workdir: str) -> DataFrame:
     (subjects and objects dominate shuffle bytes at corpus scale). The
     winner semi-join costs one broadcast of a tiny (repo, path, commit) set
     and achieves exclusion outright.
+
+    The build's stage caches stay persisted: release them with
+    ``session.cache_scope`` around the action that consumes the result.
     """
-    from codeontologypython_spark.operators.canonicalize import canonicalize_stage
-    from codeontologypython_spark.operators.extract import split_extraction
-    from codeontologypython_spark.operators.linking import link_stage
+    from codeontologypython_spark.plans.pipeline import build_kg
 
     extracted = spark.read.parquet(os.path.join(workdir, "stream_extract"))
     lineage = spark.read.parquet(os.path.join(workdir, "stream_lineage"))
@@ -101,7 +102,4 @@ def compact(spark: SparkSession, workdir: str) -> DataFrame:
     # to the extraction record stream, so no shuffle of the big side
     extracted = extracted.join(F.broadcast(latest),
                                ["repo", "path", "commit"], "left_semi")
-    entities, triples, mentions, _ = split_extraction(extracted)
-    resolved, extra_entities, triples = link_stage(entities, triples, mentions)
-    return canonicalize_stage(entities.unionByName(extra_entities),
-                              triples.unionByName(resolved))
+    return build_kg(extracted)

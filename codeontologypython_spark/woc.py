@@ -153,24 +153,3 @@ for _f, _i in _INVERSE_PAIRS:
 PUBLIC_ACCESS_MODIFIER = WOC + "PythonPublicAccessModifier"
 PROTECTED_ACCESS_MODIFIER = WOC + "PythonProtectedAccessModifier"
 PRIVATE_ACCESS_MODIFIER = WOC + "PythonPrivateAccessModifier"
-
-ACCESS_MODIFIERS = {
-    "public": PUBLIC_ACCESS_MODIFIER,
-    "protected": PROTECTED_ACCESS_MODIFIER,
-    "private": PRIVATE_ACCESS_MODIFIER,
-}
-
-
-def access_modifier_for(name: str, in_class: bool) -> str | None:
-    """Name-convention access rule (reference extractor.py:1136-1144):
-    only members of a class scope get a modifier; ``__x`` (not dunder) ->
-    private, ``_x`` -> protected, else public."""
-    if not in_class:
-        return None
-    if name.startswith("__") and not name.endswith("__"):
-        return "private"
-    # dunder names (e.g. __init__) fall through to public, matching the
-    # reference (extractor.py:1136-1144) and pyfile._access_modifier
-    if name.startswith("_") and not name.startswith("__"):
-        return "protected"
-    return "public"

@@ -5,7 +5,7 @@ from codeontologypython_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cpus=8, shuffle_partitions=8, app_name="tests")
+    s = get_spark(shuffle_partitions=8, app_name="tests")
     yield s
 
 
@@ -39,12 +39,7 @@ def final_triples(spark, extracted):
     """Shared canonical triples (Stages 2+3), manifest-classified like the
     goldens (tools/make_goldens.py)."""
     from codeontologypython_spark.corpus.fixtures import project_manifest_df
-    from codeontologypython_spark.operators.canonicalize import canonicalize_stage
-    from codeontologypython_spark.operators.linking import link_stage
+    from codeontologypython_spark.plans.pipeline import build_kg
 
-    e = extracted
-    resolved, extra_entities, base_triples = link_stage(
-        e["entities"], e["triples"], e["mentions"])
-    allt = base_triples.unionByName(resolved)
-    return canonicalize_stage(e["entities"].unionByName(extra_entities),
-                              allt, manifest=project_manifest_df(spark)).cache()
+    return build_kg(extracted["raw"],
+                    manifest=project_manifest_df(spark)).cache()

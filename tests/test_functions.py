@@ -1,5 +1,5 @@
 """Tests for the training-data-pipeline operators (dedup, similarity, text
-analysis, multimodal plumbing)."""
+analysis, sampling, packing, curation)."""
 
 import hashlib
 
@@ -133,72 +133,6 @@ def test_doc_fingerprint_stability(docs):
     assert out1[4] is None  # no shingles -> null fingerprint
 
 
-def test_multimodal_plumbing(spark):
-    from codeontologypython_spark.functions.multimodal import (
-        decode_and_featurize,
-        frame_sample_plan,
-        synthetic_media_df,
-    )
-    media = synthetic_media_df(spark, 12)
-    feats = decode_and_featurize(media, fake=True).collect()
-    assert len(feats) == 12
-    by_id = {r["media_id"]: r for r in feats}
-    assert by_id[0]["n_bytes"] == 128
-    assert len(by_id[0]["feature"]) == 8
-    # deterministic: same payload -> same feature
-    feats2 = decode_and_featurize(media, fake=True).collect()
-    assert {r["media_id"]: r["feature"] for r in feats2} == \
-           {r["media_id"]: r["feature"] for r in feats}
-    # real path on opaque payloads: warn-and-skip rows, never job failure
-    real_on_fake = decode_and_featurize(media, fake=False).collect()
-    assert all(r["status"] == "unsupported" and r["feature"] is None
-               for r in real_on_fake)
-    plan = frame_sample_plan(media, every_ms=2000)
-    vids = media.filter(F.col("kind") == "video").count()
-    assert plan.count() >= vids
-
-
-def test_multimodal_real_decode(spark):
-    """Genuine decodes via the pure-stdlib PNG and WAV codecs (Pillow/
-    soundfile probed first when importable)."""
-    from codeontologypython_spark.functions.multimodal import (
-        decode_and_featurize,
-        decode_png,
-        encode_png_gray,
-        synthetic_media_df,
-    )
-    # codec roundtrip: encode -> decode recovers the pixels
-    pixels = [[(x * 7 + y) % 256 for x in range(9)] for y in range(5)]
-    w, h, flat = decode_png(encode_png_gray(pixels))
-    assert (w, h) == (9, 5)
-    assert flat == [p for row in pixels for p in row]
-
-    media = synthetic_media_df(spark, 12, real=True)
-    feats = {r["media_id"]: r for r in
-             decode_and_featurize(media, fake=False).collect()}
-    img = [r for r in feats.values() if r["kind"] == "image"]
-    aud = [r for r in feats.values() if r["kind"] == "audio"]
-    vid = [r for r in feats.values() if r["kind"] == "video"]
-    assert img and all(r["status"] in ("builtin-png", "pil") for r in img)
-    assert all(len(r["feature"]) == 8 for r in img)
-    assert aud and all(r["status"] in ("builtin-wav", "soundfile")
-                       for r in aud)
-    assert all(r["feature"] is not None for r in aud)
-    # video: PyAV when importable (first-frame feature), honest unsupported
-    # rows otherwise (the synthetic payloads are fake containers, so with a
-    # real PyAV they decode-fail into error:* — never silently succeed)
-    try:
-        import av  # type: ignore # noqa: F401
-        assert vid and all(r["status"].startswith(("pyav", "error:"))
-                           for r in vid)
-    except ImportError:
-        assert vid and all(r["status"] == "unsupported" for r in vid)
-    # determinism
-    feats2 = {r["media_id"]: r["feature"] for r in
-              decode_and_featurize(media, fake=False).collect()}
-    assert feats2 == {k: r["feature"] for k, r in feats.items()}
-
-
 def test_bpe_ish_tokenizer(spark):
     """GPT-2-style pre-tokenizer subset: contractions split, digit runs
     capped at 3, punctuation separate — counts diverge from whitespace on
@@ -277,26 +211,6 @@ def test_bucketed_ann_index_prunes_partitions(spark, tmp_path):
     assert "PartitionFilters: [bucket" not in aplan  # join form chosen
     assert (auto_big.select(cols).exceptAll(got.select(cols)).count()
             + got.select(cols).exceptAll(auto_big.select(cols)).count()) == 0
-
-
-def test_netpbm_whitespace_first_pixel():
-    """Regression (ADVICE r2): the netpbm header ends at EXACTLY ONE
-    whitespace byte — raster data whose first byte is ASCII whitespace
-    (0x20, 0x09-0x0D) must not be eaten by a whitespace-run split."""
-    from codeontologypython_spark.functions.multimodal import decode_netpbm
-    w, h = 3, 2
-    # first pixel 0x20 (space), second 0x0A (newline) — the adversarial case
-    pix = [0x20, 0x0A, 0x7F, 0x00, 0xFF, 0x09]
-    data = b"P5 %d %d 255\n" % (w, h) + bytes(pix)
-    gw, gh, got = decode_netpbm(data)
-    assert (gw, gh) == (w, h)
-    assert got == pix
-    # P6 RGB with whitespace-valued leading channel bytes
-    rgb = bytes([0x20, 0x20, 0x20, 0x0A, 0x0A, 0x0A] * w * h)[: 3 * w * h]
-    data6 = b"P6\n%d %d\n255\n" % (w, h) + rgb
-    gw6, gh6, got6 = decode_netpbm(data6)
-    assert (gw6, gh6) == (w, h)
-    assert got6[0] == 0x20 and got6[1] == 0x0A
 
 
 def test_near_dup_clusters_and_corpus(spark):

@@ -220,6 +220,35 @@ def test_pipeline_resume(spark, source_files, tmp_path):
     assert lineage.filter(F.col("stage") == "extract").count() > 0
 
 
+def test_pipeline_resume_reuses_stage_checkpoints(spark, source_files,
+                                                  tmp_path):
+    """A resume whose stage 1 adds nothing reuses the landed stage-2/3
+    checkpoints: neither stage runs again (no new lineage rows), and the
+    triple table equals the first run's."""
+    from codeontologypython_spark.plans.pipeline import run_pipeline
+    from codeontologypython_spark.sources.tables import read_triple_table
+
+    def stage_rows(res):
+        lineage = spark.read.parquet(res.lineage_path)
+        return {s: lineage.filter(F.col("stage") == s).count()
+                for s in ("link", "canonicalize")}
+
+    def table(res):
+        return sorted(tuple(r) for r in read_triple_table(
+            spark, res.triples_path).select(
+                "subj", "pred", "obj", "obj_is_literal").collect())
+
+    wd = str(tmp_path / "wd")
+    r1 = run_pipeline(spark, source_files, wd, write_nt=False)
+    rows1, table1 = stage_rows(r1), table(r1)
+    assert rows1["link"] > 0 and rows1["canonicalize"] > 0
+
+    r2 = run_pipeline(spark, source_files, wd, resume=True, write_nt=False)
+    assert stage_rows(r2) == rows1
+    assert r2.n_triples == r1.n_triples
+    assert table(r2) == table1
+
+
 def test_pipeline_releases_stage_caches(spark, source_files, tmp_path):
     """ADVICE r4: every persist() a pipeline run creates (split views,
     canonicalize entity/nonlit/iri_map and literal-digest tables) must be
@@ -278,19 +307,15 @@ def test_argless_ptype_degrades_to_generic(spark):
     the bare generic class when no type argument resolves (is_all_none rule,
     extractor.py:955-961)."""
     from pyspark.sql import functions as F
-    from codeontologypython_spark.operators.canonicalize import canonicalize_stage
-    from codeontologypython_spark.operators.extract import (
-        extract_stage, split_extraction)
-    from codeontologypython_spark.operators.linking import link_stage
+    from codeontologypython_spark.operators.extract import extract_stage
+    from codeontologypython_spark.plans.pipeline import build_kg
     src = spark.createDataFrame(
         [("r", "g.py", "c0", "python",
           "class Box:\n    pass\n\n"
           "class Known:\n    pass\n\n"
           "def f(a: Box[T], b: Box[Known]):\n    pass\n")],
         ["repo", "path", "commit", "lang", "content"])
-    e, t, m, _ = split_extraction(extract_stage(src).localCheckpoint())
-    resolved, xe, t2 = link_stage(e, t, m)
-    final = canonicalize_stage(e.unionByName(xe), t2.unionByName(resolved))
+    final = build_kg(extract_stage(src).localCheckpoint())
     woc = "http://rdf.webofcode.org/woc/"
     # param a: hasType must point at a CLASS iri (Box directly), and no
     # ParameterizedType may survive with zero resolved arguments

@@ -93,137 +93,3 @@ def test_incremental_supersede_changed_file(spark, tmp_path):
     # exactly one commit survives
     commits = {r["commit"] for r in final.select("commit").distinct().collect()}
     assert commits == {"commit-bbb"}
-
-
-def test_windowed_counts_with_watermark(spark, tmp_path):
-    """Watermarked tumbling-window aggregation over a parquet event stream;
-    totals must equal the batch groupBy on the same data."""
-    src = str(tmp_path / "ev")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.repartition(4).write.mode("overwrite").parquet(src)
-
-    from codeontologypython_spark.streaming.windows import run_windowed_counts
-    out = run_windowed_counts(spark, src, str(tmp_path / "ck"),
-                              query_name="wc_test")
-    got_total = out.agg(F.sum("n_events")).collect()[0][0]
-    assert got_total == events.count()
-    # window math: every window is 10 minutes wide
-    widths = out.select(
-        (F.col("window_end").cast("long")
-         - F.col("window_start").cast("long")).alias("w")).distinct().collect()
-    assert {r["w"] for r in widths} == {600}
-
-
-def test_stateful_sessionizer_equals_batch(spark, tmp_path):
-    """applyInPandasWithState sessionizer == the batch q_sessionize fold on
-    the same events, with the stream split across micro-batches (state must
-    carry sessions over batch boundaries)."""
-    import __spark_entry__ as se
-
-    src = str(tmp_path / "ev2")
-    events = (spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-              .filter(F.col("user_id") < 20))
-    # two time-ordered waves -> two micro-batches (maxFilesPerTrigger=1)
-    cut = events.agg(F.expr(
-        "percentile(unix_micros(cast(ts as timestamp)), 0.5)")).collect()[0][0]
-    tsl = F.unix_micros(F.col("ts").cast("timestamp"))
-    w1 = events.filter(tsl <= cut)
-    w2 = events.filter(tsl > cut)
-    w1.coalesce(1).write.mode("overwrite").parquet(src)
-    import glob as g
-    part1 = sorted(g.glob(src + "/part-*"))[0]
-    import shutil
-    w2.coalesce(1).write.mode("overwrite").parquet(src + "_w2")
-    part2 = sorted(g.glob(src + "_w2/part-*"))[0]
-    # file order = arrival order: rename so wave 1 sorts first
-    shutil.copy(part1, src + "/wave-1.parquet")
-    shutil.copy(part2, src + "/wave-2.parquet")
-    import os
-    os.remove(part1)
-
-    from codeontologypython_spark.streaming.stateful import run_sessionize
-    got = run_sessionize(spark, src, str(tmp_path / "ck2"),
-                         query_name="sess_test")
-
-    # batch reference on the SAME filtered data (reuse the query's logic
-    # inline via a temp parquet dir)
-    ref_dir = str(tmp_path / "ref")
-    os.makedirs(ref_dir, exist_ok=True)
-    events.write.mode("overwrite").parquet(ref_dir + "/events.parquet")
-    batch = se.queries()["q_sessionize"](spark, ref_dir)
-
-    g1 = {(r["user_id"], r["session_id"]): (r["n_events"], r["duration_us"])
-          for r in got.collect()}
-    g2 = {(r["user_id"], r["session_id"]): (r["n_events"], r["duration_us"])
-          for r in batch.collect()}
-    assert g1 == g2
-
-
-def test_sessionize_group_chunk_order_invariant():
-    """Regression (ADVICE r2): applyInPandasWithState delivers a group as
-    multiple Arrow chunks with no global time order — the fold must sort the
-    MATERIALIZED group once, not each chunk independently."""
-    import pandas as pd
-
-    from codeontologypython_spark.streaming.stateful import _sessionize_group
-
-    class _FakeState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    hour = 3600 * 1_000_000
-    # events at 0 and +10min (session 1) then +3h (session 2 after the
-    # >30min inactivity gap)
-    ev = [(1, 0), (2, 600 * 1_000_000), (3, 3 * hour)]
-
-    def run(chunks):
-        st = _FakeState()
-        out = list(_sessionize_group(
-            (7,), iter([pd.DataFrame({"event_id": [e for e, _ in c],
-                                      "tsl": [t for _, t in c]})
-                        for c in chunks]), st))
-        return pd.concat(out).sort_values("session_id").reset_index(drop=True)
-
-    sorted_one = run([ev])
-    # chunk 1 holds the LATE event, chunk 2 the early ones: per-chunk sorting
-    # would see 3h before 0h and split sessions wrongly
-    out_of_order = run([[ev[2]], ev[:2]])
-    assert sorted_one.equals(out_of_order)
-    assert list(sorted_one["n_events"]) == [2, 1]
-
-
-def test_streaming_dedup_across_batches(spark, tmp_path):
-    """Streaming exact dedup: a content re-delivered in a LATER file (own
-    micro-batch via maxFilesPerTrigger=1) is dropped by carried state."""
-    import datetime
-
-    from codeontologypython_spark.streaming.dedupstream import (
-        run_dedup_stream)
-    src = str(tmp_path / "docs")
-    ckpt = str(tmp_path / "ck")
-    t0 = datetime.datetime(2026, 1, 1, 0, 0, 0)
-    schema = "doc_id long, ts timestamp, text string, source string"
-    spark.createDataFrame(
-        [(0, t0, "alpha beta", "s"), (1, t0, "gamma delta", "s")],
-        schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(
-        [(2, t0, "alpha beta", "s"), (3, t0, "epsilon zeta", "s")],
-        schema).coalesce(1).write.mode("append").parquet(src)
-
-    out = run_dedup_stream(spark, src, ckpt).collect()
-    assert len(out) == 3                       # the re-delivery is dropped
-    assert {r["text"] for r in out} == {"alpha beta", "gamma delta",
-                                        "epsilon zeta"}
-    kept_alpha = [r for r in out if r["text"] == "alpha beta"]
-    assert len(kept_alpha) == 1                # exactly one representative

@@ -46,7 +46,7 @@ def table_hash(rows, cols):
 
 
 def main():
-    spark = get_spark(cpus=16)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "

@@ -34,26 +34,15 @@ def main() -> None:
         project_manifest_df,
         source_files_df,
     )
-    from codeontologypython_spark.operators.canonicalize import (
-        canonicalize_stage,
-    )
-    from codeontologypython_spark.operators.extract import (
-        extract_stage,
-        split_extraction,
-    )
-    from codeontologypython_spark.operators.linking import link_stage
+    from codeontologypython_spark.operators.extract import extract_stage
+    from codeontologypython_spark.plans.pipeline import build_kg
     from codeontologypython_spark.session import get_spark
     from codeontologypython_spark.sources.ntriples import to_ntriples
 
-    spark = get_spark(cpus=8, shuffle_partitions=8, app_name="make-goldens")
-    src = source_files_df(spark)
-    out = extract_stage(src).localCheckpoint()
-    entities, triples, mentions, _ = split_extraction(out)
-    resolved, extra_entities, base = link_stage(entities, triples, mentions)
-    final = canonicalize_stage(entities.unionByName(extra_entities),
-                               base.unionByName(resolved),
-                               manifest=project_manifest_df(spark)
-                               ).localCheckpoint()
+    spark = get_spark(app_name="make-goldens")
+    out = extract_stage(source_files_df(spark)).localCheckpoint()
+    final = build_kg(out, manifest=project_manifest_df(spark)
+                     ).localCheckpoint()
 
     golden_dir = os.path.join(REPO, "tests", "golden")
     os.makedirs(golden_dir, exist_ok=True)

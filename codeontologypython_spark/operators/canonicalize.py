@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from codeontologypython_spark import woc
+from codeontologypython_spark import session, woc
 from codeontologypython_spark.operators.relational import reliable_barrier
 
 WOC = woc.WOC
@@ -54,12 +54,6 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
                     F.col("w.obj_is_literal").alias("obj_is_literal")))
 
 
-# dup keys above this count stop fitting a comfortable broadcast (~120 B/key);
-# fall back to the classic byte-shuffle dedup — the shape of a commit-dense
-# corpus where most files exist at many commits
-_LIT_DUP_BROADCAST_MAX = 2_000_000
-
-
 def dedup_literal_triples(lit: DataFrame) -> tuple[DataFrame, DataFrame]:
     """C1 for LITERAL rows without shuffling their bytes.
 
@@ -85,7 +79,7 @@ def dedup_literal_triples(lit: DataFrame) -> tuple[DataFrame, DataFrame]:
     triple, which :func:`compute_iris` aggregates into the own-literal IRI
     hash input (identical multiset to hashing the deduped rows directly, so
     IRIs are byte-identical to the classic path). Falls back to classic
-    dedup when the dup-key set exceeds ``_LIT_DUP_BROADCAST_MAX``.
+    dedup when the dup-key set exceeds ``session._LIT_DUP_BROADCAST_MAX``.
 
     Cache lifetime contract: the digest-group table is ``persist()``ed here
     (it feeds the dup gate eagerly, then BOTH returned frames lazily — the
@@ -108,7 +102,7 @@ def dedup_literal_triples(lit: DataFrame) -> tuple[DataFrame, DataFrame]:
     groups = g.select("subj", "pred", "digest")
     if n_dups == 0:
         return lit2.select(*cols), groups
-    if n_dups > _LIT_DUP_BROADCAST_MAX:
+    if n_dups > session._LIT_DUP_BROADCAST_MAX:
         return dedup_triples(lit), groups
     clean = (lit2.join(F.broadcast(dup_keys), ["subj", "pred", "digest"],
                        "left_anti").select(*cols))
@@ -167,9 +161,15 @@ def dedup_entities(entities: DataFrame) -> DataFrame:
 
 
 def compute_iris(entities: DataFrame, triples: DataFrame,
-                 lit_groups: DataFrame | None = None,
+                 lit_groups: DataFrame,
                  broadcast_entities: bool = False) -> DataFrame:
     """C3 -> (eid, iri).
+
+    ``triples`` supplies the neighbor names (its literal rows, if any, are
+    ignored); ``lit_groups`` — the distinct (subj, pred, digest) table from
+    :func:`dedup_literal_triples`, one row per surviving literal triple —
+    supplies the own-literal digests without touching the literal byte
+    column again.
 
     ``broadcast_entities``: hint the (eid, name) side of the neighbor-name
     join as a broadcast — the non-literal stream then keeps its subj
@@ -185,26 +185,16 @@ def compute_iris(entities: DataFrame, triples: DataFrame,
     e.g. two identical `pass` statements on the same line of different
     files; at 10^12-file scale that assert would fail, so the eid term makes
     IRIs collision-free while staying deterministic in the input content.
-
-    ``lit_groups`` (the distinct (subj, pred, digest) table from
-    :func:`dedup_literal_triples`) supplies the own-literal digests without
-    touching the literal byte column again; without it they are hashed from
-    ``triples`` directly (the mixed-stream form used by unit tests).
     """
     # each literal is pre-hashed so the aggregation shuffles 64-char digests
     # instead of multi-KB hasSourceCode strings; the outer sha256 over the
     # sorted digest list keeps determinism (the reference concatenates raw
     # values, individuals.py:60-85 — same IRI-stability contract, different
-    # bytes, which is fine because IRI parity is engine-internal)
-    if lit_groups is not None:
-        # one group row per surviving deduped literal triple -> the digest
-        # multiset equals hashing the deduped rows directly
-        own_lits = (lit_groups.groupBy("subj")
-                    .agg(F.collect_list("digest").alias("lits")))
-    else:
-        own_lits = (triples.filter(F.col("obj_is_literal"))
-                    .groupBy("subj")
-                    .agg(F.collect_list(F.sha2("obj", 256)).alias("lits")))
+    # bytes, which is fine because IRI parity is engine-internal). One group
+    # row per surviving deduped literal triple -> the digest multiset equals
+    # hashing the deduped rows directly
+    own_lits = (lit_groups.groupBy("subj")
+                .agg(F.collect_list("digest").alias("lits")))
     name_map = entities.select(F.col("eid").alias("obj"),
                                F.col("name").alias("nname"))
     if broadcast_entities:
@@ -230,14 +220,6 @@ def compute_iris(entities: DataFrame, triples: DataFrame,
                         F.concat_ws(",", F.array_sort(
                             F.coalesce(F.col("nnames"), F.array()))),
                     ), 256)).alias("iri")))
-
-
-# above this many iri_map rows (~130 B/row -> ~500 MB hash relation) the
-# broadcast rewrite stops fitting comfortably in executor memory; fall back
-# to shuffle joins (the corpus-scale default, where the triple table is
-# bucketed so the sorts are co-located). Mirrors linking's
-# _AUTO_BROADCAST_MAX_ROWS pattern.
-_IRI_BROADCAST_MAX_ROWS = 4_000_000
 
 
 def apply_iris(lit: DataFrame, nonlit: DataFrame, iri_map: DataFrame,
@@ -301,8 +283,8 @@ def materialize_inverses(triples: DataFrame) -> DataFrame:
                     "t.obj_is_literal"))
 
 
-def degrade_argless_ptypes(entities: DataFrame, triples: DataFrame,
-                           assume_ptypes: bool = False) -> DataFrame:
+def degrade_argless_ptypes(entities: DataFrame,
+                           triples: DataFrame) -> DataFrame:
     """A ParameterizedType whose generic resolved but NONE of whose type
     arguments did degrades to the plain generic class — the reference links
     the bare generic when ``is_all_none(parameterized_individuals)``
@@ -311,14 +293,12 @@ def degrade_argless_ptypes(entities: DataFrame, triples: DataFrame,
 
     Single pass suffices for nesting: an inner ParameterizedType is itself a
     non-literal hasArgumentType object, so its enclosing TypeArgument counts
-    as resolved regardless of the inner one's later rewrite."""
+    as resolved regardless of the inner one's later rewrite.
+
+    Callers skip it when ``entities`` holds no ParameterizedType
+    (canonicalize_stage reads that from its entity aggregate): its three
+    candidate scans run over the full triple stream."""
     ptypes = entities.filter(F.col("kind") == "ParameterizedType").select("eid")
-    if not assume_ptypes and ptypes.isEmpty():
-        # common corpus shape (no parameterized annotations at all): skip the
-        # three full-stream candidate scans below outright (canonicalize_stage
-        # answers this from its batched kind-count job and passes
-        # assume_ptypes=True when ptypes are known to exist)
-        return triples
     generic = (triples.filter(F.col("pred") == WOC + "hasGenericType")
                .select(F.col("subj").alias("eid"), F.col("obj").alias("gen")))
     targs = (triples.filter(F.col("pred") == WOC + "hasActualTypeArgument")
@@ -367,12 +347,15 @@ def prune_dangling_ptypes(entities: DataFrame, triples: DataFrame,
     orphans its nested generics, so iterate to the (shallow) nesting depth.
     ``checkpoint_dir`` swaps the loop's localCheckpoints for reliable
     parquet barriers (relational.reliable_barrier — the cluster-scale mode).
+
+    Callers skip it when ``entities`` holds no ParameterizedType
+    (canonicalize_stage reads that from its entity aggregate); called
+    anyway, its first round finds nothing to drop and it returns
+    ``triples`` unchanged.
     """
     ptypes = reliable_barrier(
         entities.filter(F.col("kind") == "ParameterizedType").select("eid"),
         checkpoint_dir, "ptypes_init")
-    if ptypes.isEmpty():
-        return triples
     # Round-6 shape: the fixpoint only ever inspects the 4 type predicates,
     # so iterate over THAT small subgraph (restricted once, barriered) and
     # accumulate the drop set; the full triple stream is anti-joined exactly
@@ -451,10 +434,15 @@ def canonicalize_stage(entities: DataFrame, all_triples: DataFrame,
     :func:`apply_library_manifest`.
 
     ``broadcast_iris``: None (default) auto-gates the IRI rewrite on the
-    iri_map row count (one count job); an explicit True/False pins the plan
-    AND skips that job — benchmarks pin False so every corpus size takes the
-    same (corpus-scale) physical plan instead of flipping strategies across
-    the broadcast threshold mid-measurement.
+    iri_map row count against ``session._IRI_BROADCAST_MAX_ROWS``; an
+    explicit True/False pins the plan — benchmarks pin False so every corpus
+    size takes the same (corpus-scale) physical plan instead of flipping
+    strategies across the broadcast threshold mid-measurement.
+
+    This is the stage's one place for plan decisions: one entity aggregate
+    decides whether the ParameterizedType degrade/prune helpers run at all
+    and which IRI-rewrite strategy applies; the helpers never probe their
+    inputs.
 
     ``entities``, ``nonlit_d`` and ``iri_map`` each feed 2-4 downstream
     consumers, so they are persist()ed — a materialization barrier like the
@@ -474,23 +462,21 @@ def canonicalize_stage(entities: DataFrame, all_triples: DataFrame,
         all_triples = apply_library_manifest(all_triples, manifest)
     entities = dedup_entities(entities).persist()
     # ONE aggregate job (which also warms the entity persist) answers both
-    # serial gates: the ParameterizedType emptiness probe (degrade/prune
-    # short-circuit) AND the entity count that drives every broadcast
-    # decision — iri_map has exactly one row per entity, so this replaces
-    # the round-5 separate iri_map.count() job outright
+    # serial gates: whether any ParameterizedType exists (degrade/prune run
+    # only then) AND the entity count that drives the broadcast decision —
+    # iri_map has exactly one row per entity
     row = entities.agg(
         F.count("*").alias("n"),
         F.count(F.when(F.col("kind") == "ParameterizedType", True))
         .alias("np")).collect()[0]
     n_entities, n_ptypes = row["n"], row["np"]
     if n_ptypes:
-        degraded = degrade_argless_ptypes(entities, all_triples,
-                                          assume_ptypes=True)
+        degraded = degrade_argless_ptypes(entities, all_triples)
         pruned = prune_dangling_ptypes(entities, degraded)
     else:
         pruned = all_triples
     if broadcast_iris is None:
-        broadcast_iris = n_entities <= _IRI_BROADCAST_MAX_ROWS
+        broadcast_iris = n_entities <= session._IRI_BROADCAST_MAX_ROWS
     # dedup BEFORE IRI hashing: (a) the IRI aggregation then sees each
     # neighbor name / literal digest once (duplicate emissions would perturb
     # the hash input), (b) the IRI-rewrite joins and the inverse union

@@ -189,17 +189,16 @@ def _mro_and_contributions(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def mro_and_contributions(classes: DataFrame, extends_edges: DataFrame,
-                          ctorinfo: DataFrame,
-                          known_empty_edges: bool | None = None) -> DataFrame:
+                          ctorinfo: DataFrame, no_edges: bool) -> DataFrame:
     """-> (root, out['mro'|'b'|'c'], cls, rank).
 
     ``extends_edges``: (src, dst, pos) resolved direct extends edges with the
     base position from the class statement. Classes with no resolved bases
     take the expression-only fast path (no shuffle, no UDF) — at corpus scale
     they dominate, so the grouped UDF only ever sees real hierarchies.
-    ``known_empty_edges=True`` lets a caller that already proved the edge set
-    empty (link_stage's batched kind-count job) skip the probe scan; None
-    probes as before.
+    ``no_edges``: the caller has proved the edge set empty (link_stage: no
+    base mentions at all), so only the fast path is built. False is always
+    correct; an empty edge set then just runs an empty subgraph path.
     """
     cls_ids = classes.select(F.col("eid"), F.col("name"))
     ctor = ctorinfo.select(F.col("subj").alias("eid"), F.col("raw").alias("info"))
@@ -216,8 +215,7 @@ def mro_and_contributions(classes: DataFrame, extends_edges: DataFrame,
                 F.col("eid").alias("root"), F.lit("c").alias("out"),
                 F.col("eid").alias("cls"), F.lit(1.0).alias("rank"))))
 
-    if known_empty_edges or (known_empty_edges is None
-                             and extends_edges.isEmpty()):
+    if no_edges:
         return fast
 
     closure = transitive_closure(extends_edges.select("src", "dst"),

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codeontologypython_spark import session
 from codeontologypython_spark.operators.relational import (
     reliable_barrier,
     salted_join,
@@ -71,9 +72,7 @@ def build_symbol_table(entities: DataFrame) -> DataFrame:
 
 def chase_aliases(symbol_table: DataFrame, mentions: DataFrame,
                   max_iterations: int = 10,
-                  checkpoint_dir: str | None = None,
-                  skip_empty_probe: bool = False,
-                  base_is_materialized: bool = False) -> DataFrame:
+                  checkpoint_dir: str | None = None) -> DataFrame:
     """L5: module-level ``Alias = Target`` assignments and import BINDINGS
     (``from X import y``, ``import x.y as z``) add symbol-table rows mapping
     the bound FQN to the target's entity, flagged ``via_alias``. A module-
@@ -86,23 +85,17 @@ def chase_aliases(symbol_table: DataFrame, mentions: DataFrame,
     the loop's localCheckpoints for reliable parquet barriers
     (relational.reliable_barrier — the cluster-scale mode).
 
-    ``skip_empty_probe``: the caller already knows alias mentions exist
-    (e.g. from link_stage's single batched kind-count job) — skip the
-    per-call emptiness scan. ``base_is_materialized``: the caller passes an
-    already-checkpointed symbol table — skip the redundant barrier."""
-    alias_m = mentions.filter(F.col("kind") == "alias")
-    if not skip_empty_probe and alias_m.isEmpty():
-        return symbol_table
-    cands = alias_m.select(
+    Precondition: ``symbol_table`` is already materialized (a checkpoint or
+    a persisted table) — every round joins it twice (hit + anti), so an
+    unmaterialized base would re-run its derivation per round per join.
+    Callers skip the chase when there are no alias mentions (link_stage
+    reads that from its kind counts); called anyway, it returns the table
+    unchanged after one empty round."""
+    cands = mentions.filter(F.col("kind") == "alias").select(
         F.col("subj").alias("alias_fqn"),
         F.posexplode("candidates").alias("priority", "cand_fqn"))
     cands = reliable_barrier(cands, checkpoint_dir, "alias_cands")
-    # materialize the base table once: every round joins against the
-    # accumulated symtab twice (hit + anti), and without this the base
-    # derivation (an entity-table scan) re-executes per round per join
-    symtab = (symbol_table if base_is_materialized
-              else reliable_barrier(symbol_table, checkpoint_dir,
-                                    "alias_symtab"))
+    symtab = symbol_table
     for i in range(max_iterations):
         # best candidate per alias via map-side-combining min(struct)
         # (pitfall 5): ordering (priority, kind rank, via_alias, eid) is all-
@@ -241,46 +234,31 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
         F.col("best.raw").alias("raw"))
 
 
-def expand_wildcards(mentions: DataFrame, entities: DataFrame,
-                     symbol_table: DataFrame | None = None,
-                     max_rounds: int = 5,
-                     known_empty: bool | None = None) -> DataFrame:
+def expand_wildcards(mentions: DataFrame, symbol_table: DataFrame,
+                     max_rounds: int = 5) -> DataFrame:
     """``from m import *`` -> imports edges to every public top-level name
     of m — own definitions AND names m itself imported (astroid's
     wildcard_import_names includes import bindings), following wildcard
     re-export chains to a bounded fixpoint (tracking.py:234-255 + L2
     fixpoint). Exports derive from the (chased) symbol table so alias and
-    from-import binding rows export too; falls back to entity rows when no
-    symbol table is passed."""
+    from-import binding rows export too.
+
+    Callers skip it when there are no wildcard mentions (link_stage reads
+    that from its kind counts); called anyway, it returns no rows."""
     wild = mentions.filter(F.col("kind") == "wildcard").select(
         "repo", "commit", "subj", "pred",
         F.element_at("candidates", 1).alias("module_fqn"))
-    # known_empty: link_stage's batched kind-count job already answered the
-    # emptiness question — skip the per-call probe scan
-    if known_empty if known_empty is not None else wild.isEmpty():
-        return wild.select("repo", "commit", "subj", "pred",
-                           F.lit("").alias("obj"),
-                           F.lit(False).alias("obj_is_literal")).limit(0)
-
-    if symbol_table is not None:
-        # (module_fqn, name) from the fqn's last dot split; only rows whose
-        # prefix IS a wildcard-imported module survive the join below, so
-        # non-module prefixes (nested classes) are harmless
-        module_level = (symbol_table
-                        .filter(F.col("fqn").contains("."))
-                        .select(
-                            F.regexp_extract("fqn", r"^(.*)\.[^.]+$", 1)
-                            .alias("module_fqn"),
-                            F.regexp_extract("fqn", r"([^.]+)$", 1)
-                            .alias("name"),
-                            "eid", "fqn"))
-    else:
-        ents = entities.withColumn("module_fqn", module_fqn_col(F.col("path")))
-        module_level = (ents.filter(
-            F.col("kind").isin("Class", "Function", "GlobalVariable")
-            & F.col("fqn").isNotNull()
-            & (F.col("fqn") == F.concat_ws(".", "module_fqn", "name")))
-            .select("module_fqn", "name", "eid", "fqn"))
+    # (module_fqn, name) from the fqn's last dot split; only rows whose
+    # prefix IS a wildcard-imported module survive the join below, so
+    # non-module prefixes (nested classes) are harmless
+    module_level = (symbol_table
+                    .filter(F.col("fqn").contains("."))
+                    .select(
+                        F.regexp_extract("fqn", r"^(.*)\.[^.]+$", 1)
+                        .alias("module_fqn"),
+                        F.regexp_extract("fqn", r"([^.]+)$", 1)
+                        .alias("name"),
+                        "eid", "fqn"))
     module_level = module_level.join(
         F.broadcast(wild.select("module_fqn").distinct()
                     .unionByName(
@@ -392,22 +370,23 @@ def resolve_overrides(entities: DataFrame, triples: DataFrame,
         F.lit(False).alias("obj_is_literal"))
 
 
-# above this many symbol-table rows the broadcast stops paying (≈ the
-# autoBroadcastJoinThreshold at ~100 B/row) and hub-symbol skew starts to
-# matter: switch to the salted shuffle join (north_star: "broadcast of the
-# project-level symbol table AND salted hash joins to defuse skew")
-_AUTO_BROADCAST_MAX_ROWS = 2_000_000
-_AUTO_SALT = 16
-
-
 def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
                broadcast_symtab: bool | str = "auto", salt: int = 0):
     """Full Stage 2.
 
     ``broadcast_symtab="auto"`` (default) broadcasts the symbol table when it
     is small and falls back to the salted shuffle join beyond
-    ``_AUTO_BROADCAST_MAX_ROWS`` — at corpus scale (10^8+ fqns) the salted
-    path IS the default; the sandbox fixture corpora always broadcast.
+    ``session._AUTO_BROADCAST_MAX_ROWS`` (every broadcast size gate lives in
+    ``session.py``) — at corpus scale (10^8+ fqns) the salted path IS the
+    default; the sandbox fixture corpora always broadcast (north_star:
+    "broadcast of the project-level symbol table AND salted hash joins to
+    defuse skew").
+
+    This is the stage's one place for plan decisions: a single kind-count
+    job over the mentions decides which helpers run at all (the alias chase,
+    the wildcard expansion, the MRO subgraph path), and one symbol-table
+    aggregate decides broadcast vs salted and whether an alias map can
+    exist. The helpers themselves never probe their inputs.
 
     Returns ``(resolved, extra_entities, base_triples)``:
     - ``resolved``: mention-resolution + override + wildcard + Field triples
@@ -421,10 +400,9 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
         mro_and_contributions,
     )
 
-    # ONE batched probe job replaces the per-helper emptiness scans
-    # (alias/wildcard/extends probes were each a separate full mention-stream
-    # job — a fixed serial cost that dominated small-corpus link walls): every
-    # downstream gate reads this dict instead of running its own count
+    # ONE batched probe job answers every emptiness question of the stage
+    # (a per-helper probe is a separate full mention-stream job — a fixed
+    # serial cost that dominates small-corpus link walls)
     kind_counts = {r["kind"]: r["count"]
                    for r in mentions.groupBy("kind").count().collect()}
     # the symbol table feeds EVERY downstream consumer (the via-alias count,
@@ -434,16 +412,15 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
     # the dominant Stage-2 cost on dense corpora)
     symtab = build_symbol_table(entities).localCheckpoint(eager=False)
     if kind_counts.get("alias", 0):
-        symtab = chase_aliases(symtab, mentions, skip_empty_probe=True,
-                               base_is_materialized=True)
+        symtab = chase_aliases(symtab, mentions)
     # one aggregate answers BOTH serial gates: total rows (broadcast-vs-salted
     # auto) and via-alias rows (whether an alias map can exist at all)
     via_counts = {bool(r["via_alias"]): r["count"]
                   for r in symtab.groupBy("via_alias").count().collect()}
     if broadcast_symtab == "auto":
         n_sym = sum(via_counts.values())
-        if n_sym > _AUTO_BROADCAST_MAX_ROWS:
-            broadcast_symtab, salt = False, (salt or _AUTO_SALT)
+        if n_sym > session._AUTO_BROADCAST_MAX_ROWS:
+            broadcast_symtab, salt = False, (salt or session._AUTO_SALT)
         else:
             broadcast_symtab = True
     # alias map for the L3 suffix round: the chased alias/binding rows,
@@ -466,8 +443,6 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
                                 broadcast_symtab=broadcast_symtab,
                                 salt=salt,
                                 alias_map=alias_map).localCheckpoint(eager=False)
-    wild = expand_wildcards(mentions, entities, symtab,
-                            known_empty=(kind_counts.get("wildcard", 0) == 0))
 
     classes = entities.filter(F.col("kind") == "Class")
     contrib = mro_and_contributions(
@@ -475,8 +450,7 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
         mentions.filter(F.col("kind") == "ctorinfo"),
         # extends edges only arise from resolved 'base' mentions: zero base
         # mentions proves the edge set empty without probing it
-        known_empty_edges=(True if kind_counts.get("base", 0) == 0
-                           else None)).localCheckpoint(eager=False)
+        no_edges=not kind_counts.get("base", 0)).localCheckpoint(eager=False)
     mro = contrib.filter(F.col("out") == "mro")
     overrides = resolve_overrides(entities, triples, mro)
 
@@ -487,10 +461,10 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
         classes, mentions.filter(F.col("kind") == "fieldfact"),
         contrib, ffid_types)
 
-    out = (resolved.filter(~is_fact).drop("raw")
-           .unionByName(wild)
-           .unionByName(overrides)
-           .unionByName(f_triples))
+    out = resolved.filter(~is_fact).drop("raw")
+    if kind_counts.get("wildcard", 0):
+        out = out.unionByName(expand_wildcards(mentions, symtab))
+    out = out.unionByName(overrides).unionByName(f_triples)
     return out, f_entities, base_triples(triples)
 
 

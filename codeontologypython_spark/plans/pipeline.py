@@ -34,7 +34,10 @@ from codeontologypython_spark.operators.extract import (
 from codeontologypython_spark.operators.linking import base_triples, link_stage
 from codeontologypython_spark.session import cache_scope
 from codeontologypython_spark.sources.ntriples import write_ntriples
-from codeontologypython_spark.sources.tables import write_triple_table
+from codeontologypython_spark.sources.tables import (
+    path_exists,
+    write_triple_table,
+)
 
 
 @dataclass
@@ -129,8 +132,8 @@ def run_pipeline(
         # partial repo data in the dir — lineage rows are written only after
         # the whole stage write succeeded, making them the safe resume marker
         done = None
-        if (resume and _exists(spark, lineage_path)
-                and _exists(spark, s1_path)):
+        if (resume and path_exists(spark, lineage_path)
+                and path_exists(spark, s1_path)):
             done = (spark.read.parquet(lineage_path)
                     .filter((F.col("stage") == "extract")
                             & (F.col("status") == "ok"))
@@ -176,7 +179,7 @@ def run_pipeline(
             # nothing new (its inputs are then byte-identical to the prior
             # run)
             if (resume and not stage1_fresh
-                    and all(_exists(spark, p) for p in paths)
+                    and all(path_exists(spark, p) for p in paths)
                     and not (spark.read.parquet(lineage_path)
                              .filter((F.col("stage") == stage)
                                      & (F.col("status") == "ok")).isEmpty())):
@@ -202,10 +205,3 @@ def run_pipeline(
         n = final.count()
     return PipelineResult(triples_path, nt_path if write_nt else None,
                           lineage_path, n, time.time() - t0)
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    sc = spark.sparkContext
-    hconf = sc._jsc.hadoopConfiguration()
-    p = sc._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(hconf).exists(p)

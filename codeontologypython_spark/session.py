@@ -12,6 +12,23 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Broadcast-vs-shuffle size gates, the only place they are set. The row gates
+# below and the byte threshold Spark applies on its own size the same
+# broadcast budget: a side under them is shipped whole to every task.
+_BROADCAST_JOIN_THRESHOLD_BYTES = 64 * 1024 * 1024
+# symbol-table rows (~100 B/row ≈ the byte threshold): above this the
+# resolution join in linking.link_stage switches from broadcast to a salted
+# shuffle join with _AUTO_SALT buckets, which also defuses hub-symbol skew
+_AUTO_BROADCAST_MAX_ROWS = 2_000_000
+_AUTO_SALT = 16
+# iri_map rows (~130 B/row -> ~500 MB hash relation): above this
+# canonicalize.canonicalize_stage rewrites IRIs with shuffle joins
+_IRI_BROADCAST_MAX_ROWS = 4_000_000
+# duplicated literal keys (~120 B/key): above this
+# canonicalize.dedup_literal_triples falls back to the classic byte-shuffle
+# dedup (a commit-dense corpus where most files exist at many commits)
+_LIT_DUP_BROADCAST_MAX = 2_000_000
+
 
 def _default_driver_memory() -> str:
     """About 40% of physical memory (MemTotal), in whole GiB: the local-mode
@@ -62,7 +79,8 @@ def get_spark(
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM")
                 or _default_driver_memory())
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.autoBroadcastJoinThreshold",
+                str(_BROADCAST_JOIN_THRESHOLD_BYTES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

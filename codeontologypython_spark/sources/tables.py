@@ -44,6 +44,15 @@ def write_triple_table(triples: DataFrame, path: str,
      .save(path))
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists on its (Hadoop) filesystem — the first-run
+    test for tables that later runs append to."""
+    sc = spark.sparkContext
+    hconf = sc._jsc.hadoopConfiguration()
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(hconf).exists(p)
+
+
 def read_triple_table(spark: SparkSession, path: str,
                       fmt: str = "parquet") -> DataFrame:
     return spark.read.format(fmt).load(path)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from codeontologypython_spark.operators.extract import extract_stage
 from codeontologypython_spark.schemas import SOURCE_FILES
+from codeontologypython_spark.sources.tables import path_exists
 
 
 def start_incremental_extract(
@@ -45,11 +46,14 @@ def start_incremental_extract(
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         s = batch_df.sparkSession
-        try:
+        # only a missing lineage table means "first batch": an unreadable
+        # one must fail the batch, or every row would be re-extracted and
+        # re-appended (breaking exactly-once)
+        if path_exists(s, lineage_path):
             processed = s.read.parquet(lineage_path)
             todo = batch_df.join(processed, ["repo", "path", "commit"],
                                  "left_anti")
-        except Exception:  # first batch: no lineage yet
+        else:
             todo = batch_df
         if todo.isEmpty():
             return

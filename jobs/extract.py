@@ -27,7 +27,8 @@ def main(argv=None):
     p.add_argument("--salt", type=int, default=0,
                    help="salt factor for the symbol-table join "
                         "(0 = auto: broadcast when small, salted beyond "
-                        "2M symbols)")
+                        "session._AUTO_BROADCAST_MAX_ROWS symbols; every "
+                        "broadcast size gate lives in session.py)")
     p.add_argument("--manifest", default=None,
                    help="parquet dir with (repo, library, is_by_project): "
                         "libraries marked is_by_project=false lose their "

@@ -106,7 +106,7 @@ def test_exact_mro_rank(linked, extracted):
     classes = e["entities"].filter(F.col("kind") == "Class")
     contrib = flds.mro_and_contributions(
         classes, extends_edges(resolved),
-        e["mentions"].filter(F.col("kind") == "ctorinfo"))
+        e["mentions"].filter(F.col("kind") == "ctorinfo"), no_edges=False)
     cls = {r["fqn"]: r["eid"] for r in classes.collect() if r["fqn"]}
     mro = {(r["root"], r["cls"]): r["rank"] for r in
            contrib.filter(F.col("out") == "mro").collect()}
@@ -282,24 +282,73 @@ def test_extension_stub_resolves_import(spark):
                         & (F.col("kind") == "Function")).isEmpty()
 
 
-def test_salted_link_stage_equals_broadcast(extracted):
+def test_salted_link_stage_equals_broadcast(extracted, monkeypatch):
     """The corpus-scale salted shuffle join must produce EXACTLY the triples
     of the broadcast path (salting is a physical strategy, not a semantic
     one) — end-to-end over the full fixture corpus, fields and overrides
-    included."""
+    included. Both ways to reach it are checked: pinned flags, and
+    ``broadcast_symtab="auto"`` above the symbol-table row gate (lowered to
+    0 here), which must flip to the salted join with ``_AUTO_SALT``."""
+    from codeontologypython_spark import session
     e = extracted
     b_res, b_ents, b_base = linking.link_stage(
         e["entities"], e["triples"], e["mentions"], broadcast_symtab=True)
-    s_res, s_ents, s_base = linking.link_stage(
-        e["entities"], e["triples"], e["mentions"],
-        broadcast_symtab=False, salt=8)
+    salts = []
+    real_salted_join = linking.salted_join
+
+    def spy(*args, **kwargs):
+        salts.append(kwargs["salt"])
+        return real_salted_join(*args, **kwargs)
+
+    monkeypatch.setattr(linking, "salted_join", spy)
+    monkeypatch.setattr(session, "_AUTO_BROADCAST_MAX_ROWS", 0)
     cols = ["subj", "pred", "obj", "obj_is_literal"]
-    diff = (b_res.select(cols).exceptAll(s_res.select(cols)).count()
-            + s_res.select(cols).exceptAll(b_res.select(cols)).count())
-    assert diff == 0
-    ediff = (b_ents.select("eid").exceptAll(s_ents.select("eid")).count()
-             + s_ents.select("eid").exceptAll(b_ents.select("eid")).count())
-    assert ediff == 0
+    for flags, want_salt in ((dict(broadcast_symtab=False, salt=8), 8),
+                             (dict(broadcast_symtab="auto"),
+                              session._AUTO_SALT)):
+        salts.clear()
+        s_res, s_ents, s_base = linking.link_stage(
+            e["entities"], e["triples"], e["mentions"], **flags)
+        assert salts and set(salts) == {want_salt}, flags
+        diff = (b_res.select(cols).exceptAll(s_res.select(cols)).count()
+                + s_res.select(cols).exceptAll(b_res.select(cols)).count())
+        assert diff == 0, flags
+        ediff = (b_ents.select("eid").exceptAll(s_ents.select("eid")).count()
+                 + s_ents.select("eid").exceptAll(b_ents.select("eid"))
+                 .count())
+        assert ediff == 0, flags
+
+
+def test_link_stage_without_alias_wildcard_or_base_mentions(spark):
+    """A corpus with no alias, wildcard or base mentions: link_stage skips
+    the alias chase, the wildcard expansion and the MRO subgraph path on its
+    kind counts alone. It must still link, emit no extends/overrides, and
+    materialize the class's own-body Field individuals."""
+    from codeontologypython_spark.operators.extract import (
+        extract_stage, split_extraction)
+    src = spark.createDataFrame(
+        [("r", "plain.py", "c0", "python",
+          "class Box:\n"
+          "    size = 3\n"
+          "    def grow(self, n):\n"
+          "        return n + self.size\n"
+          "def helper(x):\n"
+          "    return Box().grow(x)\n")],
+        ["repo", "path", "commit", "lang", "content"])
+    e, t, m, _ = split_extraction(extract_stage(src).localCheckpoint())
+    kinds = {r["kind"] for r in m.select("kind").distinct().collect()}
+    assert not kinds & {"alias", "wildcard", "base"}
+    resolved, f_ents, _ = linking.link_stage(e, t, m)
+    preds = {r["pred"] for r in resolved.select("pred").distinct().collect()}
+    assert WOC + "extends" not in preds
+    assert WOC + "overrides" not in preds
+    box = e.filter(F.col("fqn") == "plain.Box").collect()[0]["eid"]
+    fields = {(r["name"], r["fqn"]) for r in
+              f_ents.filter(F.col("kind") == "Field").collect()}
+    assert fields == {("size", "plain.Box.size")}
+    has_field = resolved.filter((F.col("pred") == WOC + "hasField")
+                                & (F.col("subj") == box))
+    assert has_field.count() == 1
 
 
 def test_resolve_mentions_stable_under_repartition(extracted):

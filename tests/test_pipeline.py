@@ -12,6 +12,15 @@ from codeontologypython_spark import woc
 WOC = woc.WOC
 
 
+def _lit_groups(triples):
+    """compute_iris's own-literal digest input, as canonicalize_stage
+    builds it."""
+    from codeontologypython_spark.operators.canonicalize import (
+        dedup_literal_triples,
+    )
+    return dedup_literal_triples(triples.filter(F.col("obj_is_literal")))[1]
+
+
 def test_iri_uniqueness_audit(extracted, final_triples):
     from codeontologypython_spark.operators.canonicalize import (
         audit_iri_uniqueness,
@@ -19,7 +28,8 @@ def test_iri_uniqueness_audit(extracted, final_triples):
         dedup_entities,
     )
     iris = compute_iris(dedup_entities(extracted["entities"]),
-                        extracted["triples"])
+                        extracted["triples"],
+                        _lit_groups(extracted["triples"]))
     assert audit_iri_uniqueness(iris).isEmpty()
 
 
@@ -31,8 +41,9 @@ def test_iri_stability_same_input_same_iris(spark, source_files, extracted):
         split_extraction,
     )
     e2, t2, _, _ = split_extraction(extract_stage(source_files))
-    iris1 = compute_iris(extracted["entities"], extracted["triples"])
-    iris2 = compute_iris(e2, t2)
+    iris1 = compute_iris(extracted["entities"], extracted["triples"],
+                         _lit_groups(extracted["triples"]))
+    iris2 = compute_iris(e2, t2, _lit_groups(t2))
     assert iris1.exceptAll(iris2).isEmpty()
     assert iris2.exceptAll(iris1).isEmpty()
 
@@ -100,11 +111,12 @@ def test_apply_iris_shuffle_path_equivalence(spark, extracted, final_triples,
     """The corpus-scale shuffle path of the IRI rewrite (taken beyond
     _IRI_BROADCAST_MAX_ROWS entities, never by the small fixture corpus)
     must serialize the exact same graph as the broadcast path."""
+    from codeontologypython_spark import session
     from codeontologypython_spark.corpus.fixtures import project_manifest_df
     from codeontologypython_spark.operators import canonicalize as C
     from codeontologypython_spark.operators.linking import link_stage
     from codeontologypython_spark.sources.ntriples import to_ntriples
-    monkeypatch.setattr(C, "_IRI_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(session, "_IRI_BROADCAST_MAX_ROWS", 0)
     e = extracted
     resolved, xe, base = link_stage(e["entities"], e["triples"],
                                     e["mentions"])
@@ -116,12 +128,15 @@ def test_apply_iris_shuffle_path_equivalence(spark, extracted, final_triples,
     assert a == b
 
 
-def test_literal_digest_dedup_equivalence(spark):
+def test_literal_digest_dedup_equivalence(spark, monkeypatch):
     """dedup_literal_triples (digest-keyed, no byte shuffle) must produce
     exactly the classic min-commit dedup's rows on every duplicate shape:
     multi-commit duplicates, exact duplicate rows, and same-(subj,pred)
     different-obj rows (both kept). The digest-group table must carry one
-    row per surviving triple (the own-literal IRI hash input contract)."""
+    row per surviving triple (the own-literal IRI hash input contract).
+    Checked on both sides of the dup-key gate: the default (broadcast
+    dup-key path) and the gate at 0 (classic byte-shuffle fallback)."""
+    from codeontologypython_spark import session
     from codeontologypython_spark.operators.canonicalize import (
         dedup_literal_triples,
         dedup_triples,
@@ -142,12 +157,15 @@ def test_literal_digest_dedup_equivalence(spark):
     schema = ("repo string, commit string, subj string, pred string, "
               "obj string, obj_is_literal boolean")
     lit = spark.createDataFrame(rows, schema)
-    got, groups = dedup_literal_triples(lit)
     want = dedup_triples(lit)
     as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
-    assert as_set(got) == as_set(want)
-    assert ("r", "c1", "e2", "p:src", "def f(): pass", True) in as_set(got)
-    assert groups.count() == got.count() == 5
+    for gate in (session._LIT_DUP_BROADCAST_MAX, 0):
+        monkeypatch.setattr(session, "_LIT_DUP_BROADCAST_MAX", gate)
+        got, groups = dedup_literal_triples(lit)
+        assert as_set(got) == as_set(want), gate
+        assert ("r", "c1", "e2", "p:src", "def f(): pass", True) \
+            in as_set(got)
+        assert groups.count() == got.count() == 5, gate
 
 
 def test_library_manifest_classification(final_triples):

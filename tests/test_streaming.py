@@ -3,6 +3,8 @@ exactly-once per (repo, path, commit), re-delivery is a no-op."""
 
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from codeontologypython_spark.corpus.fixtures import FIXTURE_REPOS
@@ -93,3 +95,25 @@ def test_incremental_supersede_changed_file(spark, tmp_path):
     # exactly one commit survives
     commits = {r["commit"] for r in final.select("commit").distinct().collect()}
     assert commits == {"commit-bbb"}
+
+
+def test_unreadable_lineage_fails_the_drain(spark, tmp_path):
+    """Only a MISSING lineage table means "first batch". A lineage table
+    that exists but cannot be read must fail the drain: treating it as
+    first-batch would re-extract and re-append every row (breaking
+    exactly-once)."""
+    src_dir = str(tmp_path / "incoming")
+    workdir = str(tmp_path / "wd")
+    os.makedirs(src_dir)
+    spark.createDataFrame(_rows("fixtures/proj_basic"), SOURCE_FILES) \
+        .write.mode("append").parquet(src_dir)
+    lineage = os.path.join(workdir, "stream_lineage")
+    os.makedirs(lineage)
+    with open(os.path.join(lineage, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+
+    q = start_incremental_extract(spark, src_dir, workdir)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert q.exception() is not None
+    assert not os.path.exists(os.path.join(workdir, "stream_extract"))

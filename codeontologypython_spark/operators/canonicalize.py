@@ -20,7 +20,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codeontologypython_spark import session, woc
-from codeontologypython_spark.operators.relational import reliable_barrier
+from codeontologypython_spark.operators.relational import (
+    bounded_fixpoint,
+    reliable_barrier,
+)
 
 WOC = woc.WOC
 
@@ -283,6 +286,17 @@ def materialize_inverses(triples: DataFrame) -> DataFrame:
                     "t.obj_is_literal"))
 
 
+def _without(df: DataFrame, drop: DataFrame) -> DataFrame:
+    """``df`` minus every row whose subj or obj is in ``drop`` (eid). The
+    drop set is tiny (a subset of the type-annotation entities): broadcast
+    it so the anti-joins are map-side."""
+    return (df
+            .join(F.broadcast(drop.withColumnRenamed("eid", "subj")),
+                  "subj", "left_anti")
+            .join(F.broadcast(drop.withColumnRenamed("eid", "obj")),
+                  "obj", "left_anti"))
+
+
 def degrade_argless_ptypes(entities: DataFrame,
                            triples: DataFrame) -> DataFrame:
     """A ParameterizedType whose generic resolved but NONE of whose type
@@ -330,11 +344,10 @@ def degrade_argless_ptypes(entities: DataFrame,
                                     "left_semi")
                          .select(F.col("targ").alias("eid")))
             .distinct())
-    return (rewritten
-            .join(F.broadcast(drop.withColumnRenamed("eid", "subj")),
-                  "subj", "left_anti")
-            .join(F.broadcast(drop.withColumnRenamed("eid", "obj")),
-                  "obj", "left_anti"))
+    return _without(rewritten, drop)
+
+
+_PTYPE_PRUNE_MAX_ROUNDS = 6
 
 
 def prune_dangling_ptypes(entities: DataFrame, triples: DataFrame,
@@ -343,10 +356,10 @@ def prune_dangling_ptypes(entities: DataFrame, triples: DataFrame,
     (reference generic-individual-None rule, extractor.py:952-961) or
     (b) have no inbound hasType/hasArgumentType reference left — e.g. the
     annotation subtree of a LOSING field fact after the Stage-2 fold — plus
-    their TypeArgument subtrees. Bounded loop: dropping a parent generic
-    orphans its nested generics, so iterate to the (shallow) nesting depth.
-    ``checkpoint_dir`` swaps the loop's localCheckpoints for reliable
-    parquet barriers (relational.reliable_barrier — the cluster-scale mode).
+    their TypeArgument subtrees. Dropping a parent generic orphans its
+    nested generics, so the drop set grows by
+    :func:`relational.bounded_fixpoint` to the (shallow) nesting depth
+    (``_PTYPE_PRUNE_MAX_ROUNDS``; barrier tags ``ptypes_drop_<i>``).
 
     Callers skip it when ``entities`` holds no ParameterizedType
     (canonicalize_stage reads that from its entity aggregate); called
@@ -356,64 +369,42 @@ def prune_dangling_ptypes(entities: DataFrame, triples: DataFrame,
     ptypes = reliable_barrier(
         entities.filter(F.col("kind") == "ParameterizedType").select("eid"),
         checkpoint_dir, "ptypes_init")
-    # Round-6 shape: the fixpoint only ever inspects the 4 type predicates,
-    # so iterate over THAT small subgraph (restricted once, barriered) and
-    # accumulate the drop set; the full triple stream is anti-joined exactly
-    # ONCE at the end. The round-5 loop re-barriered the whole multi-GB
-    # stream every round — up to 6 full-stream materializations (measured as
-    # the bulk of Stage-3 build time on the realworld corpus).
+    # rounds read only the 4-predicate subgraph (restricted once); the full
+    # triple stream is anti-joined exactly ONCE at the end (pitfall 12)
     type_preds = (WOC + "hasGenericType", WOC + "hasActualTypeArgument",
                   WOC + "hasType", WOC + "hasArgumentType")
     tp = reliable_barrier(
         triples.filter(F.col("pred").isin(*type_preds))
         .select("subj", "pred", "obj", "obj_is_literal"),
         checkpoint_dir, "ptypes_subgraph")
-    dropped = None
-    for i in range(6):
-        resolved_generic = (tp
+
+    def step(_delta, dropped):
+        live_tp = _without(tp, dropped)
+        live = ptypes.join(F.broadcast(dropped), "eid", "left_anti")
+        resolved_generic = (live_tp
                             .filter(F.col("pred") == WOC + "hasGenericType")
-                            .select(F.col("subj").alias("eid")).distinct())
-        inbound = (tp
+                            .select(F.col("subj").alias("eid")))
+        inbound = (live_tp
                    .filter(F.col("pred").isin(WOC + "hasType",
                                               WOC + "hasArgumentType")
                            & ~F.col("obj_is_literal"))
-                   .select(F.col("obj").alias("eid")).distinct())
-        bad = reliable_barrier(
-            ptypes.join(resolved_generic, "eid", "left_anti")
-            .unionByName(ptypes.join(inbound, "eid", "left_anti"))
-            .distinct(), checkpoint_dir, f"ptypes_bad_{i}")
-        if bad.isEmpty():
-            break
-        targs = (tp.filter(F.col("pred") == WOC + "hasActualTypeArgument")
-                 .join(F.broadcast(bad.withColumnRenamed("eid", "subj")), "subj")
-                 .select(F.col("obj").alias("eid")))
-        # the drop set is tiny (a subset of the type-annotation entities):
-        # broadcast it so the anti-joins are map-side
-        drop = reliable_barrier(bad.unionByName(targs).distinct(),
-                                checkpoint_dir, f"ptypes_drop_{i}")
-        dropped = drop if dropped is None else dropped.unionByName(drop)
-        tp = reliable_barrier(
-            tp
-            .join(F.broadcast(drop.withColumnRenamed("eid", "subj")),
-                  "subj", "left_anti")
-            .join(F.broadcast(drop.withColumnRenamed("eid", "obj")),
-                  "obj", "left_anti"), checkpoint_dir, f"ptypes_sub_{i}")
-        ptypes = reliable_barrier(ptypes.join(drop, "eid", "left_anti"),
-                                  checkpoint_dir, f"ptypes_left_{i}")
-        if ptypes.isEmpty():
-            break
-    if dropped is None:
-        return triples
-    # per-round drop sets are disjoint (each round's bad/targs were removed
-    # from ptypes/tp before the next), so sequential per-round anti-joins
-    # equal one anti-join with their union
-    dropped = reliable_barrier(dropped.distinct(), checkpoint_dir,
-                               "ptypes_drop_all")
-    return (triples
-            .join(F.broadcast(dropped.withColumnRenamed("eid", "subj")),
-                  "subj", "left_anti")
-            .join(F.broadcast(dropped.withColumnRenamed("eid", "obj")),
-                  "obj", "left_anti"))
+                   .select(F.col("obj").alias("eid")))
+        arg_of = (live_tp
+                  .filter(F.col("pred") == WOC + "hasActualTypeArgument")
+                  .select(F.col("subj").alias("eid"),
+                          F.col("obj").alias("targ")))
+        bad = (live.join(resolved_generic, "eid", "left_anti")
+               .unionByName(live.join(inbound, "eid", "left_anti")))
+        # a bad ptype drops together with its TypeArguments
+        return (bad.join(arg_of, "eid", "left")
+                .select(F.explode(F.array("eid", "targ")).alias("eid"))
+                .filter(F.col("eid").isNotNull()))
+
+    # the empty seed (limit 0) folds the round-0 anti-joins away at planning
+    dropped, rounds = bounded_fixpoint(
+        ptypes.limit(0), step, ["eid"], _PTYPE_PRUNE_MAX_ROUNDS,
+        "ptypes_drop", checkpoint_dir)
+    return _without(triples, dropped) if rounds else triples
 
 
 def audit_iri_uniqueness(iri_map: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from codeontologypython_spark.operators.linking import module_fqn_col
+from codeontologypython_spark.operators.relational import bounded_fixpoint
 
 _IMPORTS_SCHEMA = T.StructType([
     T.StructField("repo", T.StringType(), False),
@@ -64,19 +65,20 @@ def _imports_only(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows, columns=["repo", "path", "target_fqn"])
 
 
-def select_import_closure(src_df: DataFrame, root_repos: list[str],
-                          max_rounds: int = 20) -> DataFrame:
+_IMPORT_MAX_ROUNDS = 20
+
+
+def select_import_closure(src_df: DataFrame, root_repos: list[str]) -> DataFrame:
     """Return the subset of ``src_df`` in the import closure of the root
-    repos' files. Each round: imports-of-frontier ⋈ module catalog ⟶
-    anti-join vs selected ⟶ new frontier (parser.py:91-123 as a DataFrame
-    loop; 3-5 rounds in practice)."""
+    repos' files: a :func:`relational.bounded_fixpoint` over (repo, path)
+    (``_IMPORT_MAX_ROUNDS``) whose round is imports-of-frontier ⋈ module
+    catalog (parser.py:91-123 as a DataFrame loop; 3-5 rounds in
+    practice)."""
     files = src_df.filter(F.col("lang") == "python")
     catalog = (files.select("repo", "path")
                .withColumn("module_fqn", module_fqn_col(F.col("path"))))
 
-    selected = files.filter(F.col("repo").isin(root_repos)).select("repo", "path")
-    frontier = selected
-    for _ in range(max_rounds):
+    def step(frontier, _selected):
         frontier_files = files.join(frontier, ["repo", "path"], "left_semi")
         imports = frontier_files.mapInPandas(_imports_only, schema=_IMPORTS_SCHEMA)
         targets = (imports
@@ -84,15 +86,11 @@ def select_import_closure(src_df: DataFrame, root_repos: list[str],
                    .union(imports.select(
                        F.regexp_replace("target_fqn", "\\.[^.]+$", "")))
                    .distinct())
-        hit = (catalog.join(targets,
-                            catalog["module_fqn"] == targets["target_fqn"])
-               .select("repo", "path"))
-        # per-round materialization: without it the selected/frontier lineage
-        # compounds quadratically over rounds (CLAUDE.md pitfall #4)
-        new = (hit.join(selected, ["repo", "path"], "left_anti").distinct()
-               .localCheckpoint())
-        if new.isEmpty():
-            break
-        selected = selected.unionByName(new)
-        frontier = new
+        return (catalog.join(targets,
+                             catalog["module_fqn"] == targets["target_fqn"])
+                .select("repo", "path"))
+
+    selected, _ = bounded_fixpoint(
+        files.filter(F.col("repo").isin(root_repos)).select("repo", "path"),
+        step, ["repo", "path"], _IMPORT_MAX_ROUNDS, "import_round")
     return src_df.join(selected, ["repo", "path"], "left_semi")

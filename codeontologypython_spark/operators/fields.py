@@ -218,8 +218,7 @@ def mro_and_contributions(classes: DataFrame, extends_edges: DataFrame,
     if no_edges:
         return fast
 
-    closure = transitive_closure(extends_edges.select("src", "dst"),
-                                 max_iterations=10)
+    closure = transitive_closure(extends_edges.select("src", "dst"))
     members = (closure.select(F.col("src").alias("root"),
                               F.col("dst").alias("member"))
                .unionByName(roots.select("root",

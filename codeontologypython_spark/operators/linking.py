@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from codeontologypython_spark import session
 from codeontologypython_spark.operators.relational import (
+    bounded_fixpoint,
     reliable_barrier,
     salted_join,
 )
@@ -70,8 +71,12 @@ def build_symbol_table(entities: DataFrame) -> DataFrame:
                     F.lit(False).alias("via_alias")))
 
 
+# alias-of-alias chain bound, as the reference's tracking.py:343
+_ALIAS_MAX_ROUNDS = 10
+_WILDCARD_MAX_ROUNDS = 5
+
+
 def chase_aliases(symbol_table: DataFrame, mentions: DataFrame,
-                  max_iterations: int = 10,
                   checkpoint_dir: str | None = None) -> DataFrame:
     """L5: module-level ``Alias = Target`` assignments and import BINDINGS
     (``from X import y``, ``import x.y as z``) add symbol-table rows mapping
@@ -80,14 +85,14 @@ def chase_aliases(symbol_table: DataFrame, mentions: DataFrame,
     SAME fqn — both rows are kept: imports prefer the variable (the reference
     references the AssignName node, transformer/__init__.py:288-343), type
     mentions chase through to the target (track_type_name_from_scope,
-    tracking.py:330-380). Alias-of-alias chains are flattened by a bounded
-    loop (max_iterations matches tracking.py:343). ``checkpoint_dir`` swaps
-    the loop's localCheckpoints for reliable parquet barriers
-    (relational.reliable_barrier — the cluster-scale mode).
+    tracking.py:330-380). Alias-of-alias chains are flattened by
+    :func:`relational.bounded_fixpoint` over the alias rows
+    (``_ALIAS_MAX_ROUNDS``; barrier tags ``alias_round_<i>``).
 
     Precondition: ``symbol_table`` is already materialized (a checkpoint or
-    a persisted table) — every round joins it twice (hit + anti), so an
-    unmaterialized base would re-run its derivation per round per join.
+    a persisted table) — every round reads it twice (the entity rows for
+    the hit, its alias rows in the result so far), so an unmaterialized
+    base would re-run its derivation per round per read.
     Callers skip the chase when there are no alias mentions (link_stage
     reads that from its kind counts); called anyway, it returns the table
     unchanged after one empty round."""
@@ -95,35 +100,34 @@ def chase_aliases(symbol_table: DataFrame, mentions: DataFrame,
         F.col("subj").alias("alias_fqn"),
         F.posexplode("candidates").alias("priority", "cand_fqn"))
     cands = reliable_barrier(cands, checkpoint_dir, "alias_cands")
-    symtab = symbol_table
-    for i in range(max_iterations):
+    entity_rows = symbol_table.filter(~F.col("via_alias"))
+
+    def step(_delta, alias_rows):
         # best candidate per alias via map-side-combining min(struct)
         # (pitfall 5): ordering (priority, kind rank, via_alias, eid) is all-
         # ascending and eid-unique, so the winner equals the old row_number
         # window's — without the per-round window sort+full-row shuffle
-        hit = (cands.join(symtab.withColumnRenamed("fqn", "cand_fqn"),
-                          "cand_fqn")
-               .groupBy("alias_fqn")
-               .agg(F.min(F.struct(
-                   F.col("priority"), _kind_rank_col().alias("kr"),
-                   F.col("via_alias"), F.col("eid"), F.col("kind"),
-                   F.col("repo"))).alias("w"))
-               .select(F.col("alias_fqn").alias("fqn"),
-                       F.col("w.eid").alias("eid"),
-                       F.col("w.kind").alias("kind"),
-                       F.col("w.repo").alias("repo"),
-                       F.lit(True).alias("via_alias")))
-        # new = aliases not yet present AS ALIAS ROWS (an entity row under
-        # the same fqn does not satisfy the alias — the chased target must
-        # land too, or chains through shadowing variables dead-end)
-        new = reliable_barrier(
-            hit.join(symtab.filter(F.col("via_alias")).select("fqn"),
-                     "fqn", "left_anti"),
-            checkpoint_dir, f"alias_round_{i}")
-        if new.isEmpty():
-            break
-        symtab = symtab.unionByName(new)
-    return symtab
+        symtab = entity_rows.unionByName(alias_rows)
+        return (cands.join(symtab.withColumnRenamed("fqn", "cand_fqn"),
+                           "cand_fqn")
+                .groupBy("alias_fqn")
+                .agg(F.min(F.struct(
+                    F.col("priority"), _kind_rank_col().alias("kr"),
+                    F.col("via_alias"), F.col("eid"), F.col("kind"),
+                    F.col("repo"))).alias("w"))
+                .select(F.col("alias_fqn").alias("fqn"),
+                        F.col("w.eid").alias("eid"),
+                        F.col("w.kind").alias("kind"),
+                        F.col("w.repo").alias("repo"),
+                        F.lit(True).alias("via_alias")))
+
+    # keyed on fqn over the ALIAS rows only: an entity row under the same
+    # fqn does not satisfy the alias — the chased target must land too, or
+    # chains through shadowing variables dead-end
+    alias_rows, _ = bounded_fixpoint(
+        symbol_table.filter(F.col("via_alias")), step, ["fqn"],
+        _ALIAS_MAX_ROUNDS, "alias_round", checkpoint_dir)
+    return entity_rows.unionByName(alias_rows)
 
 
 def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
@@ -234,14 +238,14 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
         F.col("best.raw").alias("raw"))
 
 
-def expand_wildcards(mentions: DataFrame, symbol_table: DataFrame,
-                     max_rounds: int = 5) -> DataFrame:
+def expand_wildcards(mentions: DataFrame, symbol_table: DataFrame) -> DataFrame:
     """``from m import *`` -> imports edges to every public top-level name
     of m — own definitions AND names m itself imported (astroid's
     wildcard_import_names includes import bindings), following wildcard
-    re-export chains to a bounded fixpoint (tracking.py:234-255 + L2
-    fixpoint). Exports derive from the (chased) symbol table so alias and
-    from-import binding rows export too.
+    re-export chains with :func:`relational.bounded_fixpoint`
+    (``_WILDCARD_MAX_ROUNDS``; tracking.py:234-255 + L2 fixpoint). Exports
+    derive from the (chased) symbol table so alias and from-import binding
+    rows export too.
 
     Callers skip it when there are no wildcard mentions (link_stage reads
     that from its kind counts); called anyway, it returns no rows."""
@@ -287,19 +291,18 @@ def expand_wildcards(mentions: DataFrame, symbol_table: DataFrame,
     imp_stmt_modules = (mentions.filter(F.col("kind") == "wildcard")
                         .withColumn("w_module", module_fqn_col(F.col("path")))
                         .select(F.col("w_module"),
-                                F.element_at("candidates", 1).alias("src_module")))
-    exports = top_level.localCheckpoint(eager=False)
-    imp_stmt_modules = imp_stmt_modules.localCheckpoint(eager=False)
-    for _ in range(max_rounds):
-        lifted = (imp_stmt_modules
-                  .join(exports.withColumnRenamed("module_fqn", "src_module"),
-                        "src_module")
-                  .select(F.col("w_module").alias("module_fqn"), "eid"))
-        new = lifted.join(exports, ["module_fqn", "eid"],
-                          "left_anti").localCheckpoint(eager=False)
-        if new.isEmpty():
-            break
-        exports = exports.unionByName(new)
+                                F.element_at("candidates", 1).alias("src_module"))
+                        .localCheckpoint(eager=False))
+
+    def step(_delta, exports):
+        return (imp_stmt_modules
+                .join(exports.withColumnRenamed("module_fqn", "src_module"),
+                      "src_module")
+                .select(F.col("w_module").alias("module_fqn"), "eid"))
+
+    exports, _ = bounded_fixpoint(
+        top_level.localCheckpoint(eager=False), step, ["module_fqn", "eid"],
+        _WILDCARD_MAX_ROUNDS, "wildcard_round")
 
     return (wild.join(exports, "module_fqn")
             .select("repo", "commit", "subj", "pred",

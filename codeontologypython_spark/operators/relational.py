@@ -2,13 +2,16 @@
 
 These are the Spark-native replacements for the reference's recursive
 pointer-chasing (SURVEY.md §2.3/§2.4): salted hash joins,
-top-1-per-group windows, bounded transitive closure, window dedup with a
-deterministic tiebreak. They are exposed directly (and exercised against the
-TPC-H-ish driver tables in ``__spark_entry__.py``) because they ARE the
+top-1-per-group windows, the one bounded fixpoint loop, window dedup with
+a deterministic tiebreak. They are exposed directly (and exercised against
+the TPC-H-ish driver tables in ``__spark_entry__.py``) because they ARE the
 engine's operator core.
 """
 
 from __future__ import annotations
+
+import warnings
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -22,11 +25,10 @@ def reliable_barrier(df: DataFrame, checkpoint_dir: str | None,
     executor-local and non-replicated, so on a real cluster an executor loss
     means recompute-from-nothing. With ``checkpoint_dir`` set, the round's
     result is written to ``<dir>/<tag>`` as parquet and read back — a
-    reliable barrier that survives executor loss and also truncates lineage.
-    This makes the "on a cluster: per-round parquet checkpoint" substitution
-    documented at the loop sites executable rather than commentary. Each
-    caller passes a round-unique ``tag`` so no round overwrites a path an
-    earlier round's DataFrame still reads from.
+    reliable barrier that survives executor loss and also truncates lineage
+    (the cluster-scale mode). Each caller passes a round-unique ``tag`` so
+    no round overwrites a path an earlier round's DataFrame still reads
+    from.
 
     The local mode is a LAZY checkpoint (``eager=False``): every barrier in
     the iterative loops is consumed immediately afterwards (an isEmpty
@@ -132,48 +134,78 @@ def window_dedup(
             .select(*key_cols, *[F.col(f"w.{c}").alias(c) for c in others]))
 
 
+def bounded_fixpoint(
+    seed: DataFrame,
+    step: Callable[[DataFrame, DataFrame], DataFrame],
+    key: list[str],
+    max_rounds: int,
+    tag: str,
+    checkpoint_dir: str | None = None,
+) -> tuple[DataFrame, int]:
+    """The one bounded growth loop (closures, alias chase, wildcard and
+    import closures, ptype prune, SPARQL ``p+``), the join analog of the
+    reference's recursive pointer-chasing (tracking.py).
+
+    Round ``i`` calls ``step(delta, acc)`` (``delta``: the previous round's
+    new rows, ``seed`` in round 0; ``acc``: everything so far), keeps the
+    least row per ``key`` not yet in ``acc``, and barriers it lazily under
+    tag ``f"{tag}_{i}"`` (:func:`reliable_barrier`): the emptiness probe
+    that ends the loop is the job that materializes it. Returns
+    ``(seed ∪ new rows, rounds that added rows)``; when all ``max_rounds``
+    added rows, a ``RuntimeWarning`` names the loop and its bound.
+    """
+    acc = delta = seed
+    for i in range(max_rounds):
+        out = step(delta, acc)
+        # one map-side-combining aggregate drops the keys already in acc AND
+        # keeps the least row per key (no anti-join exchange on top of the
+        # dedup's); columns come back out of the winning struct, never as
+        # grouping attributes (CLAUDE.md pitfall 13)
+        new = (out.withColumn("__known", F.lit(False))
+               .unionByName(acc.select(*key, F.lit(True).alias("__known")),
+                            allowMissingColumns=True)
+               .groupBy(*key)
+               .agg(F.max("__known").alias("__known"),
+                    F.min(F.struct(*out.columns)).alias("__w"))
+               .filter(~F.col("__known"))
+               .select(*[F.col(f"__w.{c}").alias(c) for c in out.columns]))
+        new = reliable_barrier(new, checkpoint_dir, f"{tag}_{i}")
+        if new.isEmpty():
+            return acc, i
+        acc = acc.unionByName(new)
+        delta = new
+    warnings.warn(f"fixpoint {tag!r} reached its bound of {max_rounds} "
+                  "rounds with rows still being added; result truncated",
+                  RuntimeWarning, stacklevel=2)
+    return acc, max_rounds
+
+
+_TC_MAX_ROUNDS = 10
+
+
 def transitive_closure(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 10,
-    carry_min: str | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Bounded iterative transitive closure over an edge DataFrame, the join
-    analog of the reference's recursive ancestor walks (SURVEY L4; alias
-    chase bound tracking.py:343).
-
-    Returns (src, dst, depth[, carry]) where depth is the minimum path length.
-    ``carry_min`` optionally propagates the minimum of an edge attribute along
-    the first hop (used for base-class position in MRO-priority ordering).
-    Each round is one shuffle join; Python class DAGs are shallow so the loop
-    exits after 2-4 rounds. ``checkpoint_dir`` swaps the per-round
-    localCheckpoint for a reliable parquet barrier (see
-    :func:`reliable_barrier`) — the cluster-scale mode.
+    """Bounded transitive closure over an edge DataFrame, the join analog of
+    the reference's recursive ancestor walks (SURVEY L4): returns
+    (src, dst, depth) with depth the minimum path length, via
+    :func:`bounded_fixpoint` (``_TC_MAX_ROUNDS``; barrier tags
+    ``tc_round_<i>``). Each round is one shuffle join; Python class DAGs are
+    shallow so the loop exits after 2-4 rounds.
     """
-    carry_cols = [carry_min] if carry_min else []
-    frontier = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"),
-        F.lit(1).alias("depth"), *[F.col(c) for c in carry_cols])
-    closure = frontier
+    seed = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
+                        F.lit(1).alias("depth"))
     base = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
-    for i in range(max_iterations):
-        stepped = (frontier.join(base, frontier["dst"] == base["e_src"])
-                   .select(F.col("src"), F.col("e_dst").alias("dst"),
-                           (F.col("depth") + 1).alias("depth"),
-                           *[F.col(c) for c in carry_cols]))
-        # anti-join against known pairs -> only genuinely new paths survive;
-        # the barrier truncates the per-round lineage so the plan does not
-        # grow quadratically
-        new = reliable_barrier(
-            stepped.join(closure.select("src", "dst"),
-                         on=["src", "dst"], how="left_anti"),
-            checkpoint_dir, f"tc_round_{i}")
-        if new.isEmpty():
-            break
-        closure = closure.unionByName(new)
-        frontier = new
-    # keep min depth (and min carry) per pair
-    aggs = [F.min("depth").alias("depth")] + [F.min(c).alias(c) for c in carry_cols]
-    return closure.groupBy("src", "dst").agg(*aggs)
+
+    def step(frontier, _closure):
+        return (frontier.join(base, frontier["dst"] == base["e_src"])
+                .select("src", F.col("e_dst").alias("dst"),
+                        (F.col("depth") + 1).alias("depth")))
+
+    closure, _ = bounded_fixpoint(seed, step, ["src", "dst"], _TC_MAX_ROUNDS,
+                                  "tc_round", checkpoint_dir)
+    # duplicate seed edges share a pair; later rounds never repeat one
+    return closure.groupBy("src", "dst").agg(F.min("depth").alias("depth"))

@@ -59,6 +59,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codeontologypython_spark.operators.relational import bounded_fixpoint
+
 _RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
 _TOKEN_RE = re.compile(
@@ -550,12 +552,11 @@ _PLUS_MAX_ROUNDS = 10  # same bound as the alias chase (tracking.py:343)
 def _plus_pattern_df(triples: DataFrame, pat: _Pattern,
                      lit_req: dict[str, bool]) -> tuple[DataFrame, set]:
     """Compile one ``p+`` (one-or-more) path step to variable bindings via
-    a bounded iterative closure — each round ONE shuffle join, barriered
-    with localCheckpoint so the plan stays linear in rounds instead of
-    growing quadratically. Scale shape: a constant SUBJECT seeds a forward
-    walk and a constant OBJECT (with variable subject) seeds a BACKWARD
-    walk, so either anchored form is linear in the REACHABLE set rather
-    than in the full edge relation (``<cls> woc:extends+ ?anc`` /
+    :func:`relational.bounded_fixpoint` — each round ONE shuffle join.
+    Scale shape: a constant SUBJECT seeds a forward walk and a constant
+    OBJECT (with variable subject) seeds a BACKWARD walk, so either
+    anchored form is linear in the REACHABLE set rather than in the full
+    edge relation (``<cls> woc:extends+ ?anc`` /
     ``?desc woc:extends+ <cls>``); only the fully-variable form walks the
     whole relation.
     Only IRI nodes are traversed through — a literal object is a dead end
@@ -563,7 +564,7 @@ def _plus_pattern_df(triples: DataFrame, pat: _Pattern,
     literal flag is kept so isLiteral() pushdown still applies to the
     object variable. Lifetime: the per-round checkpoints live until the
     session ends (bounded: at most _PLUS_MAX_ROUNDS rounds, each
-    frontier-sized)."""
+    frontier-sized); reaching the bound raises."""
     kind, val = pat.p
     pred_f = (F.col("pred") == val) if kind == "iri" \
         else F.col("pred").isin(list(val))
@@ -580,60 +581,38 @@ def _plus_pattern_df(triples: DataFrame, pat: _Pattern,
         # Every closure row already ends at the object, so the final-hop
         # literal flag is fixed by the seed edges; the node traversed
         # THROUGH when prepending (the new edge's object) must be an IRI.
-        frontier = edges.filter(
+        seed = edges.filter(
             (F.col("dst") == ov)
-            & (F.col("lit") if ok_ == "lit" else ~F.col("lit"))
-        ).localCheckpoint(eager=False)
-        closure = frontier
+            & (F.col("lit") if ok_ == "lit" else ~F.col("lit")))
         pre = edges.select(F.col("src").alias("p_src"),
                            F.col("dst").alias("m"),
                            F.col("lit").alias("p_lit"))
-        for _ in range(_PLUS_MAX_ROUNDS):
-            # distinct BEFORE the anti-join: two paths converging on the
-            # same (src, dst) in one round (a diamond) would otherwise both
-            # enter the closure — SPARQL 1.1 arbitrary-length paths are
-            # duplicate-free, and duplicate frontier rows re-expand every
-            # later round (up-to-exponential growth in diamond-dense graphs)
-            stepped = (frontier.join(pre, F.col("src") == F.col("m"))
-                       .filter(~F.col("p_lit"))
-                       .select(F.col("p_src").alias("src"), "dst", "lit")
-                       .distinct())
-            new = (stepped.join(closure, ["src", "dst", "lit"], "left_anti")
-                   .localCheckpoint(eager=False))
-            if new.isEmpty():
-                break
-            closure = closure.unionByName(new)
-            frontier = new
-        else:
-            # the bound is an extraction heuristic; for a QUERY a silent
-            # truncation would return a wrong answer indistinguishable
-            # from a right one — raise instead (module contract: fail
-            # loudly rather than mis-evaluate)
-            raise ValueError(
-                f"p+ path did not converge within {_PLUS_MAX_ROUNDS} "
-                "rounds (graph has longer simple paths); raise "
-                "_PLUS_MAX_ROUNDS or anchor the path")
-        return closure.select(F.col("src").alias(sv)), {sv}
-    frontier = (edges.filter(F.col("src") == sv) if sk == "iri"
-                else edges).localCheckpoint(eager=False)
-    closure = frontier
-    base = edges.select(F.col("src").alias("m"), F.col("dst").alias("nxt"),
-                        F.col("lit").alias("nlit"))
-    for _ in range(_PLUS_MAX_ROUNDS):
-        # distinct for the same diamond-convergence reason as the backward
-        # walk above (SPARQL paths are duplicate-free sets of node pairs)
-        stepped = (frontier.filter(~F.col("lit"))
-                   .join(base, F.col("dst") == F.col("m"))
-                   .select("src", F.col("nxt").alias("dst"),
-                           F.col("nlit").alias("lit"))
-                   .distinct())
-        new = (stepped.join(closure, ["src", "dst", "lit"], "left_anti")
-               .localCheckpoint(eager=False))
-        if new.isEmpty():
-            break
-        closure = closure.unionByName(new)
-        frontier = new
+
+        def step(frontier, _closure):
+            return (frontier.join(pre, F.col("src") == F.col("m"))
+                    .filter(~F.col("p_lit"))
+                    .select(F.col("p_src").alias("src"), "dst", "lit"))
     else:
+        seed = edges.filter(F.col("src") == sv) if sk == "iri" else edges
+        nxt = edges.select(F.col("src").alias("m"), F.col("dst").alias("nxt"),
+                           F.col("lit").alias("nlit"))
+
+        def step(frontier, _closure):
+            return (frontier.filter(~F.col("lit"))
+                    .join(nxt, F.col("dst") == F.col("m"))
+                    .select("src", F.col("nxt").alias("dst"),
+                            F.col("nlit").alias("lit")))
+
+    # the fixpoint's per-round dedup keeps SPARQL 1.1 arbitrary-length paths
+    # duplicate-free: diamond-converging paths enter (and re-expand) once
+    closure, rounds = bounded_fixpoint(
+        seed.localCheckpoint(eager=False), step, ["src", "dst", "lit"],
+        _PLUS_MAX_ROUNDS, "plus_round")
+    if rounds == _PLUS_MAX_ROUNDS:
+        # the bound is an extraction heuristic; for a QUERY a silent
+        # truncation would return a wrong answer indistinguishable from a
+        # right one — raise instead (module contract: fail loudly rather
+        # than mis-evaluate)
         raise ValueError(
             f"p+ path did not converge within {_PLUS_MAX_ROUNDS} rounds "
             "(graph has longer simple paths); raise _PLUS_MAX_ROUNDS or "

@@ -28,13 +28,10 @@ from codeontologypython_spark.schemas import SOURCE_FILES
 from codeontologypython_spark.sources.tables import path_exists
 
 
-def start_incremental_extract(
-    spark: SparkSession,
-    source_dir: str,
-    workdir: str,
-    trigger_available_now: bool = True,
-):
-    """Start the incremental extraction stream; returns the StreamingQuery."""
+def start_incremental_extract(spark: SparkSession, source_dir: str,
+                              workdir: str):
+    """Start the incremental extraction stream (an availableNow trigger:
+    drains every landed file, then stops); returns the StreamingQuery."""
     extract_path = os.path.join(workdir, "stream_extract")
     lineage_path = os.path.join(workdir, "stream_lineage")
     checkpoint = os.path.join(workdir, "stream_checkpoint")
@@ -63,12 +60,11 @@ def start_incremental_extract(
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(lineage_path))
 
-    writer = (stream.writeStream
-              .foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (stream.writeStream
+            .foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start())
 
 
 def compact(spark: SparkSession, workdir: str) -> DataFrame:

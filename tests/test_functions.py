@@ -290,6 +290,96 @@ def test_iterative_loops_parquet_checkpoint_mode(spark, tmp_path):
     assert any(n.startswith("alias_round_") for n in os.listdir(d3))
 
 
+def _closure_fixpoint(edges, max_rounds):
+    """transitive_closure's loop, run on bounded_fixpoint directly so a test
+    can read the round count and the raw (pre-aggregation) rows."""
+    from codeontologypython_spark.operators.relational import bounded_fixpoint
+    seed = edges.select("src", "dst", F.lit(1).alias("depth"))
+    base = edges.select(F.col("src").alias("e_src"),
+                        F.col("dst").alias("e_dst"))
+
+    def step(frontier, _acc):
+        return (frontier.join(base, frontier["dst"] == base["e_src"])
+                .select("src", F.col("e_dst").alias("dst"),
+                        (F.col("depth") + 1).alias("depth")))
+
+    return bounded_fixpoint(seed, step, ["src", "dst"], max_rounds, "t_round")
+
+
+def _bfs_closure(edge_list):
+    """(src, dst) -> minimum path length, by breadth-first search."""
+    succ = {}
+    for a, b in edge_list:
+        succ.setdefault(a, []).append(b)
+    out = {}
+    for s in {a for a, _ in edge_list}:
+        depth, frontier = 0, {s}
+        seen = set()
+        while frontier:
+            depth += 1
+            frontier = {b for a in frontier for b in succ.get(a, [])} - seen
+            seen |= frontier
+            for b in frontier:
+                out[(s, b)] = depth
+    return out
+
+
+def test_bounded_fixpoint_chain_under_bound_does_not_warn(spark):
+    import warnings
+
+    n = 6
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "src long, dst long")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        acc, rounds = _closure_fixpoint(edges, 10)
+        got = {(r["src"], r["dst"], r["depth"]) for r in acc.collect()}
+    assert rounds == n - 1
+    assert got == {(i, j, j - i) for i in range(n + 1)
+                   for j in range(i + 1, n + 1)}
+    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
+
+
+def test_bounded_fixpoint_warns_at_bound_and_truncates(spark):
+    """A 13-edge chain at the closure's 10-round bound: the loop says so,
+    and the result is the truncated closure (paths of at most 11 edges)."""
+    from codeontologypython_spark.operators.relational import (
+        transitive_closure,
+    )
+    n = 13
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "src long, dst long")
+    with pytest.warns(RuntimeWarning, match="tc_round.*bound of 10"):
+        out = transitive_closure(edges)
+    got = {(r["src"], r["dst"], r["depth"]) for r in out.collect()}
+    assert got == {(i, j, j - i) for i in range(n + 1)
+                   for j in range(i + 1, n + 1) if j - i <= 11}
+
+
+def test_bounded_fixpoint_dedups_converging_paths(spark):
+    """Layered DAG, 4 wide x 7 deep, every node linked to the whole next
+    layer (96 edges, 336 reachable pairs): paths converge on every pair, so
+    without the per-round dedup the rounds add 320, 1024, 3072, ... rows
+    for 240 new pairs. Each new pair must enter exactly once, and
+    transitive_closure must equal breadth-first search."""
+    from codeontologypython_spark.operators.relational import (
+        transitive_closure,
+    )
+    width, depth = 4, 7
+    edge_list = [(layer * width + a, (layer + 1) * width + b)
+                 for layer in range(depth - 1)
+                 for a in range(width) for b in range(width)]
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    acc, rounds = _closure_fixpoint(edges, 10)
+    assert rounds == depth - 2
+    assert acc.count() - len(edge_list) == 240
+    expected = _bfs_closure(edge_list)
+    assert len(expected) == 336
+    got = {(r["src"], r["dst"]): r["depth"]
+           for r in transitive_closure(edges).collect()}
+    assert got == expected
+
+
 def test_repetition_ratio(spark):
     from codeontologypython_spark.functions.textops import repetition_ratio
     rows = [(0, "a b c a b c a b c"),      # "a b c" style repeats

@@ -37,15 +37,13 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     requirement (equal subj ⟹ same partition ⟹ equal triple ⟹ same
     partition), so Catalyst inserts no second exchange — and, because the
     aggregation preserves its child's partitioning, every downstream
-    subj-keyed operation (the neighbor-name IRI aggregation, the subj-side
-    IRI rewrite join) reuses this ONE exchange when the result is persisted.
+    subj-keyed operation (both IRI-hash aggregations, the subj-side IRI
+    rewrite join) reuses this ONE exchange when the result is persisted.
     This trades the map-side partial combine for exchange reuse: duplicate
     triples (per-file re-emissions of shared Project/Library/Package rows,
     <0.1% of the stream) travel through the shuffle before collapsing, while
-    later full-stream shuffles disappear entirely. In canonicalize_stage
-    this path now carries only the NON-literal rows (small, join-active);
-    literal rows — the byte mass — dedup via :func:`dedup_literal_triples`
-    without shuffling their bytes at all."""
+    later full-stream shuffles disappear entirely. canonicalize_stage runs
+    it once, over literal and non-literal rows together."""
     return (triples
             .repartition("subj")
             .groupBy("subj", "pred", "obj")
@@ -55,63 +53,6 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
                     F.col("w.commit").alias("commit"),
                     "subj", "pred", "obj",
                     F.col("w.obj_is_literal").alias("obj_is_literal")))
-
-
-def dedup_literal_triples(lit: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """C1 for LITERAL rows without shuffling their bytes.
-
-    Literal objects (hasSourceCode, hasDocumentation, names…) are the
-    stream's byte mass: a multi-KB source string per statement/executable.
-    Classic dedup must move every unique row through one exchange to
-    co-locate equal triples — at 8→32 local cores that exchange is memory-
-    bandwidth-bound and stops scaling, and at 10^12-file scale it IS the
-    canonicalize stage's network bill. But a duplicated literal triple can
-    only arise from the same file content at several commits (subjects are
-    (repo|path|ordinal)-scoped), which makes duplicates RARE and detectable
-    from digests alone:
-
-    1. shuffle only ``(subj, pred, sha2(obj))`` key rows (~200 B) to count
-       multiplicity per distinct triple — the byte column stays in place;
-    2. keys with multiplicity > 1 (the rare multi-commit files) form a tiny
-       broadcast set; rows matching it take the classic min-commit dedup —
-       a byte shuffle of only the duplicated sliver;
-    3. everything else passes through map-side untouched.
-
-    Returns ``(deduped_rows, digest_groups)`` where ``digest_groups`` is the
-    distinct ``(subj, pred, digest)`` table — exactly one row per surviving
-    triple, which :func:`compute_iris` aggregates into the own-literal IRI
-    hash input (identical multiset to hashing the deduped rows directly, so
-    IRIs are byte-identical to the classic path). Falls back to classic
-    dedup when the dup-key set exceeds ``session._LIT_DUP_BROADCAST_MAX``.
-
-    Cache lifetime contract: the digest-group table is ``persist()``ed here
-    (it feeds the dup gate eagerly, then BOTH returned frames lazily — the
-    groups projection via compute_iris and, when duplicates exist, the
-    dup-key anti/semi joins), so it must stay cached until the caller
-    materializes the stage output; it cannot be unpersisted inside this
-    function or canonicalize_stage without recomputing the literal-stream
-    groupBy. Callers release it (and every other stage cache) by running
-    the build inside ``session.cache_scope``, which frees the caches the
-    block created once the stage-3 result has materialized, as
-    ``run_pipeline`` and ``__spark_entry__._kg_triples`` do.
-    """
-    cols = ["repo", "commit", "subj", "pred", "obj", "obj_is_literal"]
-    lit2 = lit.withColumn("digest", F.sha2("obj", 256))
-    g = (lit2.groupBy("subj", "pred", "digest")
-         .agg(F.count("*").alias("c"))
-         .persist())  # consumed by the dup gate AND the own-literal IRI agg
-    dup_keys = g.filter(F.col("c") > 1).select("subj", "pred", "digest")
-    n_dups = dup_keys.count()
-    groups = g.select("subj", "pred", "digest")
-    if n_dups == 0:
-        return lit2.select(*cols), groups
-    if n_dups > session._LIT_DUP_BROADCAST_MAX:
-        return dedup_triples(lit), groups
-    clean = (lit2.join(F.broadcast(dup_keys), ["subj", "pred", "digest"],
-                       "left_anti").select(*cols))
-    hit = (lit2.join(F.broadcast(dup_keys), ["subj", "pred", "digest"],
-                     "left_semi").select(*cols))
-    return clean.unionByName(dedup_triples(hit)), groups
 
 
 def apply_library_manifest(triples: DataFrame,
@@ -164,15 +105,13 @@ def dedup_entities(entities: DataFrame) -> DataFrame:
 
 
 def compute_iris(entities: DataFrame, triples: DataFrame,
-                 lit_groups: DataFrame,
                  broadcast_entities: bool = False) -> DataFrame:
     """C3 -> (eid, iri).
 
-    ``triples`` supplies the neighbor names (its literal rows, if any, are
-    ignored); ``lit_groups`` — the distinct (subj, pred, digest) table from
-    :func:`dedup_literal_triples`, one row per surviving literal triple —
-    supplies the own-literal digests without touching the literal byte
-    column again.
+    ``triples`` is the deduplicated stream (canonicalize_stage passes its
+    one dedup_triples table): its literal rows supply the own-literal
+    values, its non-literal rows the neighbor names, each counted once per
+    distinct triple (duplicate emissions would perturb the hash input).
 
     ``broadcast_entities``: hint the (eid, name) side of the neighbor-name
     join as a broadcast — the non-literal stream then keeps its subj
@@ -189,15 +128,15 @@ def compute_iris(entities: DataFrame, triples: DataFrame,
     files; at 10^12-file scale that assert would fail, so the eid term makes
     IRIs collision-free while staying deterministic in the input content.
     """
-    # each literal is pre-hashed so the aggregation shuffles 64-char digests
-    # instead of multi-KB hasSourceCode strings; the outer sha256 over the
-    # sorted digest list keeps determinism (the reference concatenates raw
-    # values, individuals.py:60-85 — same IRI-stability contract, different
-    # bytes, which is fine because IRI parity is engine-internal). One group
-    # row per surviving deduped literal triple -> the digest multiset equals
-    # hashing the deduped rows directly
-    own_lits = (lit_groups.groupBy("subj")
-                .agg(F.collect_list("digest").alias("lits")))
+    # each literal is pre-hashed map-side so the aggregation collects 64-char
+    # digests instead of multi-KB hasSourceCode strings; the outer sha256
+    # over the sorted digest list keeps determinism (the reference
+    # concatenates raw values, individuals.py:60-85 — same IRI-stability
+    # contract, different bytes, which is fine because IRI parity is
+    # engine-internal)
+    own_lits = (triples.filter(F.col("obj_is_literal"))
+                .groupBy("subj")
+                .agg(F.collect_list(F.sha2("obj", 256)).alias("lits")))
     name_map = entities.select(F.col("eid").alias("obj"),
                                F.col("name").alias("nname"))
     if broadcast_entities:
@@ -225,19 +164,17 @@ def compute_iris(entities: DataFrame, triples: DataFrame,
                     ), 256)).alias("iri")))
 
 
-def apply_iris(lit: DataFrame, nonlit: DataFrame, iri_map: DataFrame,
+def apply_iris(triples: DataFrame, iri_map: DataFrame,
                broadcast_maps: bool = False) -> DataFrame:
-    """Rewrite local entity ids to hashed IRIs: subj side on both streams,
-    obj side on non-literals only. Objects already holding absolute IRIs
-    (rdf:type classes, access-modifier singletons, owl terms) pass through
-    via coalesce.
+    """Rewrite local entity ids to hashed IRIs: subj side on every row, obj
+    side on non-literals only, so literal bytes never enter the obj-keyed
+    join. Objects already holding absolute IRIs (rdf:type classes,
+    access-modifier singletons, owl terms) pass through via coalesce.
 
     Shuffle shape: with ``broadcast_maps`` (auto-gated by canonicalize_stage
-    on iri_map size) all lookups are map-side broadcast-hash joins — the
-    literal byte mass crosses ZERO exchanges in the whole stage (its dedup
-    is digest-based, see dedup_literal_triples). On the shuffle path the
-    literal stream pays its single byte exchange here (subj join) and the
-    non-literal joins reuse the dedup output's subj partitioning; the
+    on iri_map size) all lookups are map-side broadcast-hash joins. On the
+    shuffle path the subj join reuses the dedup output's subj partitioning
+    and only the non-literal rows are shuffled again, by obj; the
     sort-merge sorts of a unified 11M-row stream were measured 10x slower
     than the broadcast probe, hence the auto gate."""
     s_map = iri_map.select(F.col("eid").alias("subj"), F.col("iri").alias("s_iri"))
@@ -246,21 +183,17 @@ def apply_iris(lit: DataFrame, nonlit: DataFrame, iri_map: DataFrame,
         # the exchanges canonicalize to the same subtree (aliases are
         # normalized away), so ReuseExchange ships one hash relation
         s_map, o_map = F.broadcast(s_map), F.broadcast(o_map)
-    lits = (lit
-            .join(s_map, "subj", "left")
-            .select("repo", "commit",
-                    F.coalesce("s_iri", "subj").alias("subj"),
-                    "pred", "obj", "obj_is_literal"))
-    nonlits = (nonlit
-               .join(s_map, "subj", "left")
-               .select("repo", "commit",
-                       F.coalesce("s_iri", "subj").alias("subj"),
-                       "pred", "obj", "obj_is_literal")
+    subj_done = (triples
+                 .join(s_map, "subj", "left")
+                 .select("repo", "commit",
+                         F.coalesce("s_iri", "subj").alias("subj"),
+                         "pred", "obj", "obj_is_literal"))
+    nonlits = (subj_done.filter(~F.col("obj_is_literal"))
                .join(o_map, "obj", "left")
                .select("repo", "commit", "subj", "pred",
                        F.coalesce("o_iri", "obj").alias("obj"),
                        "obj_is_literal"))
-    return lits.unionByName(nonlits)
+    return subj_done.filter(F.col("obj_is_literal")).unionByName(nonlits)
 
 
 def materialize_inverses(triples: DataFrame) -> DataFrame:
@@ -418,7 +351,7 @@ def audit_iri_uniqueness(iri_map: DataFrame) -> DataFrame:
 def canonicalize_stage(entities: DataFrame, all_triples: DataFrame,
                        manifest: DataFrame | None = None,
                        broadcast_iris: bool | None = None) -> DataFrame:
-    """Full Stage 3: prune -> IRI hash -> rewrite -> inverses -> dedup.
+    """Full Stage 3: prune -> dedup -> IRI hash -> rewrite -> inverses.
 
     ``manifest`` (optional, tiny ``(repo, library, is_by_project)`` table)
     drops the project links of dependency libraries first — see
@@ -435,17 +368,14 @@ def canonicalize_stage(entities: DataFrame, all_triples: DataFrame,
     and which IRI-rewrite strategy applies; the helpers never probe their
     inputs.
 
-    ``entities``, ``nonlit_d`` and ``iri_map`` each feed 2-4 downstream
-    consumers, so they are persist()ed — a materialization barrier like the
-    localCheckpoints elsewhere, but one that PRESERVES outputPartitioning
-    (localCheckpoint's LogicalRDD drops it under AQE): the single
-    ``repartition("subj")`` inside the non-literal dedup then also serves
-    the neighbor-name IRI aggregation and the subj-side rewrite join with no
-    further full-stream exchange, and the eid-partitioned entity dedup
-    serves every eid-keyed join in compute_iris. Literal rows — the byte
-    mass — never enter that exchange at all: their dedup and IRI hash input
-    run on digests (dedup_literal_triples), so on the broadcast-rewrite path
-    the stage moves ZERO literal bytes through shuffles. On a cluster these
+    ``entities``, the deduplicated triple table and ``iri_map`` each feed
+    2-4 downstream consumers, so they are persist()ed — a materialization
+    barrier like the localCheckpoints elsewhere, but one that PRESERVES
+    outputPartitioning (localCheckpoint's LogicalRDD drops it under AQE):
+    the single ``repartition("subj")`` inside :func:`dedup_triples` then
+    also serves both IRI-hash aggregations and the subj-side rewrite join
+    with no further full-stream exchange, and the eid-partitioned entity
+    dedup serves every eid-keyed join in compute_iris. On a cluster these
     persists are the Stage-3 parquet/Iceberg checkpoints (which preserve
     bucketing the same way).
     """
@@ -469,17 +399,13 @@ def canonicalize_stage(entities: DataFrame, all_triples: DataFrame,
     if broadcast_iris is None:
         broadcast_iris = n_entities <= session._IRI_BROADCAST_MAX_ROWS
     # dedup BEFORE IRI hashing: (a) the IRI aggregation then sees each
-    # neighbor name / literal digest once (duplicate emissions would perturb
+    # neighbor name / literal value once (duplicate emissions would perturb
     # the hash input), (b) the IRI-rewrite joins and the inverse union
     # process one row per distinct triple. Inverses of distinct forward
     # triples are distinct — only forward predicates are emitted upstream —
     # so no second dedup.
-    nonlit_d = dedup_triples(pruned.filter(~F.col("obj_is_literal"))).persist()
-    lit_d, lit_groups = dedup_literal_triples(
-        pruned.filter(F.col("obj_is_literal")))
-    iri_map = compute_iris(entities, nonlit_d,
-                           lit_groups=lit_groups,
+    deduped = dedup_triples(pruned).persist()
+    iri_map = compute_iris(entities, deduped,
                            broadcast_entities=broadcast_iris).persist()
-    rewritten = apply_iris(lit_d, nonlit_d, iri_map,
-                           broadcast_maps=broadcast_iris)
-    return materialize_inverses(rewritten)
+    return materialize_inverses(
+        apply_iris(deduped, iri_map, broadcast_maps=broadcast_iris))

@@ -137,7 +137,7 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
     """L1/L2/L3: resolve candidate FQN lists to entity ids -> triples.
 
     Candidates are best-first; the join keeps the best hit per mention via a
-    top-1 window. The symbol table is broadcast when small (north_star); for
+    min(struct) aggregate keyed by the mention's own columns. The symbol table is broadcast when small (north_star); for
     huge symbol tables set ``broadcast_symtab=False`` and a ``salt`` to defuse
     hub-symbol skew with :func:`salted_join`.
 
@@ -149,9 +149,13 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
     per-step ``c``, ``b.c``, ``a.b.c`` scope lookups. One rewrite round
     suffices because the alias chase already flattened alias-of-alias chains.
     """
+    # a mention is keyed by its own content, so every evaluation of `m` (the
+    # miss anti-join below, a task retry, an AQE re-plan) agrees on it; two
+    # mentions with equal keys are the same text at the same site and
+    # resolve alike
+    key = ["repo", "path", "commit", "subj", "pred", "mkind", "raw"]
     m = (mentions.filter(F.col("kind").isin("import", "type", "base"))
-         .withColumn("mention_id", F.monotonically_increasing_id())
-         .select("repo", "commit", "subj", "pred", "raw", "mention_id",
+         .select("repo", "path", "commit", "subj", "pred", "raw",
                  F.col("kind").alias("mkind"),
                  F.posexplode("candidates").alias("priority", "fqn")))
     st = symbol_table.select("fqn", "eid", "kind", "via_alias")
@@ -163,21 +167,15 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
             return salted_join(probe, st, "fqn", salt=salt)
         return probe.join(st, "fqn")
 
-    if alias_map is not None:
-        # the miss anti-join below compares mention_ids between `m` and
-        # `joined` — materialize the id-assigning plan EXACTLY ONCE by
-        # checkpointing `m` first and deriving `joined` from the checkpoint.
-        # Two independent materializations of monotonically_increasing_id can
-        # silently desynchronize (task retry, AQE coalesce, an upstream
-        # repartition), dropping or double-resolving mentions.
-        m = m.localCheckpoint()  # EAGER on purpose: pins the
-        # monotonically_increasing_id values before any consumer runs
     joined = join_st(m)
     if alias_map is not None:
         # misses only: most mentions resolve in round 1 or are external
         joined = joined.localCheckpoint(eager=False)
-        miss = (m.join(joined.select("mention_id").distinct(),
-                       "mention_id", "left_anti")
+        hit = joined.select(*[F.col(c).alias("hit_" + c) for c in key])
+        # null-safe: a mention's raw text may be null
+        miss = (m.join(hit.distinct(),
+                       [F.col(c).eqNullSafe(F.col("hit_" + c)) for c in key],
+                       "left_anti")
                 .filter(F.col("fqn").contains(".")))
         parts = F.split("fqn", "\\.")
         sp = (miss.withColumn("parts", parts)
@@ -195,8 +193,7 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
         am = alias_map.select(F.col("alias_fqn").alias("prefix"), "canon_fqn")
         rewritten = (sp.join(F.broadcast(am) if broadcast_symtab else am,
                              "prefix")
-                     .select("repo", "commit", "subj", "pred", "raw",
-                             "mention_id", "mkind",
+                     .select(*key,
                              # suffix hits rank after all direct hits; longer
                              # prefixes (more-specific bindings) win ties
                              (F.lit(100) + F.col("priority") * 10
@@ -205,8 +202,8 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
                                       "suffix").alias("fqn")))
         joined = joined.unionByName(join_st(rewritten))
     # best candidate per mention via min(struct): lexicographic on
-    # (priority, kind_rank, eid). Unlike a row_number window keyed by the
-    # unique mention id, this aggregates map-side before the shuffle —
+    # (priority, kind_rank, eid). Unlike a row_number window over the
+    # mention key, this aggregates map-side before the shuffle —
     # the shuffle carries one row per mention, not one per candidate hit.
     # type and base mentions may only resolve to CLASSES — the reference's
     # track_type_name_from_scope raises unless the match is a ClassDef
@@ -223,19 +220,15 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
                                  & F.col("via_alias"), F.lit(1))
                           .otherwise(F.lit(0)))
     best = (joined
-            .groupBy("mention_id")
+            .groupBy(*key)
             .agg(F.min(F.struct(
                 F.col("priority"), import_via_penalty.alias("vp"),
-                _kind_rank_col().alias("kr"),
-                F.col("eid"), F.col("repo"), F.col("commit"),
-                F.col("subj"), F.col("pred"), F.col("raw"))).alias("best")))
+                _kind_rank_col().alias("kr"), F.col("eid"))).alias("best")))
     # `raw` is carried so extends edges keep their base position
     # ("<pos>:<name>", pyfile.py extends mentions) for exact MRO ordering
-    return best.select(
-        F.col("best.repo").alias("repo"), F.col("best.commit").alias("commit"),
-        F.col("best.subj").alias("subj"), F.col("best.pred").alias("pred"),
-        F.col("best.eid").alias("obj"), F.lit(False).alias("obj_is_literal"),
-        F.col("best.raw").alias("raw"))
+    return best.select("repo", "commit", "subj", "pred",
+                       F.col("best.eid").alias("obj"),
+                       F.lit(False).alias("obj_is_literal"), "raw")
 
 
 def expand_wildcards(mentions: DataFrame, symbol_table: DataFrame) -> DataFrame:

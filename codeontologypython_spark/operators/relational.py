@@ -103,8 +103,11 @@ def salted_join(
 def top1_per_group(
     df: DataFrame, group_cols: list[str], order_cols: list[Column]
 ) -> DataFrame:
-    """Keep the best row per group (candidate-join resolution, SURVEY L3;
-    MRO-priority override pick, SURVEY P4)."""
+    """Keep the best row per group (row_number window), for orderings
+    :func:`window_dedup` cannot express (descending / mixed). Only the
+    ``q_top1_per_group`` entry of ``__spark_entry__.queries()`` calls it;
+    the KG's own top-1 picks (mention resolution, override pick) are
+    ``min(struct)`` aggregates."""
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return (df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1).drop("__rn"))
@@ -113,8 +116,10 @@ def top1_per_group(
 def window_dedup(
     df: DataFrame, key_cols: list[str], tiebreak_cols: list[Column]
 ) -> DataFrame:
-    """Dedup with deterministic winner (SURVEY C1; north_star "window over
-    (subj,pred,obj) with min-commit tiebreak").
+    """Dedup with deterministic winner — the generic form of the KG's C1
+    min-commit dedup (canonicalize.dedup_triples / dedup_entities, which
+    inline the same shape). Only the ``q_window_dedup`` entry of
+    ``__spark_entry__.queries()`` calls it.
 
     Implemented as groupBy + ``min(struct(tiebreaks…, remaining cols…))``
     rather than a row_number window (CLAUDE.md pitfall 5): the aggregation

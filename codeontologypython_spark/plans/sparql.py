@@ -636,6 +636,32 @@ def _plus_pattern_df(triples: DataFrame, pat: _Pattern,
     return closure.select(*cols), vars_
 
 
+def _filter_refs(f: tuple) -> list[str]:
+    """Variables a regex/compare FILTER references, in order."""
+    if f[0] == "regex":
+        return [f[1]]
+    return [f[1]] + ([f[3][1]] if f[3][0] == "var" else [])
+
+
+def _apply_filters(acc: DataFrame, bound: set[str],
+                   filters: list[tuple]) -> DataFrame:
+    """Apply regex/compare FILTERs to a binding table; every variable they
+    reference must be bound (ValueError names the first that is not)."""
+    for flt in filters:
+        missing = [v for v in _filter_refs(flt) if v not in bound]
+        if missing:
+            raise ValueError(
+                f"FILTER references unbound variable ?{missing[0]}")
+        if flt[0] == "regex":
+            acc = acc.filter(F.col(flt[1]).rlike(flt[2]))
+        else:
+            _, var, op, (kind, val) = flt
+            rhs = F.col(val) if kind == "var" else F.lit(val)
+            acc = acc.filter(F.col(var) == rhs if op == "="
+                             else F.col(var) != rhs)
+    return acc
+
+
 def _compile_required(triples: DataFrame, patterns: list[_Pattern],
                       filters: list[tuple]) -> tuple[DataFrame, set[str]]:
     """Compile an inner-join-only BGP (the required part of a branch, or
@@ -673,19 +699,7 @@ def _compile_required(triples: DataFrame, patterns: list[_Pattern],
             unsat = True
     if unsat:
         acc = acc.filter(F.lit(False))
-    for flt in filters:
-        if flt[0] == "regex":
-            acc = acc.filter(F.col(flt[1]).rlike(flt[2]))
-        else:
-            _, var, op, (kind, val) = flt
-            if var not in bound or (kind == "var" and val not in bound):
-                missing = var if var not in bound else val
-                raise ValueError(
-                    f"FILTER references unbound variable ?{missing}")
-            rhs = F.col(val) if kind == "var" else F.lit(val)
-            acc = acc.filter(F.col(var) == rhs if op == "="
-                             else F.col(var) != rhs)
-    return acc, bound
+    return _apply_filters(acc, bound, filters), bound
 
 
 def _compile_bgp(triples: DataFrame, patterns: list[_Pattern],
@@ -712,11 +726,6 @@ def _compile_bgp(triples: DataFrame, patterns: list[_Pattern],
     req_vars = {v for p in patterns for (k, v) in (p.s, p.p, p.o)
                 if k == "var"}
 
-    def _refs(f: tuple) -> set[str]:
-        if f[0] in ("regex", "isliteral"):
-            return {f[1]}
-        return {f[1]} | ({f[3][1]} if f[3][0] == "var" else set())
-
     # isLiteral is implemented as scan-time pushdown on obj_is_literal, so
     # it can only constrain variables the REQUIRED part binds; after the
     # left join the flag column is gone, so a top-level isLiteral on an
@@ -733,7 +742,7 @@ def _compile_bgp(triples: DataFrame, patterns: list[_Pattern],
                 "bind the variable in the required part)")
 
     post = [f for f in filters
-            if f[0] != "isliteral" and not _refs(f) <= req_vars]
+            if f[0] != "isliteral" and not set(_filter_refs(f)) <= req_vars]
     acc, bound = _compile_required(triples, patterns,
                                    [f for f in filters if f not in post])
     # inline binding tables join right after the required part: tiny by
@@ -782,19 +791,7 @@ def _compile_bgp(triples: DataFrame, patterns: list[_Pattern],
         acc = acc.join(sub, on, "left")
         nullable |= sub_bound - bound
         bound |= sub_bound
-    for flt in post:
-        missing = sorted(_refs(flt) - bound)
-        if missing:
-            raise ValueError(
-                f"FILTER references unbound variable ?{missing[0]}")
-        if flt[0] == "regex":
-            acc = acc.filter(F.col(flt[1]).rlike(flt[2]))
-        else:
-            _, var, op, (kind, val) = flt
-            rhs = F.col(val) if kind == "var" else F.lit(val)
-            acc = acc.filter(F.col(var) == rhs if op == "="
-                             else F.col(var) != rhs)
-    return acc, bound
+    return _apply_filters(acc, bound, post), bound
 
 
 def sparql_to_df(triples: DataFrame, query: str) -> DataFrame:

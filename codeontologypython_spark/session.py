@@ -12,9 +12,10 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Broadcast-vs-shuffle size gates, the only place they are set. The row gates
-# below and the byte threshold Spark applies on its own size the same
-# broadcast budget: a side under them is shipped whole to every task.
+# The three broadcast-vs-shuffle size gates, the only place they are set: the
+# byte threshold Spark applies on its own and the two row gates below size
+# the same broadcast budget — a side under them is shipped whole to every
+# task.
 _BROADCAST_JOIN_THRESHOLD_BYTES = 64 * 1024 * 1024
 # symbol-table rows (~100 B/row ≈ the byte threshold): above this the
 # resolution join in linking.link_stage switches from broadcast to a salted
@@ -24,10 +25,6 @@ _AUTO_SALT = 16
 # iri_map rows (~130 B/row -> ~500 MB hash relation): above this
 # canonicalize.canonicalize_stage rewrites IRIs with shuffle joins
 _IRI_BROADCAST_MAX_ROWS = 4_000_000
-# duplicated literal keys (~120 B/key): above this
-# canonicalize.dedup_literal_triples falls back to the classic byte-shuffle
-# dedup (a commit-dense corpus where most files exist at many commits)
-_LIT_DUP_BROADCAST_MAX = 2_000_000
 
 
 def _default_driver_memory() -> str:

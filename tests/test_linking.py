@@ -352,11 +352,12 @@ def test_link_stage_without_alias_wildcard_or_base_mentions(spark):
 
 
 def test_resolve_mentions_stable_under_repartition(extracted):
-    """Regression (ADVICE r2 / VERDICT r2 #2): mention ids are assigned by
-    monotonically_increasing_id and must be materialized exactly once. An
-    upstream repartition perturbs partition order; if `m` and `joined` each
-    re-evaluated the id plan, the L3 miss anti-join would silently drop or
-    double-resolve mentions. The resolved triple set must be invariant."""
+    """Regression (ADVICE r2 / VERDICT r2 #2): the L3 miss anti-join and the
+    best-candidate pick key a mention by its own columns, so `m` and
+    `joined` agree on it however often either is evaluated. An upstream
+    repartition perturbs partition order; a key that depended on it would
+    silently drop or double-resolve mentions. The resolved triple set must
+    be invariant."""
     e = extracted
     base, _, _ = linking.link_stage(e["entities"], e["triples"],
                                     e["mentions"])

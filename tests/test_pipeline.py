@@ -12,15 +12,6 @@ from codeontologypython_spark import woc
 WOC = woc.WOC
 
 
-def _lit_groups(triples):
-    """compute_iris's own-literal digest input, as canonicalize_stage
-    builds it."""
-    from codeontologypython_spark.operators.canonicalize import (
-        dedup_literal_triples,
-    )
-    return dedup_literal_triples(triples.filter(F.col("obj_is_literal")))[1]
-
-
 def test_iri_uniqueness_audit(extracted, final_triples):
     from codeontologypython_spark.operators.canonicalize import (
         audit_iri_uniqueness,
@@ -28,8 +19,7 @@ def test_iri_uniqueness_audit(extracted, final_triples):
         dedup_entities,
     )
     iris = compute_iris(dedup_entities(extracted["entities"]),
-                        extracted["triples"],
-                        _lit_groups(extracted["triples"]))
+                        extracted["triples"])
     assert audit_iri_uniqueness(iris).isEmpty()
 
 
@@ -41,9 +31,8 @@ def test_iri_stability_same_input_same_iris(spark, source_files, extracted):
         split_extraction,
     )
     e2, t2, _, _ = split_extraction(extract_stage(source_files))
-    iris1 = compute_iris(extracted["entities"], extracted["triples"],
-                         _lit_groups(extracted["triples"]))
-    iris2 = compute_iris(e2, t2, _lit_groups(t2))
+    iris1 = compute_iris(extracted["entities"], extracted["triples"])
+    iris2 = compute_iris(e2, t2)
     assert iris1.exceptAll(iris2).isEmpty()
     assert iris2.exceptAll(iris1).isEmpty()
 
@@ -128,19 +117,12 @@ def test_apply_iris_shuffle_path_equivalence(spark, extracted, final_triples,
     assert a == b
 
 
-def test_literal_digest_dedup_equivalence(spark, monkeypatch):
-    """dedup_literal_triples (digest-keyed, no byte shuffle) must produce
-    exactly the classic min-commit dedup's rows on every duplicate shape:
-    multi-commit duplicates, exact duplicate rows, and same-(subj,pred)
-    different-obj rows (both kept). The digest-group table must carry one
-    row per surviving triple (the own-literal IRI hash input contract).
-    Checked on both sides of the dup-key gate: the default (broadcast
-    dup-key path) and the gate at 0 (classic byte-shuffle fallback)."""
-    from codeontologypython_spark import session
-    from codeontologypython_spark.operators.canonicalize import (
-        dedup_literal_triples,
-        dedup_triples,
-    )
+def test_literal_triple_dedup(spark):
+    """dedup_triples over literal rows, on every duplicate shape: the
+    min-commit row wins among multi-commit duplicates, exact duplicate rows
+    collapse, and same-(subj,pred) rows with different objects are both
+    kept."""
+    from codeontologypython_spark.operators.canonicalize import dedup_triples
     rows = [
         # unique row
         ("r", "c2", "e1", "p:name", "alpha", True),
@@ -156,16 +138,10 @@ def test_literal_digest_dedup_equivalence(spark, monkeypatch):
     ]
     schema = ("repo string, commit string, subj string, pred string, "
               "obj string, obj_is_literal boolean")
-    lit = spark.createDataFrame(rows, schema)
-    want = dedup_triples(lit)
-    as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
-    for gate in (session._LIT_DUP_BROADCAST_MAX, 0):
-        monkeypatch.setattr(session, "_LIT_DUP_BROADCAST_MAX", gate)
-        got, groups = dedup_literal_triples(lit)
-        assert as_set(got) == as_set(want), gate
-        assert ("r", "c1", "e2", "p:src", "def f(): pass", True) \
-            in as_set(got)
-        assert groups.count() == got.count() == 5, gate
+    got = dedup_triples(spark.createDataFrame(rows, schema)).collect()
+    assert sorted(tuple(r) for r in got) == sorted(set(rows) - {
+        ("r", "c5", "e2", "p:src", "def f(): pass", True)})
+    assert len(got) == 5
 
 
 def test_library_manifest_classification(final_triples):
@@ -269,7 +245,7 @@ def test_pipeline_resume_reuses_stage_checkpoints(spark, source_files,
 
 def test_pipeline_releases_stage_caches(spark, source_files, tmp_path):
     """ADVICE r4: every persist() a pipeline run creates (split views,
-    canonicalize entity/nonlit/iri_map and literal-digest tables) must be
+    canonicalize entity/deduped-triple/iri_map tables) must be
     swept once stage 3 lands — long-lived sessions (resume loops, query
     servers) must not accumulate one set of dead cached tables per run.
     Caller-owned caches from before the run stay untouched."""

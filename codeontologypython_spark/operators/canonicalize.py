@@ -9,21 +9,20 @@
   attribute sets (SURVEY §2.4 C3 note)
 - C4 inverse-property materialization: one map-expression projection + union
   replacing owlready2's automatic inverses (extractor.py:35-38)
-- dangling ParameterizedType pruning: a parameterized type whose generic
-  could not be resolved is dropped, matching the reference's
-  generic-individual-None rule (extractor.py:952-961)
+- ParameterizedType settlement, one grouped pass per file: a parameterized
+  type whose generic could not be resolved is dropped, matching the
+  reference's generic-individual-None rule (extractor.py:952-961), and one
+  with no resolved type argument degrades to its bare generic
+  (``is_all_none``, extractor.py:955-961)
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codeontologypython_spark import session, woc
-from codeontologypython_spark.operators.relational import (
-    bounded_fixpoint,
-    reliable_barrier,
-)
 
 WOC = woc.WOC
 
@@ -219,125 +218,103 @@ def materialize_inverses(triples: DataFrame) -> DataFrame:
                     "t.obj_is_literal"))
 
 
-def _without(df: DataFrame, drop: DataFrame) -> DataFrame:
-    """``df`` minus every row whose subj or obj is in ``drop`` (eid). The
-    drop set is tiny (a subset of the type-annotation entities): broadcast
-    it so the anti-joins are map-side."""
-    return (df
-            .join(F.broadcast(drop.withColumnRenamed("eid", "subj")),
+_SETTLED_SCHEMA = "eid string, gen string"
+_TYPE_LINKS = (WOC + "hasType", WOC + "hasArgumentType")
+
+
+def _settle_file(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One file's ParameterizedType forest -> ``(eid, gen)`` rows (see
+    :func:`settle_ptypes`). Entity rows carry a null ``pred``."""
+    ptypes, gens, targs, resolved, links = set(), {}, {}, set(), []
+    for r in pdf.itertuples(index=False):
+        if r.pred is None:
+            ptypes.add(r.subj)
+        elif r.pred == WOC + "hasGenericType":
+            gens.setdefault(r.subj, []).append(r.obj)
+        elif r.pred == WOC + "hasActualTypeArgument":
+            targs.setdefault(r.subj, []).append(r.obj)
+        elif not r.lit:  # a resolved hasType / hasArgumentType
+            links.append((r.subj, r.obj))
+            if r.pred == WOC + "hasArgumentType":
+                resolved.add(r.subj)
+    # degrade: a generic but no resolved type argument -> the bare generic
+    degraded = {p: gens[p] for p in ptypes
+                if p in gens and not resolved.intersection(targs.get(p, ()))}
+    dropped = set(degraded).union(*(targs.get(p, ()) for p in degraded))
+    # prune to the fixpoint: no generic, or no inbound type link left
+    while True:
+        inbound = {o for s, o in links if s not in dropped}
+        bad = {p for p in ptypes - dropped
+               if p not in gens or p not in inbound}
+        if not bad:
+            break
+        dropped |= bad.union(*(targs.get(p, ()) for p in bad))
+    rows = [(p, g) for p, gs in degraded.items() for g in gs]
+    rows += [(e, None) for e in dropped - set(degraded)]
+    return pd.DataFrame(rows, columns=["eid", "gen"])
+
+
+def settle_ptypes(entities: DataFrame, triples: DataFrame) -> DataFrame:
+    """Settle every ParameterizedType the way the reference decides it,
+    locally per annotation (extractor.py:952-961):
+
+    - degrade: a ParameterizedType whose generic resolved but NONE of whose
+      type arguments did is replaced by the bare generic class — the
+      reference links the generic when ``is_all_none(...)``
+      (extractor.py:955-961). Common shape: ``Box[T]`` with ``Box``
+      corpus-local and ``T`` an unresolvable TypeVar. Its TypeArguments go
+      with it;
+    - prune: a ParameterizedType that never resolved a generic
+      (generic-individual-None) or has no inbound hasType/hasArgumentType
+      left — e.g. the annotation subtree of a LOSING field fact after the
+      Stage-2 fold — is dropped with its TypeArguments, repeated until
+      nothing changes (dropping a parent orphans its nested generics).
+
+    Every such forest comes from one file's annotations, so the rules run
+    in ONE ``groupBy(file).applyInPandas`` pass over the type subgraph, the
+    file being the eid prefix before its last ``|`` (eids are
+    ``repo|path|n``). hasGenericType/hasActualTypeArgument/hasArgumentType
+    rows are keyed by their subject's file; hasType rows into a
+    ParameterizedType by their OBJECT's file, since an inherited Field in
+    another file points into its base class's annotation.
+
+    The result, ``(eid, gen)`` — gen set: rewrite hasType/hasArgumentType
+    objects to gen; gen null: drop — is applied to the full stream with one
+    broadcast obj lookup and one broadcast subj anti-join."""
+    ptypes = entities.filter(F.col("kind") == "ParameterizedType")
+
+    def keyed(df, key):
+        return df.select(F.regexp_extract(key, r"^(.*)\|", 1).alias("file"),
+                         "subj", "pred", "obj",
+                         F.col("obj_is_literal").alias("lit"))
+
+    subgraph = (
+        keyed(ptypes.select(F.col("eid").alias("subj"),
+                            F.lit(None).cast("string").alias("pred"),
+                            F.lit(None).cast("string").alias("obj"),
+                            F.lit(None).cast("boolean")
+                            .alias("obj_is_literal")), "subj")
+        .unionByName(keyed(triples.filter(F.col("pred").isin(
+            WOC + "hasGenericType", WOC + "hasActualTypeArgument",
+            WOC + "hasArgumentType")), "subj"))
+        .unionByName(keyed(triples.filter(F.col("pred") == WOC + "hasType")
+                           .join(ptypes.select(F.col("eid").alias("obj")),
+                                 "obj", "left_semi"), "obj")))
+    # eager, not lazy: CLAUDE.md pitfall 10
+    settled = (subgraph.groupBy("file")
+               .applyInPandas(_settle_file, schema=_SETTLED_SCHEMA)
+               .localCheckpoint())
+    lookup = settled.select(F.col("eid").alias("obj"), "gen",
+                            F.lit(True).alias("hit"))
+    return (triples
+            .join(F.broadcast(lookup), "obj", "left")
+            .filter(F.col("hit").isNull()
+                    | (F.col("gen").isNotNull()
+                       & F.col("pred").isin(*_TYPE_LINKS)))
+            .withColumn("obj", F.coalesce("gen", "obj"))
+            .join(F.broadcast(settled.select(F.col("eid").alias("subj"))),
                   "subj", "left_anti")
-            .join(F.broadcast(drop.withColumnRenamed("eid", "obj")),
-                  "obj", "left_anti"))
-
-
-def degrade_argless_ptypes(entities: DataFrame,
-                           triples: DataFrame) -> DataFrame:
-    """A ParameterizedType whose generic resolved but NONE of whose type
-    arguments did degrades to the plain generic class — the reference links
-    the bare generic when ``is_all_none(parameterized_individuals)``
-    (extractor.py:955-961). Common shape: ``Box[T]`` where ``Box`` is
-    corpus-local but ``T`` is an unresolvable TypeVar.
-
-    Single pass suffices for nesting: an inner ParameterizedType is itself a
-    non-literal hasArgumentType object, so its enclosing TypeArgument counts
-    as resolved regardless of the inner one's later rewrite.
-
-    Callers skip it when ``entities`` holds no ParameterizedType
-    (canonicalize_stage reads that from its entity aggregate): its three
-    candidate scans run over the full triple stream."""
-    ptypes = entities.filter(F.col("kind") == "ParameterizedType").select("eid")
-    generic = (triples.filter(F.col("pred") == WOC + "hasGenericType")
-               .select(F.col("subj").alias("eid"), F.col("obj").alias("gen")))
-    targs = (triples.filter(F.col("pred") == WOC + "hasActualTypeArgument")
-             .select(F.col("subj").alias("eid"), F.col("obj").alias("targ")))
-    resolved_args = (triples.filter((F.col("pred") == WOC + "hasArgumentType")
-                                    & ~F.col("obj_is_literal"))
-                     .select(F.col("subj").alias("targ")).distinct())
-    has_resolved_arg = (targs.join(resolved_args, "targ", "left_semi")
-                        .select("eid").distinct())
-    degenerate = (ptypes.join(generic, "eid")
-                  .join(has_resolved_arg, "eid", "left_anti")
-                  .localCheckpoint(eager=False))
-    if degenerate.isEmpty():
-        return triples
-    # rewrite inbound type links to the generic class (tiny map, broadcast)
-    rmap = degenerate.select(F.col("eid").alias("obj"),
-                             F.col("gen").alias("new_obj"))
-    rewritten = (triples
-                 .join(F.broadcast(rmap), "obj", "left")
-                 .withColumn("obj", F.when(
-                     F.col("new_obj").isNotNull()
-                     & F.col("pred").isin(WOC + "hasType",
-                                          WOC + "hasArgumentType"),
-                     F.col("new_obj")).otherwise(F.col("obj")))
-                 .drop("new_obj"))
-    # drop the degenerate subtree (its own triples + its TypeArguments')
-    drop = (degenerate.select("eid")
-            .unionByName(targs.join(degenerate.select("eid"), "eid",
-                                    "left_semi")
-                         .select(F.col("targ").alias("eid")))
-            .distinct())
-    return _without(rewritten, drop)
-
-
-_PTYPE_PRUNE_MAX_ROUNDS = 6
-
-
-def prune_dangling_ptypes(entities: DataFrame, triples: DataFrame,
-                          checkpoint_dir: str | None = None) -> DataFrame:
-    """Drop ParameterizedType entities that (a) never resolved a generic
-    (reference generic-individual-None rule, extractor.py:952-961) or
-    (b) have no inbound hasType/hasArgumentType reference left — e.g. the
-    annotation subtree of a LOSING field fact after the Stage-2 fold — plus
-    their TypeArgument subtrees. Dropping a parent generic orphans its
-    nested generics, so the drop set grows by
-    :func:`relational.bounded_fixpoint` to the (shallow) nesting depth
-    (``_PTYPE_PRUNE_MAX_ROUNDS``; barrier tags ``ptypes_drop_<i>``).
-
-    Callers skip it when ``entities`` holds no ParameterizedType
-    (canonicalize_stage reads that from its entity aggregate); called
-    anyway, its first round finds nothing to drop and it returns
-    ``triples`` unchanged.
-    """
-    ptypes = reliable_barrier(
-        entities.filter(F.col("kind") == "ParameterizedType").select("eid"),
-        checkpoint_dir, "ptypes_init")
-    # rounds read only the 4-predicate subgraph (restricted once); the full
-    # triple stream is anti-joined exactly ONCE at the end (pitfall 12)
-    type_preds = (WOC + "hasGenericType", WOC + "hasActualTypeArgument",
-                  WOC + "hasType", WOC + "hasArgumentType")
-    tp = reliable_barrier(
-        triples.filter(F.col("pred").isin(*type_preds))
-        .select("subj", "pred", "obj", "obj_is_literal"),
-        checkpoint_dir, "ptypes_subgraph")
-
-    def step(_delta, dropped):
-        live_tp = _without(tp, dropped)
-        live = ptypes.join(F.broadcast(dropped), "eid", "left_anti")
-        resolved_generic = (live_tp
-                            .filter(F.col("pred") == WOC + "hasGenericType")
-                            .select(F.col("subj").alias("eid")))
-        inbound = (live_tp
-                   .filter(F.col("pred").isin(WOC + "hasType",
-                                              WOC + "hasArgumentType")
-                           & ~F.col("obj_is_literal"))
-                   .select(F.col("obj").alias("eid")))
-        arg_of = (live_tp
-                  .filter(F.col("pred") == WOC + "hasActualTypeArgument")
-                  .select(F.col("subj").alias("eid"),
-                          F.col("obj").alias("targ")))
-        bad = (live.join(resolved_generic, "eid", "left_anti")
-               .unionByName(live.join(inbound, "eid", "left_anti")))
-        # a bad ptype drops together with its TypeArguments
-        return (bad.join(arg_of, "eid", "left")
-                .select(F.explode(F.array("eid", "targ")).alias("eid"))
-                .filter(F.col("eid").isNotNull()))
-
-    # the empty seed (limit 0) folds the round-0 anti-joins away at planning
-    dropped, rounds = bounded_fixpoint(
-        ptypes.limit(0), step, ["eid"], _PTYPE_PRUNE_MAX_ROUNDS,
-        "ptypes_drop", checkpoint_dir)
-    return _without(triples, dropped) if rounds else triples
+            .select(*triples.columns))
 
 
 def audit_iri_uniqueness(iri_map: DataFrame) -> DataFrame:
@@ -351,7 +328,8 @@ def audit_iri_uniqueness(iri_map: DataFrame) -> DataFrame:
 def canonicalize_stage(entities: DataFrame, all_triples: DataFrame,
                        manifest: DataFrame | None = None,
                        broadcast_iris: bool | None = None) -> DataFrame:
-    """Full Stage 3: prune -> dedup -> IRI hash -> rewrite -> inverses.
+    """Full Stage 3: settle ptypes -> dedup -> IRI hash -> rewrite ->
+    inverses.
 
     ``manifest`` (optional, tiny ``(repo, library, is_by_project)`` table)
     drops the project links of dependency libraries first — see
@@ -363,10 +341,8 @@ def canonicalize_stage(entities: DataFrame, all_triples: DataFrame,
     size takes the same (corpus-scale) physical plan instead of flipping
     strategies across the broadcast threshold mid-measurement.
 
-    This is the stage's one place for plan decisions: one entity aggregate
-    decides whether the ParameterizedType degrade/prune helpers run at all
-    and which IRI-rewrite strategy applies; the helpers never probe their
-    inputs.
+    This is the stage's one place for plan decisions: the entity count
+    decides the IRI-rewrite strategy; the helpers never probe their inputs.
 
     ``entities``, the deduplicated triple table and ``iri_map`` each feed
     2-4 downstream consumers, so they are persist()ed — a materialization
@@ -382,29 +358,17 @@ def canonicalize_stage(entities: DataFrame, all_triples: DataFrame,
     if manifest is not None:
         all_triples = apply_library_manifest(all_triples, manifest)
     entities = dedup_entities(entities).persist()
-    # ONE aggregate job (which also warms the entity persist) answers both
-    # serial gates: whether any ParameterizedType exists (degrade/prune run
-    # only then) AND the entity count that drives the broadcast decision —
-    # iri_map has exactly one row per entity
-    row = entities.agg(
-        F.count("*").alias("n"),
-        F.count(F.when(F.col("kind") == "ParameterizedType", True))
-        .alias("np")).collect()[0]
-    n_entities, n_ptypes = row["n"], row["np"]
-    if n_ptypes:
-        degraded = degrade_argless_ptypes(entities, all_triples)
-        pruned = prune_dangling_ptypes(entities, degraded)
-    else:
-        pruned = all_triples
+    settled = settle_ptypes(entities, all_triples)
     if broadcast_iris is None:
-        broadcast_iris = n_entities <= session._IRI_BROADCAST_MAX_ROWS
+        # iri_map has exactly one row per entity
+        broadcast_iris = entities.count() <= session._IRI_BROADCAST_MAX_ROWS
     # dedup BEFORE IRI hashing: (a) the IRI aggregation then sees each
     # neighbor name / literal value once (duplicate emissions would perturb
     # the hash input), (b) the IRI-rewrite joins and the inverse union
     # process one row per distinct triple. Inverses of distinct forward
     # triples are distinct — only forward predicates are emitted upstream —
     # so no second dedup.
-    deduped = dedup_triples(pruned).persist()
+    deduped = dedup_triples(settled).persist()
     iri_map = compute_iris(entities, deduped,
                            broadcast_entities=broadcast_iris).persist()
     return materialize_inverses(

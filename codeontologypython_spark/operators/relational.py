@@ -148,7 +148,7 @@ def bounded_fixpoint(
     checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, int]:
     """The one bounded growth loop (closures, alias chase, wildcard and
-    import closures, ptype prune, SPARQL ``p+``), the join analog of the
+    import closures, SPARQL ``p+``), the join analog of the
     reference's recursive pointer-chasing (tracking.py).
 
     Round ``i`` calls ``step(delta, acc)`` (``delta``: the previous round's

@@ -81,15 +81,23 @@ def build_kg(
     ``land(stage, build)`` wraps Stage 2 (``"link"``) and Stage 3
     (``"canonicalize"``): ``build()`` computes the stage's frames as a tuple
     (``(resolved, extra_entities)``, then ``(triples,)``), and ``land``
-    returns the frames the build continues with. The default just calls
-    ``build``; run_pipeline lands them as parquet checkpoints or, on resume,
+    returns the frames the build continues with. The default returns the
+    link frames as ``localCheckpoint`` leaves and the final frame as built;
+    run_pipeline lands both stages as parquet checkpoints or, on resume,
     reuses the ones a previous run landed.
     """
     entities, triples, mentions, _ = split_extraction(extracted)
     entities = entities.persist()
     triples = triples.persist()
     mentions = mentions.persist()
-    land = land or (lambda stage, build: build())
+    if land is None:
+        def land(stage, build):
+            # leaves, not the link plan: canonicalize reads each link table
+            # once, and its plans stay shallow enough for the optimizer to
+            # converge within its iteration cap (eager: CLAUDE.md pitfall 10)
+            if stage == "link":
+                return tuple(df.localCheckpoint() for df in build())
+            return build()
     resolved, extra_entities = land("link", lambda: link_stage(
         entities, triples, mentions,
         broadcast_symtab=broadcast_symtab, salt=salt)[:2])

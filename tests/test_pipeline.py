@@ -330,6 +330,68 @@ def test_argless_ptype_degrades_to_generic(spark):
     assert not surviving.isEmpty()
 
 
+def test_ptype_survivors_hand_derived(spark):
+    """Which ParameterizedTypes survive Stage 3, derived by hand:
+
+    - ``f(p: Unknown[Known])``: the generic never resolves, so the ptype and
+      its TypeArgument drop (generic-individual-None, extractor.py:952-961);
+    - ``f(q: Unknown[Box[Box[Known]]])``: the drop cascades 3 deep, each
+      nested ptype losing its only inbound hasArgumentType;
+    - ``Fact.y``: the class-body ``Box[Known]`` loses the field fold to the
+      constructor's ``Box[Other]``, so its subtree drops;
+    - ``Base.x: Box[Known]`` in a.py is inherited by ``Sub`` in b.py: Sub's
+      Field points into a.py's ptype, which survives, shared by both.
+    """
+    from collections import defaultdict
+
+    from codeontologypython_spark.operators.extract import extract_stage
+    from codeontologypython_spark.plans.pipeline import build_kg
+    a = ("class Box:\n    pass\n\n"
+         "class Known:\n    pass\n\n"
+         "class Other:\n    pass\n\n"
+         "class Base:\n    x: Box[Known]\n\n"
+         "class Fact:\n    y: Box[Known]\n\n"
+         "    def __init__(self):\n        self.y: Box[Other] = None\n\n"
+         "def f(p: Unknown[Known], q: Unknown[Box[Box[Known]]]):\n"
+         "    pass\n")
+    b = "from a import Base\n\nclass Sub(Base):\n    pass\n"
+    src = spark.createDataFrame(
+        [("r", "a.py", "c0", "python", a), ("r", "b.py", "c0", "python", b)],
+        ["repo", "path", "commit", "lang", "content"])
+    final = build_kg(extract_stage(src).localCheckpoint()).collect()
+
+    edges, lits = defaultdict(list), {}
+    for r in final:
+        if r["obj_is_literal"]:
+            lits[(r["subj"], r["pred"])] = r["obj"]
+        else:
+            edges[r["subj"]].append((r["pred"], r["obj"]))
+    typed = {kind: {s for s, es in edges.items()
+                    if (woc.RDF_TYPE, WOC + kind) in es}
+             for kind in ("ParameterizedType", "TypeArgument")}
+
+    def render(t):
+        if t not in typed["ParameterizedType"]:
+            return lits.get((t, WOC + "hasSimpleName"))
+        out = edges[t]
+        (gen,) = [o for p, o in out if p == WOC + "hasGenericType"]
+        args = sorted(
+            (int(lits[(ta, WOC + "hasTypeArgumentPosition")]),
+             [render(o) for p, o in edges[ta]
+              if p == WOC + "hasArgumentType"])
+            for p, ta in out if p == WOC + "hasActualTypeArgument")
+        return f"{render(gen)}[{', '.join(','.join(a) for _, a in args)}]"
+
+    annotated = {(lits.get((s, WOC + "hasFullyQualifiedName"), s), render(o))
+                 for s, es in edges.items() for p, o in es
+                 if p == WOC + "hasType" and o in typed["ParameterizedType"]}
+    assert annotated == {("a.Base.x", "Box[Known]"),
+                         ("b.Sub.x", "Box[Known]"),
+                         ("a.Fact.y", "Box[Other]")}
+    assert len(typed["ParameterizedType"]) == 2
+    assert len(typed["TypeArgument"]) == 2
+
+
 def test_vocabulary_conformance(final_triples):
     """SURVEY §1.3: the output graph conforms to the fixed OWL vocabulary —
     every predicate and every rdf:type object is a declared woc/rdf/owl

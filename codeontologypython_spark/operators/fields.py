@@ -12,11 +12,10 @@ tracking.py:796-816 for fields).
 
 Spark form:
 
-- per-class ancestor SUBGRAPHS are assembled relationally (extends-closure
-  join), then C3 runs in an ``applyInPandas`` over each class's own tiny
-  subgraph — hierarchies are shallow, so the per-group work is O(edges);
-  the single shuffle is on the class id, and classes WITHOUT resolved bases
-  (the overwhelming majority of a real corpus) take a no-shuffle fast path;
+- one grouped pass over the extends graph (:func:`hierarchy_pass`) runs C3,
+  the contribution order and the overrides pick in plain Python, to any
+  depth; classes WITHOUT resolved bases (the overwhelming majority of a
+  real corpus) take a no-shuffle fast path;
 - the fold is one ``groupBy(class, field).agg(min/max(struct(...)))`` —
   map-side combinable, one shuffle carrying one row per (class, field);
 - Field/FieldDeclarationStatement individuals are then emitted on EVERY
@@ -42,20 +41,16 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from codeontologypython_spark import woc
-from codeontologypython_spark.operators.relational import transitive_closure
+from codeontologypython_spark.operators.relational import one_group
 
 WOC = woc.WOC
 RDF_TYPE = woc.RDF_TYPE
 
-_OUT_SCHEMA = T.StructType([
-    T.StructField("root", T.StringType(), False),
-    T.StructField("out", T.StringType(), False),    # 'mro' | 'b' | 'c'
-    T.StructField("cls", T.StringType(), False),
-    T.StructField("rank", T.DoubleType(), False),
-])
+# (root, out, cls, rank, repo, commit): out 'mro' | 'b' | 'c' | 'overrides'
+_HIERARCHY_ROWS = ("root string, out string, cls string, rank double, "
+                   "repo string, commit string")
 
 
 def _c3_merge(seqs: list[list[str]]) -> list[str]:
@@ -107,46 +102,25 @@ def _linearize_factory(edges: dict):
     return linearize
 
 
-def _mro_and_contributions(pdf: pd.DataFrame) -> pd.DataFrame:
-    root = pdf["root"].iloc[0]
-    raw_edges: dict[str, list[tuple[int, str]]] = {}
-    info: dict[str, tuple[bool, list]] = {}
-    names: dict[str, str] = {}
-    for r in pdf.itertuples(index=False):
-        if r.kind == "e":
-            # null pos surfaces as NaN in pandas (int column -> float):
-            # `is not None` never catches it and NaN would poison the
-            # sorted() base ordering below — pd.notna covers both
-            raw_edges.setdefault(r.a, []).append(
-                (int(r.pos) if pd.notna(r.pos) else 0, r.b))
-        else:
-            if r.b is not None:
-                names[r.a] = r.b
-            if r.info:
-                has_init, _, delegs = r.info.partition("\x1f")
-                dl = []
-                for d in delegs.split(";"):
-                    if not d:
-                        continue
-                    parts = d.split(":", 2)
-                    dl.append((int(parts[0]), parts[1],
-                               parts[2] if len(parts) > 2 else None))
-                info[r.a] = (has_init == "1", sorted(dl))
-    edges = {k: [d for _, d in sorted(set(v))] for k, v in raw_edges.items()}
+def _root_rows(root: str, edges: dict, info: dict, names: dict,
+               methods: dict) -> list[tuple]:
+    """MRO, contribution and override rows of one class with bases; a fresh
+    memo per root, since on a cyclic hierarchy the cycle guard makes a
+    linearization depend on where the walk entered."""
     linearize = _linearize_factory(edges)
     mro = linearize(root)
 
     rows: list[tuple] = []
     for i, anc in enumerate(mro[1:], 1):
-        rows.append((root, "mro", anc, float(i)))
+        rows.append((root, "mro", anc, float(i), None, None))
 
     # body contributions: reverse-MRO ancestors, then the class itself
     # (tracking.py:827-832)
     rank = 0.0
     for anc in reversed(mro[1:]):
-        rows.append((root, "b", anc, rank))
+        rows.append((root, "b", anc, rank, None, None))
         rank += 1
-    rows.append((root, "b", root, rank))
+    rows.append((root, "b", root, rank, None, None))
     rank += 1
 
     # constructor chain (tracking.py:785-820 + :833-835): effective ctor is
@@ -183,31 +157,83 @@ def _mro_and_contributions(pdf: pd.DataFrame) -> pd.DataFrame:
     if eff is not None:
         expand(eff, 0, set())
     for c in chain:
-        rows.append((root, "c", c, rank))
+        rows.append((root, "c", c, rank, None, None))
         rank += 1
-    return pd.DataFrame(rows, columns=["root", "out", "cls", "rank"])
+
+    # P4 overrides (transformer/__init__.py:54-84 first-match-in-MRO): a
+    # method overrides the least-eid same-name method of the FIRST MRO
+    # ancestor that has one
+    for mname, meid, repo, commit in methods.get(root, ()):
+        for i, anc in enumerate(mro[1:], 1):
+            hits = [e for n, e, _, _ in methods.get(anc, ()) if n == mname]
+            if hits:
+                rows.append((meid, "overrides", min(hits), float(i), repo,
+                             commit))
+                break
+    return rows
 
 
-def mro_and_contributions(classes: DataFrame, extends_edges: DataFrame,
-                          ctorinfo: DataFrame, no_edges: bool) -> DataFrame:
-    """-> (root, out['mro'|'b'|'c'], cls, rank).
+def _hierarchy(pdf: pd.DataFrame) -> list[tuple]:
+    """The extends graph in one group: 'e' rows are edges (a -> b at base
+    position pos), 'n' class names, 'i' ctorinfo, 'm' Methods (a's method
+    c named b)."""
+    raw_edges: dict[str, list[tuple[int, str]]] = {}
+    info: dict[str, tuple[bool, list]] = {}
+    names: dict[str, str] = {}
+    methods: dict[str, set] = {}
+    for r in pdf.itertuples(index=False):
+        if r.kind == "e":
+            # null pos surfaces as NaN in pandas (int column -> float):
+            # `is not None` never catches it and NaN would poison the
+            # sorted() base ordering below — pd.notna covers both
+            raw_edges.setdefault(r.a, []).append(
+                (int(r.pos) if pd.notna(r.pos) else 0, r.b))
+        elif r.kind == "n" and r.b is not None:
+            names[r.a] = r.b
+        elif r.kind == "i" and r.b:
+            has_init, _, delegs = r.b.partition("\x1f")
+            dl = []
+            for d in delegs.split(";"):
+                if not d:
+                    continue
+                parts = d.split(":", 2)
+                dl.append((int(parts[0]), parts[1],
+                           parts[2] if len(parts) > 2 else None))
+            info[r.a] = (has_init == "1", sorted(dl))
+        elif r.kind == "m" and r.b is not None:
+            methods.setdefault(r.a, set()).add((r.b, r.c, r.repo, r.commit))
+    edges = {k: [d for _, d in sorted(set(v))] for k, v in raw_edges.items()}
+    return [row for root in edges
+            for row in _root_rows(root, edges, info, names, methods)]
+
+
+def hierarchy_pass(classes: DataFrame, extends_edges: DataFrame,
+                   ctorinfo: DataFrame, methods: DataFrame,
+                   no_edges: bool) -> DataFrame:
+    """-> ``_HIERARCHY_ROWS``: ``cls`` is ``root``'s MRO ancestor ('mro'),
+    body contributor ('b') or constructor-chain member ('c') at ``rank``;
+    for 'overrides', ``root`` is a Method, ``cls`` the method it overrides,
+    ``repo``/``commit`` the overrider's.
 
     ``extends_edges``: (src, dst, pos) resolved direct extends edges with the
-    base position from the class statement. Classes with no resolved bases
-    take the expression-only fast path (no shuffle, no UDF) — at corpus scale
-    they dominate, so the grouped UDF only ever sees real hierarchies.
-    ``no_edges``: the caller has proved the edge set empty (link_stage: no
-    base mentions at all), so only the fast path is built. False is always
-    correct; an empty edge set then just runs an empty subgraph path.
+    base position from the class statement; ``methods``: (class_eid,
+    method_eid, mname, repo, commit). The edges and the name, ctorinfo and
+    method rows of every class an edge touches go to ONE group
+    (:func:`relational.one_group`): the graph is O(classes), and C3 needs
+    every ancestor however deep. Classes with no resolved bases take the
+    expression-only fast path (no shuffle, no UDF). ``no_edges``: the caller
+    has proved the edge set empty (link_stage: no base mentions at all), so
+    only the fast path is built; False is always correct.
     """
     cls_ids = classes.select(F.col("eid"), F.col("name"))
     ctor = ctorinfo.select(F.col("subj").alias("eid"), F.col("raw").alias("info"))
 
-    roots = extends_edges.select(F.col("src").alias("root")).distinct()
+    # broadcast, no distinct(): the edges fit a broadcast if they fit the
+    # group, and an aggregate adds a shuffle plus injected bloom filters
+    roots = F.broadcast(extends_edges.select(F.col("src").alias("eid")))
 
     # fast path: no resolved bases -> trivial MRO, own-only contributions
-    simple = cls_ids.join(roots.withColumnRenamed("root", "eid"), "eid",
-                          "left_anti")
+    simple = cls_ids.join(roots, "eid", "left_anti")
     simple_has_init = simple.join(ctor.select("eid"), "eid", "left_semi")
     fast = (simple.select(F.col("eid").alias("root"), F.lit("b").alias("out"),
                           F.col("eid").alias("cls"), F.lit(0.0).alias("rank"))
@@ -216,32 +242,29 @@ def mro_and_contributions(classes: DataFrame, extends_edges: DataFrame,
                 F.col("eid").alias("cls"), F.lit(1.0).alias("rank"))))
 
     if no_edges:
-        return fast
+        return fast.select("*", *[F.lit(None).cast("string").alias(c)
+                                  for c in ("repo", "commit")])
 
-    closure = transitive_closure(extends_edges.select("src", "dst"))
-    members = (closure.select(F.col("src").alias("root"),
-                              F.col("dst").alias("member"))
-               .unionByName(roots.select("root",
-                                         F.col("root").alias("member"))))
-    edge_rows = (members
-                 .join(extends_edges.withColumnRenamed("src", "member"),
-                       "member")
-                 .select("root", F.lit("e").alias("kind"),
-                         F.col("member").alias("a"), F.col("dst").alias("b"),
-                         F.col("pos").cast("int"),
-                         F.lit(None).cast("string").alias("info")))
-    class_rows = (members
-                  .join(cls_ids.withColumnRenamed("eid", "member"), "member",
-                        "left")
-                  .join(ctor.withColumnRenamed("eid", "member"), "member",
-                        "left")
-                  .select("root", F.lit("c").alias("kind"),
-                          F.col("member").alias("a"), F.col("name").alias("b"),
-                          F.lit(None).cast("int").alias("pos"), "info"))
-    grouped = (edge_rows.unionByName(class_rows)
-               .groupBy("root").applyInPandas(_mro_and_contributions,
-                                              schema=_OUT_SCHEMA))
-    return grouped.unionByName(fast)
+    touching = F.broadcast(
+        extends_edges.select(F.col("src").alias("a"))
+        .unionByName(extends_edges.select(F.col("dst").alias("a"))))
+    edges = extends_edges.select(
+        F.lit("e").alias("kind"), F.col("src").alias("a"),
+        F.col("dst").alias("b"), F.col("pos").cast("int"))
+    per_class = (
+        cls_ids.select(F.lit("n").alias("kind"), F.col("eid").alias("a"),
+                       F.col("name").alias("b"))
+        .unionByName(ctor.select(F.lit("i").alias("kind"),
+                                 F.col("eid").alias("a"),
+                                 F.col("info").alias("b")))
+        .unionByName(methods.select(
+            F.lit("m").alias("kind"), F.col("class_eid").alias("a"),
+            F.col("mname").alias("b"), F.col("method_eid").alias("c"),
+            "repo", "commit"), allowMissingColumns=True)
+        .join(touching, "a", "left_semi"))
+    graph = edges.unionByName(per_class, allowMissingColumns=True)
+    return one_group(graph, _hierarchy, _HIERARCHY_ROWS).unionByName(
+        fast, allowMissingColumns=True)
 
 
 def materialize_fields(classes: DataFrame, facts_mentions: DataFrame,
@@ -269,7 +292,8 @@ def materialize_fields(classes: DataFrame, facts_mentions: DataFrame,
                      r.getItem(5).alias("desc"),
                      r.getItem(6).alias("src")))
 
-    contrib = contributions.filter(F.col("out").isin("b", "c"))
+    contrib = (contributions.filter(F.col("out").isin("b", "c"))
+               .select("root", "out", "cls", "rank"))
     j = facts.join(contrib.withColumnRenamed("cls", "ccls"),
                    (F.col("cls") == F.col("ccls"))
                    & (F.col("seg") == F.col("out")))

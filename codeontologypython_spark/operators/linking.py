@@ -13,27 +13,27 @@ derived from the Stage-1 entities:
                                  prefixes to canonical fqns (the relational
                                  form of tracking.py:297-327's shrinking
                                  per-step lookups)
-- L4 class hierarchy          -> exact C3 MRO per class over relationally
-                                 assembled subgraphs (operators/fields.py)
-- L5 alias chasing            -> bounded alias-resolution loop augmenting the
-                                 symbol table (max 10 rounds, tracking.py:343)
-- wildcard imports            -> symbol-table exports join with a bounded
-                                 re-export fixpoint (tracking.py:234-255)
-- P4 overrides                -> methods ⋈ MRO ⋈ methods with a min-MRO-rank
-                                 pick (first-match-in-MRO)
+- L4 class hierarchy + P4     -> one grouped pass: exact C3 MRO, field
+  overrides                      contributions and first-match-in-MRO
+                                 overrides (operators/fields.py)
+- L5 alias chasing            -> candidate ⋈ entity rows, then one grouped
+                                 pass of synchronous rounds (max 10,
+                                 tracking.py:343)
+- wildcard imports            -> exports + one grouped re-export BFS (max 5
+                                 hops, tracking.py:234-255)
 - P6 fields                   -> fact fold + materialization in
                                  operators/fields.py (inherited fields)
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codeontologypython_spark import session
 from codeontologypython_spark.operators.relational import (
-    bounded_fixpoint,
-    reliable_barrier,
+    one_group,
     salted_join,
 )
 
@@ -76,8 +76,40 @@ _ALIAS_MAX_ROUNDS = 10
 _WILDCARD_MAX_ROUNDS = 5
 
 
-def chase_aliases(symbol_table: DataFrame, mentions: DataFrame,
-                  checkpoint_dir: str | None = None) -> DataFrame:
+
+def _alias_rounds(pdf: pd.DataFrame) -> list[tuple]:
+    """Rows: (alias, candidate, entity hit or null). In round r an
+    unresolved alias sees the entity rows and the aliases resolved in
+    rounds < r, and takes its least (priority, kind rank, via_alias, eid)
+    hit."""
+    cands: dict[str, set] = {}
+    hits: dict[str, tuple] = {}   # candidate fqn -> its least entity hit
+    for r in pdf.itertuples(index=False):
+        cands.setdefault(r.alias_fqn, set()).add((r.priority, r.cand_fqn))
+        if pd.notna(r.eid):
+            h = (_KIND_RANK.get(r.kind, 99), bool(r.via_alias), r.eid,
+                 r.kind, r.repo)
+            hits[r.cand_fqn] = min(hits.get(r.cand_fqn, h), h)
+    resolved: dict[str, tuple] = {}
+    rows = []
+    for rnd in range(1, _ALIAS_MAX_ROUNDS + 1):
+        new = {}
+        for fqn in cands.keys() - resolved.keys():
+            seen = [(p, *h) for p, c in cands[fqn]
+                    for h in (hits.get(c), resolved.get(c)) if h]
+            if seen:
+                # an alias row: its target's kind rank, eid, kind and repo
+                _p, kr, _via, eid, kind, repo = min(seen)
+                new[fqn] = (kr, True, eid, kind, repo)
+        if not new:
+            break
+        resolved.update(new)
+        rows += [(f, eid, kind, repo, True, rnd)
+                 for f, (_kr, _via, eid, kind, repo) in new.items()]
+    return rows
+
+
+def chase_aliases(symbol_table: DataFrame, mentions: DataFrame) -> DataFrame:
     """L5: module-level ``Alias = Target`` assignments and import BINDINGS
     (``from X import y``, ``import x.y as z``) add symbol-table rows mapping
     the bound FQN to the target's entity, flagged ``via_alias``. A module-
@@ -85,49 +117,24 @@ def chase_aliases(symbol_table: DataFrame, mentions: DataFrame,
     SAME fqn — both rows are kept: imports prefer the variable (the reference
     references the AssignName node, transformer/__init__.py:288-343), type
     mentions chase through to the target (track_type_name_from_scope,
-    tracking.py:330-380). Alias-of-alias chains are flattened by
-    :func:`relational.bounded_fixpoint` over the alias rows
-    (``_ALIAS_MAX_ROUNDS``; barrier tags ``alias_round_<i>``).
+    tracking.py:330-380).
 
-    Precondition: ``symbol_table`` is already materialized (a checkpoint or
-    a persisted table) — every round reads it twice (the entity rows for
-    the hit, its alias rows in the result so far), so an unmaterialized
-    base would re-run its derivation per round per read.
-    Callers skip the chase when there are no alias mentions (link_stage
+    ``symbol_table`` holds entity rows (:func:`build_symbol_table`); one
+    join attaches them to the alias candidates, and one grouped pass
+    (:func:`_alias_rounds`) flattens alias-of-alias chains, one link per
+    round up to ``_ALIAS_MAX_ROUNDS``. Callers skip the chase when there are no alias mentions (link_stage
     reads that from its kind counts); called anyway, it returns the table
-    unchanged after one empty round."""
+    unchanged."""
     cands = mentions.filter(F.col("kind") == "alias").select(
         F.col("subj").alias("alias_fqn"),
         F.posexplode("candidates").alias("priority", "cand_fqn"))
-    cands = reliable_barrier(cands, checkpoint_dir, "alias_cands")
-    entity_rows = symbol_table.filter(~F.col("via_alias"))
-
-    def step(_delta, alias_rows):
-        # best candidate per alias via map-side-combining min(struct)
-        # (pitfall 5): ordering (priority, kind rank, via_alias, eid) is all-
-        # ascending and eid-unique, so the winner equals the old row_number
-        # window's — without the per-round window sort+full-row shuffle
-        symtab = entity_rows.unionByName(alias_rows)
-        return (cands.join(symtab.withColumnRenamed("fqn", "cand_fqn"),
-                           "cand_fqn")
-                .groupBy("alias_fqn")
-                .agg(F.min(F.struct(
-                    F.col("priority"), _kind_rank_col().alias("kr"),
-                    F.col("via_alias"), F.col("eid"), F.col("kind"),
-                    F.col("repo"))).alias("w"))
-                .select(F.col("alias_fqn").alias("fqn"),
-                        F.col("w.eid").alias("eid"),
-                        F.col("w.kind").alias("kind"),
-                        F.col("w.repo").alias("repo"),
-                        F.lit(True).alias("via_alias")))
-
-    # keyed on fqn over the ALIAS rows only: an entity row under the same
-    # fqn does not satisfy the alias — the chased target must land too, or
-    # chains through shadowing variables dead-end
-    alias_rows, _ = bounded_fixpoint(
-        symbol_table.filter(F.col("via_alias")), step, ["fqn"],
-        _ALIAS_MAX_ROUNDS, "alias_round", checkpoint_dir)
-    return entity_rows.unionByName(alias_rows)
+    hits = cands.join(symbol_table.withColumnRenamed("fqn", "cand_fqn"),
+                      "cand_fqn", "left")
+    alias_rows = one_group(
+        hits, _alias_rounds, "fqn string, eid string, kind string, "
+        "repo string, via_alias boolean, round int", _ALIAS_MAX_ROUNDS,
+        "alias chase")
+    return symbol_table.unionByName(alias_rows)
 
 
 def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
@@ -235,10 +242,9 @@ def expand_wildcards(mentions: DataFrame, symbol_table: DataFrame) -> DataFrame:
     """``from m import *`` -> imports edges to every public top-level name
     of m — own definitions AND names m itself imported (astroid's
     wildcard_import_names includes import bindings), following wildcard
-    re-export chains with :func:`relational.bounded_fixpoint`
-    (``_WILDCARD_MAX_ROUNDS``; tracking.py:234-255 + L2 fixpoint). Exports
-    derive from the (chased) symbol table so alias and from-import binding
-    rows export too.
+    re-export chains up to ``_WILDCARD_MAX_ROUNDS`` hops in one grouped
+    pass (tracking.py:234-255 + L2 fixpoint). Exports derive from the
+    (chased) symbol table so alias and from-import binding rows export too.
 
     Callers skip it when there are no wildcard mentions (link_stage reads
     that from its kind counts); called anyway, it returns no rows."""
@@ -281,26 +287,43 @@ def expand_wildcards(mentions: DataFrame, symbol_table: DataFrame) -> DataFrame:
 
     # wildcard re-export edges: module w -> module m when w does
     # `from m import *`; derived from the wildcard mentions of w's own file
-    imp_stmt_modules = (mentions.filter(F.col("kind") == "wildcard")
-                        .withColumn("w_module", module_fqn_col(F.col("path")))
-                        .select(F.col("w_module"),
-                                F.element_at("candidates", 1).alias("src_module"))
-                        .localCheckpoint(eager=False))
-
-    def step(_delta, exports):
-        return (imp_stmt_modules
-                .join(exports.withColumnRenamed("module_fqn", "src_module"),
-                      "src_module")
-                .select(F.col("w_module").alias("module_fqn"), "eid"))
-
-    exports, _ = bounded_fixpoint(
-        top_level.localCheckpoint(eager=False), step, ["module_fqn", "eid"],
-        _WILDCARD_MAX_ROUNDS, "wildcard_round")
+    reexports = (mentions.filter(F.col("kind") == "wildcard")
+                 .select(F.lit("w").alias("kind"),
+                         module_fqn_col(F.col("path")).alias("a"),
+                         F.element_at("candidates", 1).alias("b")))
+    exports = one_group(
+        top_level.select(F.lit("x").alias("kind"),
+                         F.col("module_fqn").alias("a"),
+                         F.col("eid").alias("b")).unionByName(reexports),
+        _reexport_rounds, "module_fqn string, eid string, round int",
+        _WILDCARD_MAX_ROUNDS, "wildcard re-export closure")
 
     return (wild.join(exports, "module_fqn")
             .select("repo", "commit", "subj", "pred",
                     F.col("eid").alias("obj"),
                     F.lit(False).alias("obj_is_literal")))
+
+
+def _reexport_rounds(pdf: pd.DataFrame) -> list[tuple]:
+    """Rows: 'x' a module's own export (a: module, b: eid), 'w' a re-export
+    (a does ``from b import *``). Round r adds the pairs r hops away."""
+    importers: dict[str, set] = {}
+    known: set[tuple[str, str]] = set()
+    for r in pdf.itertuples(index=False):
+        if r.kind == "w":
+            importers.setdefault(r.b, set()).add(r.a)
+        else:
+            known.add((r.a, r.b))
+    rows = [(m, e, 0) for m, e in known]
+    frontier = known
+    for rnd in range(1, _WILDCARD_MAX_ROUNDS + 1):
+        frontier = {(w, e) for m, e in frontier
+                    for w in importers.get(m, ())} - known
+        if not frontier:
+            break
+        known |= frontier
+        rows += [(m, e, rnd) for m, e in frontier]
+    return rows
 
 
 def extends_edges(resolved_triples: DataFrame) -> DataFrame:
@@ -314,56 +337,16 @@ def extends_edges(resolved_triples: DataFrame) -> DataFrame:
                     .cast("int").alias("pos")))
 
 
-def resolve_overrides(entities: DataFrame, triples: DataFrame,
-                      mro: DataFrame) -> DataFrame:
-    """P4 cross-file: method overrides via joins. A method m of class C
-    overrides the FIRST same-name method along C's exact C3 MRO
-    (transformer/__init__.py:54-84 first-match-in-MRO), realized as a
-    min-MRO-rank pick over the (root, anc, rank) MRO table.
-
-    Shape (round-6): only methods of classes that participate in some
-    hierarchy (MRO roots or ancestors) can produce or receive an override,
-    so the hasMethod/Method-name join is semi-join-restricted to that class
-    set FIRST and materialized ONCE (the round-5 form executed the full
-    methods join twice — once per side — over the whole cached triple/entity
-    streams; measured as the dominant link-stage cost). The final pick is a
-    map-side-combining min(struct) instead of a row_number window
-    (pitfall 5; (rank, anc_method) is unique per candidate row, so the
-    winner is identical)."""
-    hier_classes = (mro.select(F.col("root").alias("class_eid"))
-                    .unionByName(mro.select(F.col("cls").alias("class_eid")))
-                    .distinct())
+def class_methods(entities: DataFrame, triples: DataFrame) -> DataFrame:
+    """(class_eid, method_eid, mname, repo, commit) of every Method (a
+    constructor never overrides)."""
     has_method = (triples.filter(F.col("pred") == WOC + "hasMethod")
                   .select(F.col("subj").alias("class_eid"),
-                          F.col("obj").alias("method_eid"))
-                  .join(hier_classes, "class_eid", "left_semi"))
+                          F.col("obj").alias("method_eid")))
     named = entities.filter(F.col("kind") == "Method").select(
         F.col("eid").alias("method_eid"), F.col("name").alias("mname"),
         "repo", "commit")
-    methods = (has_method.join(named, "method_eid")
-               .localCheckpoint(eager=False))
-
-    anc_methods = (methods
-                   .select(F.col("class_eid").alias("anc_class"),
-                           F.col("method_eid").alias("anc_method"),
-                           F.col("mname").alias("anc_mname")))
-    cand = (methods
-            .join(mro.select(F.col("root").alias("class_eid"),
-                             F.col("cls").alias("mro_anc"),
-                             F.col("rank")), "class_eid")
-            .join(anc_methods,
-                  (F.col("mro_anc") == F.col("anc_class"))
-                  & (F.col("mname") == F.col("anc_mname")))
-            .select("repo", "commit", "method_eid", "anc_method", "rank"))
-    best = (cand.groupBy("method_eid")
-            .agg(F.min(F.struct("rank", "anc_method", "repo", "commit"))
-                 .alias("w")))
-    return best.select(
-        F.col("w.repo").alias("repo"), F.col("w.commit").alias("commit"),
-        F.col("method_eid").alias("subj"),
-        F.lit(WOC + "overrides").alias("pred"),
-        F.col("w.anc_method").alias("obj"),
-        F.lit(False).alias("obj_is_literal"))
+    return has_method.join(named, "method_eid")
 
 
 def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
@@ -380,7 +363,7 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
 
     This is the stage's one place for plan decisions: a single kind-count
     job over the mentions decides which helpers run at all (the alias chase,
-    the wildcard expansion, the MRO subgraph path), and one symbol-table
+    the wildcard expansion, the hierarchy pass), and one symbol-table
     aggregate decides broadcast vs salted and whether an alias map can
     exist. The helpers themselves never probe their inputs.
 
@@ -392,8 +375,8 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
     - ``base_triples``: :func:`base_triples` of the input triples.
     """
     from codeontologypython_spark.operators.fields import (
+        hierarchy_pass,
         materialize_fields,
-        mro_and_contributions,
     )
 
     # ONE batched probe job answers every emptiness question of the stage
@@ -441,21 +424,25 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
                                 alias_map=alias_map).localCheckpoint(eager=False)
 
     classes = entities.filter(F.col("kind") == "Class")
-    contrib = mro_and_contributions(
+    hier = hierarchy_pass(
         classes, extends_edges(resolved),
         mentions.filter(F.col("kind") == "ctorinfo"),
+        class_methods(entities, triples),
         # extends edges only arise from resolved 'base' mentions: zero base
         # mentions proves the edge set empty without probing it
-        no_edges=not kind_counts.get("base", 0)).localCheckpoint(eager=False)
-    mro = contrib.filter(F.col("out") == "mro")
-    overrides = resolve_overrides(entities, triples, mro)
+        no_edges=not kind_counts.get("base", 0))
+    overrides = (hier.filter(F.col("out") == "overrides")
+                 .select("repo", "commit", F.col("root").alias("subj"),
+                         F.lit(WOC + "overrides").alias("pred"),
+                         F.col("cls").alias("obj"),
+                         F.lit(False).alias("obj_is_literal")))
 
     is_fact = _is_field_fact()
     ffid_types = (resolved.filter(is_fact).drop("raw")
                   .unionByName(triples.filter(is_fact)))
     f_entities, f_triples = materialize_fields(
         classes, mentions.filter(F.col("kind") == "fieldfact"),
-        contrib, ffid_types)
+        hier, ffid_types)
 
     out = resolved.filter(~is_fact).drop("raw")
     if kind_counts.get("wildcard", 0):

@@ -1095,20 +1095,20 @@ class FileExtractor:
 
     # ---- statement dispatch ----------------------------------------------
 
-    # node type -> handler cache: avoids a string concat + getattr per
-    # statement (the dispatch runs ~500x per file); None caches the
-    # unmodelled-kind fallback, the _UNSET sentinel marks a cold entry
+    # (extractor class, node type) -> handler cache: avoids a string concat
+    # + getattr per statement (the dispatch runs ~500x per file); None
+    # caches the unmodelled-kind fallback, the _UNSET sentinel a cold entry
     _STMT_DISPATCH: dict = {}
     _UNSET = object()
 
     def _extract_stmt(self, stmt, block_eid: str | None) -> list[str]:
         """Extract one statement; return its chain elements (usually one eid;
         try statements contribute several, extract/utils.py:71-98)."""
-        cls = type(stmt)
-        m = FileExtractor._STMT_DISPATCH.get(cls, FileExtractor._UNSET)
+        key = (type(self), type(stmt))
+        m = FileExtractor._STMT_DISPATCH.get(key, FileExtractor._UNSET)
         if m is FileExtractor._UNSET:
-            m = getattr(FileExtractor, "_stmt_" + cls.__name__, None)
-            FileExtractor._STMT_DISPATCH[cls] = m
+            m = getattr(key[0], "_stmt_" + key[1].__name__, None)
+            FileExtractor._STMT_DISPATCH[key] = m
         if m is not None:
             return m(self, stmt, block_eid)
         # unmodelled statement kinds -> plain woc:Statement

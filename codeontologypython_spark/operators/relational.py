@@ -2,10 +2,10 @@
 
 These are the Spark-native replacements for the reference's recursive
 pointer-chasing (SURVEY.md §2.3/§2.4): salted hash joins,
-top-1-per-group windows, the one bounded fixpoint loop, window dedup with
-a deterministic tiebreak. They are exposed directly (and exercised against
-the TPC-H-ish driver tables in ``__spark_entry__.py``) because they ARE the
-engine's operator core.
+top-1-per-group windows, the one bounded fixpoint loop and its local
+one-group form, window dedup with a deterministic tiebreak. They are
+exposed directly (and exercised against the TPC-H-ish driver tables in
+``__spark_entry__.py``) because they ARE the engine's operator core.
 """
 
 from __future__ import annotations
@@ -13,7 +13,8 @@ from __future__ import annotations
 import warnings
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -30,12 +31,13 @@ def reliable_barrier(df: DataFrame, checkpoint_dir: str | None,
     no round overwrites a path an earlier round's DataFrame still reads
     from.
 
-    The local mode is a LAZY checkpoint (``eager=False``): every barrier in
-    the iterative loops is consumed immediately afterwards (an isEmpty
-    probe, the next round's join), so the first action both materializes
-    and pins it — an eager checkpoint would run one extra job per round
-    for the same result (measured 1.5x on the bounded-closure loop).
-    Lineage still truncates at materialization, so plans stay flat.
+    The local mode is ``localCheckpoint(eager=False)``, but under AQE that
+    is only lazy for the plan's FINAL stage: every shuffle-map and broadcast
+    stage runs at the call, one job each, and the next action runs the
+    final stage (a two-aggregate join: 3 jobs at the call and 1 at the
+    first action; with AQE off, 1 and 1). Every loop barrier is consumed at
+    once (an isEmpty probe, the next round's join), so that action is the
+    one that materializes it; lineage truncates there, so plans stay flat.
     """
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=False)
@@ -147,15 +149,17 @@ def bounded_fixpoint(
     tag: str,
     checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, int]:
-    """The one bounded growth loop (closures, alias chase, wildcard and
-    import closures, SPARQL ``p+``), the join analog of the
-    reference's recursive pointer-chasing (tracking.py).
+    """The one bounded distributed growth loop (the import closure,
+    :func:`transitive_closure`, SPARQL ``p+``), the join analog of the
+    reference's recursive pointer-chasing (tracking.py). Graphs of
+    O(classes + modules) run locally instead (:func:`one_group`).
 
     Round ``i`` calls ``step(delta, acc)`` (``delta``: the previous round's
     new rows, ``seed`` in round 0; ``acc``: everything so far), keeps the
-    least row per ``key`` not yet in ``acc``, and barriers it lazily under
-    tag ``f"{tag}_{i}"`` (:func:`reliable_barrier`): the emptiness probe
-    that ends the loop is the job that materializes it. Returns
+    least row per ``key`` not yet in ``acc``, and barriers it under tag
+    ``f"{tag}_{i}"`` (:func:`reliable_barrier`: its shuffle stages run at
+    once, and the emptiness probe that ends the loop runs its final
+    stage). Returns
     ``(seed ∪ new rows, rounds that added rows)``; when all ``max_rounds``
     added rows, a ``RuntimeWarning`` names the loop and its bound.
     """
@@ -185,6 +189,30 @@ def bounded_fixpoint(
     return acc, max_rounds
 
 
+def one_group(df: DataFrame, fn: Callable[[pd.DataFrame], list],
+              schema: str, bound: int | None = None,
+              what: str = "") -> DataFrame:
+    """``fn(pdf) -> rows`` over ALL of ``df`` in ONE ``applyInPandas``
+    group, eagerly checkpointed: a fixpoint over an O(classes + modules)
+    graph, run locally (CLAUDE.md pitfalls 10, 12). With a ``bound``, a
+    row's last column is the round that added it, and rows from round
+    ``bound`` make it warn (``RuntimeWarning`` naming ``what``; the last
+    round is read by ``observe`` on the checkpoint's own job)."""
+    cols = [c.split()[0] for c in schema.split(",")]
+    out = (df.withColumn("g", F.lit(0)).groupBy("g")
+           .applyInPandas(lambda pdf: pd.DataFrame(fn(pdf), columns=cols),
+                          schema=schema))
+    if bound is None:
+        return out.localCheckpoint()
+    obs = Observation()
+    out = out.observe(obs, F.max("round").alias("last")).localCheckpoint()
+    if obs.get["last"] == bound:
+        warnings.warn(f"{what} reached its bound of {bound} rounds with rows "
+                      "still being added; result truncated", RuntimeWarning,
+                      stacklevel=3)
+    return out.drop("round")
+
+
 _TC_MAX_ROUNDS = 10
 
 
@@ -198,8 +226,7 @@ def transitive_closure(
     the reference's recursive ancestor walks (SURVEY L4): returns
     (src, dst, depth) with depth the minimum path length, via
     :func:`bounded_fixpoint` (``_TC_MAX_ROUNDS``; barrier tags
-    ``tc_round_<i>``). Each round is one shuffle join; Python class DAGs are
-    shallow so the loop exits after 2-4 rounds.
+    ``tc_round_<i>``), one shuffle join per round.
     """
     seed = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
                         F.lit(1).alias("depth"))

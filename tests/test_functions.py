@@ -243,7 +243,6 @@ def test_iterative_loops_parquet_checkpoint_mode(spark, tmp_path):
     import os
 
     from codeontologypython_spark.functions.dedup import near_dup_clusters
-    from codeontologypython_spark.operators.linking import chase_aliases
     from codeontologypython_spark.operators.relational import (
         transitive_closure,
     )
@@ -271,23 +270,6 @@ def test_iterative_loops_parquet_checkpoint_mode(spark, tmp_path):
                                        checkpoint_dir=d2).collect()}
     assert base == ckpt
     assert any(n.startswith("cc_round_") for n in os.listdir(d2))
-
-    # alias chase: two-hop alias chain flattens in both modes
-    symtab = spark.createDataFrame(
-        [("m.target", "E1", "Class", "r", False)],
-        "fqn string, eid string, kind string, repo string, via_alias boolean")
-    mentions = spark.createDataFrame(
-        [("r", "a.one", "alias", ["m.target"]),
-         ("r", "a.two", "alias", ["a.one"])],
-        "repo string, subj string, kind string, candidates array<string>")
-    d3 = str(tmp_path / "al")
-    base = {(r["fqn"], r["eid"], r["via_alias"])
-            for r in chase_aliases(symtab, mentions).collect()}
-    ckpt = {(r["fqn"], r["eid"], r["via_alias"])
-            for r in chase_aliases(symtab, mentions,
-                                   checkpoint_dir=d3).collect()}
-    assert base == ckpt and ("a.two", "E1", True) in ckpt
-    assert any(n.startswith("alias_round_") for n in os.listdir(d3))
 
 
 def _closure_fixpoint(edges, max_rounds):

@@ -2,6 +2,8 @@
 wildcard expansion, extends closure, overrides, skew-salted join equivalence,
 lazy corpus pruning."""
 
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -99,14 +101,16 @@ def test_exact_mro_rank(linked, extracted):
     """C3 MRO rows: Puppy -> [Dog(1), Animal(2)]."""
     from codeontologypython_spark.operators import fields as flds
     from codeontologypython_spark.operators.linking import (
-        build_symbol_table, chase_aliases, extends_edges, resolve_mentions)
+        build_symbol_table, chase_aliases, class_methods, extends_edges,
+        resolve_mentions)
     e = extracted
     symtab = chase_aliases(build_symbol_table(e["entities"]), e["mentions"])
     resolved = resolve_mentions(e["mentions"], symtab)
     classes = e["entities"].filter(F.col("kind") == "Class")
-    contrib = flds.mro_and_contributions(
+    contrib = flds.hierarchy_pass(
         classes, extends_edges(resolved),
-        e["mentions"].filter(F.col("kind") == "ctorinfo"), no_edges=False)
+        e["mentions"].filter(F.col("kind") == "ctorinfo"),
+        class_methods(e["entities"], e["triples"]), no_edges=False)
     cls = {r["fqn"]: r["eid"] for r in classes.collect() if r["fqn"]}
     mro = {(r["root"], r["cls"]): r["rank"] for r in
            contrib.filter(F.col("out") == "mro").collect()}
@@ -192,6 +196,180 @@ def test_alias_chase(spark, extracted):
     rows = {r["fqn"]: r["eid"] for r in out.collect()}
     assert rows["mod.A1"] == "E1"
     assert rows["mod.A2"] == "E1"  # chained alias flattened
+
+
+_GT_FILES = {
+    "gtpkg/__init__.py": "",
+    # diamond across two files: C3 puts C before A
+    "gtpkg/shapes.py": (
+        "class A:\n"
+        "    def m(self): pass\n"
+        "    def n(self): pass\n"
+        "class B(A):\n"
+        "    def m(self): pass\n"),
+    "gtpkg/diamond.py": (
+        "from gtpkg.shapes import A, B\n"
+        "class C(A):\n"
+        "    def m(self): pass\n"
+        "    def n(self): pass\n"
+        "class D(B, C):\n"
+        "    def m(self): pass\n"
+        "    def n(self): pass\n"),
+    # named Base.__init__ delegation
+    "gtpkg/ctor.py": (
+        "CALLS = []\n"
+        "class Base:\n"
+        "    def __init__(self):\n"
+        "        self.x = 1\n"
+        "        CALLS.append('Base')\n"
+        "    def close(self): pass\n"
+        "class Child(Base):\n"
+        "    def __init__(self):\n"
+        "        Base.__init__(self)\n"
+        "        self.y = 2\n"
+        "        CALLS.append('Child')\n"
+        "    def close(self): pass\n"),
+    # a 14-class single-inheritance chain, split across two files
+    "gtpkg/chain_a.py": "class C0:\n    def m(self): pass\n" + "".join(
+        f"class C{i}(C{i - 1}):\n    pass\n" for i in range(1, 7)),
+    "gtpkg/chain_b.py": "from gtpkg.chain_a import C6\n" + "".join(
+        f"class C{i}(C{i - 1}):\n    pass\n" for i in range(7, 13))
+        + "class C13(C12):\n    def m(self): pass\n",
+}
+
+
+def test_hierarchy_matches_cpython(spark, tmp_path, monkeypatch):
+    """Ground truth from the interpreter: the MRO rows of every class equal
+    its ``__mro__`` (without ``object``), every overrides row names the
+    first same-name method along ``__mro__``, and Child's constructor chain
+    is the order its ``__init__`` bodies finish in. The 14-class chain puts
+    C0 13 bases above C13."""
+    import importlib
+
+    from codeontologypython_spark.operators import fields as flds
+    from codeontologypython_spark.operators.extract import (
+        extract_stage, split_extraction)
+    from codeontologypython_spark.schemas import SOURCE_FILES
+
+    for rel, text in _GT_FILES.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(text)
+    monkeypatch.syspath_prepend(str(tmp_path))
+    classes_py = {}
+    for rel in _GT_FILES:
+        mod = importlib.import_module(
+            rel[:-3].replace("/", ".").removesuffix(".__init__"))
+        classes_py.update({f"{c.__module__}.{c.__qualname__}": c
+                           for c in vars(mod).values()
+                           if isinstance(c, type)
+                           and c.__module__ == mod.__name__})
+    ctor = importlib.import_module("gtpkg.ctor")
+    ctor.Child()
+    for name in [m for m in sys.modules if m.split(".")[0] == "gtpkg"]:
+        monkeypatch.delitem(sys.modules, name)
+
+    src = spark.createDataFrame(
+        [("r", rel, "c0", "python", text) for rel, text in _GT_FILES.items()],
+        schema=SOURCE_FILES)
+    e, t, m, _ = split_extraction(extract_stage(src).localCheckpoint())
+    resolved, _, _ = linking.link_stage(e, t, m)
+    ents = {r["eid"]: r for r in e.collect()}
+    fqn = {eid: r["fqn"] for eid, r in ents.items()}
+    symtab = linking.chase_aliases(linking.build_symbol_table(e), m)
+    classes = e.filter(F.col("kind") == "Class")
+    hier = flds.hierarchy_pass(
+        classes, linking.extends_edges(linking.resolve_mentions(m, symtab)),
+        m.filter(F.col("kind") == "ctorinfo"), linking.class_methods(e, t),
+        no_edges=False).collect()
+
+    def ranked(out):
+        by_root = {}
+        for r in sorted((r for r in hier if r["out"] == out),
+                        key=lambda r: r["rank"]):
+            by_root.setdefault(fqn[r["root"]], []).append(fqn[r["cls"]])
+        return by_root
+
+    mro = ranked("mro")
+    assert {c: mro.get(c, []) for c in classes_py} == {
+        c: [f"{a.__module__}.{a.__qualname__}" for a in k.__mro__[1:-1]]
+        for c, k in classes_py.items()}
+    assert len(mro["gtpkg.chain_b.C13"]) == 13
+
+    expected = {}
+    for c, k in classes_py.items():
+        for name, v in vars(k).items():
+            if callable(v) and name != "__init__":
+                anc = next((a for a in k.__mro__[1:-1] if name in vars(a)),
+                           None)
+                if anc is not None:
+                    expected[f"{c}.{name}"] = (
+                        f"{anc.__module__}.{anc.__qualname__}.{name}")
+    method = {r["obj"]: f'{fqn[r["subj"]]}.{ents[r["obj"]]["name"]}'
+              for r in t.filter(F.col("pred") == WOC + "hasMethod").collect()}
+    got = {method[r["subj"]]: method[r["obj"]] for r in
+           resolved.filter(F.col("pred") == WOC + "overrides").collect()}
+    assert got == expected
+    assert got["gtpkg.chain_b.C13.m"] == "gtpkg.chain_a.C0.m"
+
+    assert [c.rsplit(".", 1)[-1] for c in ranked("c")["gtpkg.ctor.Child"]
+            ] == ctor.CALLS
+
+
+def _alias_mentions(spark, aliases):
+    from codeontologypython_spark.schemas import MENTIONS
+    return spark.createDataFrame(
+        [("r", "m.py", "c0", fqn, "", "alias", cands, cands[0])
+         for fqn, cands in aliases], schema=MENTIONS)
+
+
+def _entity_symtab(spark, fqns):
+    return spark.createDataFrame(
+        [(fqn, fqn.rsplit(".", 1)[-1], "Class", "r", False) for fqn in fqns],
+        ["fqn", "eid", "kind", "repo", "via_alias"])
+
+
+def test_alias_rounds_see_only_earlier_rounds(spark):
+    """X's candidates are [A1 (priority 0), E (priority 1)], and A1 is an
+    alias that resolves in the first round. A round sees the aliases of
+    EARLIER rounds only, so X resolves to E in that same first round; an
+    in-place update would pick A1's target T."""
+    st = _entity_symtab(spark, ["m.T", "m.E"])
+    mentions = _alias_mentions(spark, [("m.A1", ["m.T"]),
+                                       ("m.X", ["m.A1", "m.E"])])
+    rows = {r["fqn"]: r["eid"] for r in
+            linking.chase_aliases(st, mentions)
+            .filter(F.col("via_alias")).collect()}
+    assert rows == {"m.A1": "T", "m.X": "E"}
+
+
+def test_alias_chain_stops_at_bound_and_warns(spark):
+    """A chain of 11 aliases (A1 -> T, A<i> -> A<i-1>) needs 11 rounds: the
+    chase resolves A1..A10 in its 10 rounds, leaves A11 out and warns."""
+    st = _entity_symtab(spark, ["m.T"])
+    mentions = _alias_mentions(
+        spark, [("m.A1", ["m.T"])]
+        + [(f"m.A{i}", [f"m.A{i - 1}"]) for i in range(2, 12)])
+    with pytest.warns(RuntimeWarning, match="bound of 10"):
+        rows = {r["fqn"]: r["eid"] for r in
+                linking.chase_aliases(st, mentions)
+                .filter(F.col("via_alias")).collect()}
+    assert rows == {f"m.A{i}": "T" for i in range(1, 11)}
+
+
+def test_wildcard_reexport_chain_stops_at_bound_and_warns(spark):
+    """m0 defines X and m<i> does ``from m<i-1> import *`` for i = 1..7.
+    X is 6 hops from m6, one more than the 5 re-export hops allowed: the
+    statements of m1..m6 (importing m0..m5) import X, the one of m7
+    (importing m6) does not, and the pass warns."""
+    from codeontologypython_spark.schemas import MENTIONS
+    st = _entity_symtab(spark, ["m0.X"])
+    mentions = spark.createDataFrame(
+        [("r", f"m{i}.py", "c0", f"stmt{i}", WOC + "imports", "wildcard",
+          [f"m{i - 1}"], f"m{i - 1}") for i in range(1, 8)], schema=MENTIONS)
+    with pytest.warns(RuntimeWarning, match="bound of 5"):
+        got = {(r["subj"], r["obj"]) for r in
+               linking.expand_wildcards(mentions, st).collect()}
+    assert got == {(f"stmt{i}", "X") for i in range(1, 7)}
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -321,7 +499,7 @@ def test_salted_link_stage_equals_broadcast(extracted, monkeypatch):
 
 def test_link_stage_without_alias_wildcard_or_base_mentions(spark):
     """A corpus with no alias, wildcard or base mentions: link_stage skips
-    the alias chase, the wildcard expansion and the MRO subgraph path on its
+    the alias chase, the wildcard expansion and the hierarchy pass on its
     kind counts alone. It must still link, emit no extends/overrides, and
     materialize the class's own-body Field individuals."""
     from codeontologypython_spark.operators.extract import (

@@ -437,6 +437,29 @@ def test_no_invokes_ever_emitted():
     assert _entity(e, "ExecutableInvocationExpression") is not None
 
 
+def test_stmt_handler_resolves_on_subclass():
+    """An extractor subclass that overrides one _stmt_* handler gets its
+    override, even after the base class has dispatched that node type, and
+    the base class keeps its own handler afterwards."""
+    src = "import os\nx = 1\n"
+
+    class PlainImports(FileExtractor):
+        def _stmt_Import(self, stmt, block_eid):
+            return [self._stmt_base(stmt, "Statement", "Stmt", block_eid)]
+
+    def run(cls):
+        fx = cls("r", "m.py", "c0", src)
+        fx.run()
+        return fx.entities
+
+    before = run(FileExtractor)
+    sub = run(PlainImports)
+    assert _entity(before, "ImportStatement") is not None
+    assert _entity(sub, "ImportStatement") is None
+    assert _entity(sub, "Statement") is not None
+    assert run(FileExtractor) == before
+
+
 def test_broken_file_warn_and_skip():
     e, t, m, err = extract_file("r", "b.py", "c0", "def oops(:\n")
     assert err is not None and err.startswith("parse:")

@@ -31,7 +31,7 @@ _IMPORTS_SCHEMA = T.StructType([
 
 def _imports_only(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Cheap per-file scan: just the import targets (absolute FQNs)."""
-    from codeontologypython_spark.operators.pyfile import module_fqn_of_path
+    from codeontologypython_spark.operators.pyfile import import_from_module
 
     for pdf in batches:
         rows = []
@@ -40,23 +40,12 @@ def _imports_only(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 tree = ast.parse(content)
             except (SyntaxError, ValueError, RecursionError):
                 continue
-            fqn = module_fqn_of_path(path)
             for node in ast.walk(tree):
                 if isinstance(node, ast.Import):
                     for a in node.names:
                         rows.append((repo, path, a.name))
                 elif isinstance(node, ast.ImportFrom):
-                    if node.level == 0:
-                        base = node.module or ""
-                    else:
-                        parts = fqn.split(".")
-                        if not path.endswith("__init__.py"):
-                            parts = parts[:-1]
-                        if node.level > 1:
-                            parts = parts[: len(parts) - (node.level - 1)]
-                        base = ".".join(parts)
-                        if node.module:
-                            base = f"{base}.{node.module}" if base else node.module
+                    base = import_from_module(path, node.level, node.module)
                     if base:
                         rows.append((repo, path, base))
                         for a in node.names:

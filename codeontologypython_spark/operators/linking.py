@@ -74,7 +74,8 @@ def build_symbol_table(entities: DataFrame) -> DataFrame:
 # alias-of-alias chain bound, as the reference's tracking.py:343
 _ALIAS_MAX_ROUNDS = 10
 _WILDCARD_MAX_ROUNDS = 5
-
+# link_stage's probe key for the symbol-table entity rows
+_SYMBOLS = "<symbol table>"
 
 
 def _alias_rounds(pdf: pd.DataFrame) -> list[tuple]:
@@ -144,9 +145,10 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
     """L1/L2/L3: resolve candidate FQN lists to entity ids -> triples.
 
     Candidates are best-first; the join keeps the best hit per mention via a
-    min(struct) aggregate keyed by the mention's own columns. The symbol table is broadcast when small (north_star); for
-    huge symbol tables set ``broadcast_symtab=False`` and a ``salt`` to defuse
-    hub-symbol skew with :func:`salted_join`.
+    min(struct) aggregate keyed by the mention's own columns. The symbol
+    table is broadcast when small (north_star); with
+    ``broadcast_symtab=False`` the join shuffles, salted by ``salt`` (0 or
+    1: unsalted) with :func:`salted_join` to defuse hub-symbol skew.
 
     ``alias_map`` (alias_fqn -> canon_fqn) enables the L3 suffix-shrinking
     second round (tracking.py:297-327): a dotted candidate that missed is
@@ -170,9 +172,8 @@ def resolve_mentions(mentions: DataFrame, symbol_table: DataFrame,
     def join_st(probe):
         if broadcast_symtab:
             return probe.join(F.broadcast(st), "fqn")
-        if salt > 1:
-            return salted_join(probe, st, "fqn", salt=salt)
-        return probe.join(st, "fqn")
+        # salt 1 is the plain shuffle join
+        return salted_join(probe, st, "fqn", salt=max(salt, 1))
 
     joined = join_st(m)
     if alias_map is not None:
@@ -361,11 +362,12 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
     "broadcast of the project-level symbol table AND salted hash joins to
     defuse skew").
 
-    This is the stage's one place for plan decisions: a single kind-count
-    job over the mentions decides which helpers run at all (the alias chase,
-    the wildcard expansion, the hierarchy pass), and one symbol-table
-    aggregate decides broadcast vs salted and whether an alias map can
-    exist. The helpers themselves never probe their inputs.
+    This is the stage's one place for plan decisions, all taken from ONE
+    probe job: its mention kind counts decide which helpers run at all (the
+    alias chase, the wildcard expansion, the hierarchy pass), and its
+    symbol-table entity rows plus the alias mentions bound the chased symbol
+    table for broadcast vs salted. The helpers themselves never probe their
+    inputs.
 
     Returns ``(resolved, extra_entities, base_triples)``:
     - ``resolved``: mention-resolution + override + wildcard + Field triples
@@ -379,43 +381,38 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
         materialize_fields,
     )
 
-    # ONE batched probe job answers every emptiness question of the stage
-    # (a per-helper probe is a separate full mention-stream job — a fixed
-    # serial cost that dominates small-corpus link walls)
-    kind_counts = {r["kind"]: r["count"]
-                   for r in mentions.groupBy("kind").count().collect()}
-    # the symbol table feeds EVERY downstream consumer (the via-alias count,
-    # the alias map, the resolution join, wildcard exports); without a
-    # materialization each of those re-executes its whole derivation —
-    # entity-table scans plus all chase rounds — once per use (measured as
-    # the dominant Stage-2 cost on dense corpora)
+    # the symbol table feeds every downstream consumer (the alias chase,
+    # the resolution join, the alias map, wildcard exports); materialized
+    # once, by the probe job below, so none re-derives it from the entities
     symtab = build_symbol_table(entities).localCheckpoint(eager=False)
-    if kind_counts.get("alias", 0):
-        symtab = chase_aliases(symtab, mentions)
-    # one aggregate answers BOTH serial gates: total rows (broadcast-vs-salted
-    # auto) and via-alias rows (whether an alias map can exist at all)
-    via_counts = {bool(r["via_alias"]): r["count"]
-                  for r in symtab.groupBy("via_alias").count().collect()}
+    # ONE probe job answers every plan question of the stage (a probe per
+    # question is a separate job, a fixed serial cost that dominates
+    # small-corpus link walls): the mention kind counts, and the symbol-table
+    # entity rows under a key no mention kind uses
+    counts = {r["kind"]: r["count"] for r in
+              mentions.select("kind")
+              .unionByName(symtab.select(F.lit(_SYMBOLS).alias("kind")))
+              .groupBy("kind").count().collect()}
+    n_alias = counts.get("alias", 0)
+    # a bound on the chased table: the chase adds at most one row per alias
+    n_sym_max = counts.get(_SYMBOLS, 0) + n_alias
     if broadcast_symtab == "auto":
-        n_sym = sum(via_counts.values())
-        if n_sym > session._AUTO_BROADCAST_MAX_ROWS:
+        if n_sym_max > session._AUTO_BROADCAST_MAX_ROWS:
             broadcast_symtab, salt = False, (salt or session._AUTO_SALT)
         else:
             broadcast_symtab = True
     # alias map for the L3 suffix round: the chased alias/binding rows,
-    # mapped to their target entity's canonical fqn. The miss-round costs a
-    # materialization of the candidate join, so skip it entirely when no
-    # alias resolved (common for corpora whose imports are all external)
+    # mapped to their target entity's canonical fqn. Built whenever the
+    # chase ran; when every alias names an external module it is empty and
+    # rewrites nothing
     alias_map = None
-    if via_counts.get(True, 0):
+    if n_alias:
+        symtab = chase_aliases(symtab, mentions)
         canon = (entities.filter(F.col("fqn").isNotNull())
                  .select("eid", F.col("fqn").alias("canon_fqn")))
         alias_map = (symtab.filter(F.col("via_alias")).join(canon, "eid")
                      .filter(F.col("fqn") != F.col("canon_fqn"))
-                     .select(F.col("fqn").alias("alias_fqn"), "canon_fqn")
-                     .localCheckpoint(eager=False))  # consumed by isEmpty + miss round
-        if alias_map.isEmpty():
-            alias_map = None
+                     .select(F.col("fqn").alias("alias_fqn"), "canon_fqn"))
     # resolved feeds several consumers (edges, overrides, fields, output):
     # materialize once so the candidate-join isn't re-executed per consumer
     resolved = resolve_mentions(mentions, symtab,
@@ -430,7 +427,7 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
         class_methods(entities, triples),
         # extends edges only arise from resolved 'base' mentions: zero base
         # mentions proves the edge set empty without probing it
-        no_edges=not kind_counts.get("base", 0))
+        no_edges=not counts.get("base", 0))
     overrides = (hier.filter(F.col("out") == "overrides")
                  .select("repo", "commit", F.col("root").alias("subj"),
                          F.lit(WOC + "overrides").alias("pred"),
@@ -445,7 +442,7 @@ def link_stage(entities: DataFrame, triples: DataFrame, mentions: DataFrame,
         hier, ffid_types)
 
     out = resolved.filter(~is_fact).drop("raw")
-    if kind_counts.get("wildcard", 0):
+    if counts.get("wildcard", 0):
         out = out.unionByName(expand_wildcards(mentions, symtab))
     out = out.unionByName(overrides).unionByName(f_triples)
     return out, f_entities, base_triples(triples)

@@ -69,6 +69,28 @@ def module_fqn_of_path(path: str) -> str:
     return ".".join(parts)
 
 
+def import_from_module(path: str, level: int,
+                       module: str | None) -> str | None:
+    """The absolute module named by ``from <level dots><module> import ...``
+    in the file at ``path``; ``None`` when ``level`` climbs above the top-level
+    package (CPython raises ImportError: beyond the top-level package, or no
+    known parent package for a top-level module).
+
+    ``pkg/a/b.py`` sits in package ``pkg.a`` (``__init__`` modules are their
+    own package): level 1 names ``pkg.a``, level 2 ``pkg``, level 3 nothing.
+    """
+    if level == 0:
+        return module or ""
+    package = module_fqn_of_path(path).split(".")
+    if not path.endswith("__init__.py"):
+        package = package[:-1]
+    package = [p for p in package if p]
+    if level > len(package):
+        return None
+    base = ".".join(package[:len(package) - level + 1])
+    return f"{base}.{module}" if module else base
+
+
 def library_of_path(path: str) -> str:
     """Library = top-level importable root (explore/__init__.py:261-274)."""
     fqn = module_fqn_of_path(path)
@@ -1135,7 +1157,10 @@ class FileExtractor:
 
     def _stmt_ImportFrom(self, stmt: ast.ImportFrom, block_eid):
         eid = self._stmt_base(stmt, "ImportStatement", "Import", block_eid)
-        base = self._resolve_from_module(stmt)
+        base = import_from_module(self.path, stmt.level, stmt.module)
+        if base is None:
+            # a relative import above the top-level package binds nothing
+            return [eid]
         at_module = self._scopes[-1].kind == "module"
         for alias in stmt.names:
             if alias.name == "*":
@@ -1154,18 +1179,6 @@ class FileExtractor:
                 self.mention(f"{self.module_fqn}.{local}", "", "alias",
                              [target], alias.name)
         return [eid]
-
-    def _resolve_from_module(self, stmt: ast.ImportFrom) -> str:
-        if stmt.level == 0:
-            return stmt.module or ""
-        # relative import: strip (level) components from this module's fqn
-        # (__init__ modules count as the package itself)
-        parts = self.module_fqn.split(".")
-        if not self.path.endswith("__init__.py"):
-            parts = parts[:-1]
-        parts = parts[: len(parts) - (stmt.level - 1)] if stmt.level > 1 else parts
-        base = ".".join(parts)
-        return f"{base}.{stmt.module}" if stmt.module else base
 
     # -- class definitions (extractor.py:220-276, individuals.py:537-556) --
 

@@ -7,13 +7,14 @@ Stages (serializer.py:86-117 reordered for dataflow purity):
   1. extract  — mapInArrow per-file extraction       (P1, P3-P11)
   2. link     — symbol-table joins                   (L1-L7, P4)
   3. canonical— IRI hashing + dedup + inverses       (C1, C3, C4)
-  4. materialize — partitioned triple table + NT sink (S6)
+  4. materialize — NT sink over the landed triple table (S6)
 
 Stages 2-3 are :func:`build_kg`, the one whole-KG build path; run_pipeline
-only adds checkpoints, lineage and resume around it. Each stage lands in
-``<workdir>/stageN_*`` parquet. Resume is repo-granular: completed repos
-are read from the stage-1 checkpoint and anti-joined out of the input, so a
-killed run redoes only unfinished repos.
+only adds checkpoints, lineage and resume around it. Stages 1-2 land in
+``<workdir>/stageN_*`` parquet; Stage 3 lands once, as the repo-bucketed
+``<workdir>/triple_table`` that the N-Triples sink then reads. Resume is
+repo-granular: completed repos are read from the stage-1 checkpoint and
+anti-joined out of the input, so a killed run redoes only unfinished repos.
 """
 
 from __future__ import annotations
@@ -66,8 +67,6 @@ def _append_lineage(spark: SparkSession, lineage_path: str, stage: str,
 def build_kg(
     extracted: DataFrame,
     manifest: DataFrame | None = None,
-    broadcast_symtab: bool | str = "auto",
-    salt: int = 0,
     land=None,
 ) -> DataFrame:
     """Stages 2-3: the Stage-1 record stream -> canonical triples. The one
@@ -81,10 +80,11 @@ def build_kg(
     ``land(stage, build)`` wraps Stage 2 (``"link"``) and Stage 3
     (``"canonicalize"``): ``build()`` computes the stage's frames as a tuple
     (``(resolved, extra_entities)``, then ``(triples,)``), and ``land``
-    returns the frames the build continues with. The default returns the
-    link frames as ``localCheckpoint`` leaves and the final frame as built;
-    run_pipeline lands both stages as parquet checkpoints or, on resume,
-    reuses the ones a previous run landed.
+    returns the frames the build continues with; the frame ``land`` returns
+    for Stage 3 is the result. The default returns the link frames as
+    ``localCheckpoint`` leaves and the final frame as built; run_pipeline
+    lands Stage 2 as parquet checkpoints and Stage 3 as the triple table,
+    or, on resume, reuses the ones a previous run landed.
     """
     entities, triples, mentions, _ = split_extraction(extracted)
     entities = entities.persist()
@@ -99,8 +99,7 @@ def build_kg(
                 return tuple(df.localCheckpoint() for df in build())
             return build()
     resolved, extra_entities = land("link", lambda: link_stage(
-        entities, triples, mentions,
-        broadcast_symtab=broadcast_symtab, salt=salt)[:2])
+        entities, triples, mentions)[:2])
     (final,) = land("canonicalize", lambda: (canonicalize_stage(
         entities.unionByName(extra_entities),
         base_triples(triples).unionByName(resolved),
@@ -115,16 +114,15 @@ def run_pipeline(
     resume: bool = False,
     root_repos: list[str] | None = None,
     write_nt: bool = True,
-    broadcast_symtab: bool | str = "auto",
-    salt: int = 0,
     manifest: DataFrame | None = None,
 ) -> PipelineResult:
     t0 = time.time()
     # every stage cache (split views, link barriers, canonicalize tables) is
-    # dead once stage 3 lands on parquet: the scope releases exactly the
-    # caches this run created, leaving caller-owned ones alone
+    # dead once stage 3 lands as the triple table: the scope releases exactly
+    # the caches this run created, leaving caller-owned ones alone
     with cache_scope(spark):
         s1_path = os.path.join(workdir, "stage1_extract")
+        triples_path = os.path.join(workdir, "triple_table")
         nt_path = os.path.join(workdir, "triples_nt")
         lineage_path = os.path.join(workdir, "lineage")
 
@@ -140,6 +138,7 @@ def run_pipeline(
         # partial repo data in the dir — lineage rows are written only after
         # the whole stage write succeeded, making them the safe resume marker
         done = None
+        stage1_fresh = True
         if (resume and path_exists(spark, lineage_path)
                 and path_exists(spark, s1_path)):
             done = (spark.read.parquet(lineage_path)
@@ -154,9 +153,11 @@ def run_pipeline(
                 kept = (spark.read.parquet(s1_path)
                         .join(done, "repo", "left_semi").localCheckpoint())
                 kept.write.mode("overwrite").parquet(s1_path)
+            # only against an earlier run's lineage can there be nothing
+            # left to extract
+            stage1_fresh = not todo.isEmpty()
         else:
             todo = src_df
-        stage1_fresh = not todo.isEmpty()
         if stage1_fresh:
             out = extract_stage(todo)
             out.write.mode("append" if done is not None
@@ -173,17 +174,18 @@ def run_pipeline(
         _append_lineage(spark, lineage_path, "extract",
                         rows_out.join(rows_in, "repo", "left"))
 
-        # ---- Stages 2-3: a parquet checkpoint per stage (resume + plan
-        # isolation) around the one build path
+        # ---- Stages 2-3 around the one build path: Stage 2 lands as
+        # parquet checkpoints (resume + plan isolation), Stage 3 as the
+        # triple table itself, each written once
         stage_paths = {
             "link": (os.path.join(workdir, "stage2_resolved"),
                      os.path.join(workdir, "stage2_entities")),
-            "canonicalize": (os.path.join(workdir, "stage3_triples"),),
+            "canonicalize": (triples_path,),
         }
 
         def land(stage, build):
             paths = stage_paths[stage]
-            # a checkpoint is reusable on resume only when stage 1 added
+            # a landed stage is reusable on resume only when stage 1 added
             # nothing new (its inputs are then byte-identical to the prior
             # run)
             if (resume and not stage1_fresh
@@ -193,7 +195,10 @@ def run_pipeline(
                                      & (F.col("status") == "ok")).isEmpty())):
                 return tuple(spark.read.parquet(p) for p in paths)
             for df, p in zip(build(), paths):
-                df.write.mode("overwrite").parquet(p)
+                if p == triples_path:
+                    write_triple_table(df, p)
+                else:
+                    df.write.mode("overwrite").parquet(p)
             frames = tuple(spark.read.parquet(p) for p in paths)
             _append_lineage(
                 spark, lineage_path, stage,
@@ -201,13 +206,9 @@ def run_pipeline(
                 .withColumn("rows_in", F.lit(None).cast("long")))
             return frames
 
-        final = build_kg(extracted, manifest=manifest,
-                         broadcast_symtab=broadcast_symtab, salt=salt,
-                         land=land)
+        final = build_kg(extracted, manifest=manifest, land=land)
 
-        # ---- Stage 4: materialize ----------------------------------------
-        triples_path = os.path.join(workdir, "triple_table")
-        write_triple_table(final, triples_path)
+        # ---- Stage 4: the N-Triples sink over the landed table ------------
         if write_nt:
             write_ntriples(final, nt_path)
         n = final.count()

@@ -24,11 +24,6 @@ def main(argv=None):
     p.add_argument("--nt", action="store_true", help="also write N-Triples text")
     p.add_argument("--roots", default=None,
                    help="comma-separated root repos for import-closure pruning")
-    p.add_argument("--salt", type=int, default=0,
-                   help="salt factor for the symbol-table join "
-                        "(0 = auto: broadcast when small, salted beyond "
-                        "session._AUTO_BROADCAST_MAX_ROWS symbols; every "
-                        "broadcast size gate lives in session.py)")
     p.add_argument("--manifest", default=None,
                    help="parquet dir with (repo, library, is_by_project): "
                         "libraries marked is_by_project=false lose their "
@@ -47,8 +42,6 @@ def main(argv=None):
         resume=args.resume,
         root_repos=args.roots.split(",") if args.roots else None,
         write_nt=args.nt,
-        broadcast_symtab="auto" if args.salt == 0 else False,
-        salt=args.salt,
         manifest=(spark.read.parquet(args.manifest)
                   if args.manifest else None))
     print(json.dumps({

@@ -218,7 +218,9 @@ def test_pipeline_resume_reuses_stage_checkpoints(spark, source_files,
                                                   tmp_path):
     """A resume whose stage 1 adds nothing reuses the landed stage-2/3
     checkpoints: neither stage runs again (no new lineage rows), and the
-    triple table equals the first run's."""
+    triple table equals the first run's. Stage 3 lands only as the triple
+    table (no ``stage3_triples`` copy), and the reuse run leaves its data
+    files as they are (same names, same mtimes)."""
     from codeontologypython_spark.plans.pipeline import run_pipeline
     from codeontologypython_spark.sources.tables import read_triple_table
 
@@ -232,15 +234,25 @@ def test_pipeline_resume_reuses_stage_checkpoints(spark, source_files,
             spark, res.triples_path).select(
                 "subj", "pred", "obj", "obj_is_literal").collect())
 
+    def data_files(res):
+        return {os.path.relpath(os.path.join(d, f), res.triples_path):
+                os.stat(os.path.join(d, f)).st_mtime_ns
+                for d, _, fs in os.walk(res.triples_path)
+                for f in fs if f.startswith("part-")}
+
     wd = str(tmp_path / "wd")
     r1 = run_pipeline(spark, source_files, wd, write_nt=False)
     rows1, table1 = stage_rows(r1), table(r1)
     assert rows1["link"] > 0 and rows1["canonicalize"] > 0
+    assert not os.path.exists(os.path.join(wd, "stage3_triples"))
+    files1 = data_files(r1)
+    assert files1
 
     r2 = run_pipeline(spark, source_files, wd, resume=True, write_nt=False)
     assert stage_rows(r2) == rows1
     assert r2.n_triples == r1.n_triples
     assert table(r2) == table1
+    assert data_files(r2) == files1
 
 
 def test_pipeline_releases_stage_caches(spark, source_files, tmp_path):

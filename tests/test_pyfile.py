@@ -368,6 +368,40 @@ def test_relative_import_deep_and_init():
     assert "pkg.sub.f" in cands2
 
 
+def test_relative_import_above_top_level_package():
+    """The extractor and the import-closure scan share one resolver. A
+    relative import that climbs above the top-level package (CPython raises
+    ImportError) names no module: neither caller emits anything for it, and
+    the ImportStatement entity stays. An in-range one resolves alike in
+    both."""
+    import pandas as pd
+
+    from codeontologypython_spark.operators.closure import _imports_only
+
+    cases = [
+        # a top-level module has no parent package
+        ("standalone.py", "from .foo import x\nfrom . import y\n"
+                          "from .bar import *\n"),
+        # a/b/c.py sits in package a.b: four dots climb two levels too far
+        ("a/b/c.py", "from ....z import w\nfrom ... import v\n"),
+    ]
+    for path, src in cases:
+        e, _, m = _run(src, path=path)
+        assert m == [], path
+        stmts = [x for x in e if x["kind"] == "ImportStatement"]
+        assert len(stmts) == src.count("\n"), path
+        pdf = pd.DataFrame({"repo": ["r"], "path": [path], "content": [src]})
+        (out,) = _imports_only(iter([pdf]))
+        assert out.empty, path
+
+    src = "from ..x import y\n"
+    _, _, m = _run(src, path="a/b/c.py")
+    assert {x["candidates"][0] for x in m} == {"a.x.y"}
+    pdf = pd.DataFrame({"repo": ["r"], "path": ["a/b/c.py"], "content": [src]})
+    (out,) = _imports_only(iter([pdf]))
+    assert set(out["target_fqn"]) == {"a.x", "a.x.y"}
+
+
 def test_field_facts_discovery():
     """Stage-1 half of track_fields (tracking.py:613-835): ordered per-class
     facts; Field individuals are materialized in Stage 2 (operators/fields)."""

@@ -14,7 +14,10 @@ session writes a Spark event log; after it stops, each job is attributed to
 the call that was in progress when the job was submitted (jobs of AQE stages
 and broadcasts are submitted inside the call that planned them), and its
 wall is its completion minus its submission time. Prints one line per call
-site, most jobs first, then the total.
+site, most jobs first, then the total, then jobs and job wall per program
+module: the file of a site's innermost frame (a job submitted inside a
+``relational.py`` primitive counts for ``relational.py``), with the
+``sources/`` sinks taken together.
 """
 
 from __future__ import annotations
@@ -121,6 +124,26 @@ def attribute(jobs, calls, t0, t1) -> dict[str, list[float]]:
     return out
 
 
+def by_module(sites: dict[str, list[float]]) -> dict[str, list[float]]:
+    """module -> [jobs, job wall s], from the per-site totals."""
+    out: dict[str, list[float]] = {}
+    for site, (n, wall) in sites.items():
+        mod = site.split(":", 1)[0]
+        if mod.startswith("sources" + os.sep):
+            mod = "sources" + os.sep
+        agg = out.setdefault(mod, [0, 0.0])
+        agg[0] += n
+        agg[1] += wall
+    return out
+
+
+def _print_rows(totals: dict[str, list[float]], limit: int = 0) -> None:
+    """One line per name, most jobs first; ``limit`` > 0 keeps the first."""
+    rows = sorted(totals.items(), key=lambda kv: (-kv[1][0], kv[0]))
+    for name, (n, wall) in rows[:limit or None]:
+        print(f"{n:>5} {wall:>10.2f}  {name}")
+
+
 def main(argv=None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--corpus", choices=("fixtures", "ml"), default="ml")
@@ -161,16 +184,14 @@ def main(argv=None) -> None:
         spark.stop()
 
         sites = attribute(read_jobs(log_dir), calls.calls, t0, t1)
-        ranked = sorted(sites.items(), key=lambda kv: (-kv[1][0], kv[0]))
-        if args.sites:
-            ranked = ranked[:args.sites]
         print(f"{'jobs':>5} {'job wall s':>10}  call site")
-        for site, (n, wall) in ranked:
-            print(f"{n:>5} {wall:>10.2f}  {site}")
+        _print_rows(sites, args.sites)
         n_all = sum(v[0] for v in sites.values())
         wall_all = sum(v[1] for v in sites.values())
         print(f"{n_all:>5} {wall_all:>10.2f}  total "
               f"({res.n_triples} triples, build {t1 - t0:.1f} s)")
+        print(f"\n{'jobs':>5} {'job wall s':>10}  program module")
+        _print_rows(by_module(sites))
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -297,9 +297,16 @@ def settle_ptypes(entities: DataFrame, triples: DataFrame) -> DataFrame:
         .unionByName(keyed(triples.filter(F.col("pred").isin(
             WOC + "hasGenericType", WOC + "hasActualTypeArgument",
             WOC + "hasArgumentType")), "subj"))
+        # broadcast by hint, as the settled tables are below: the entity
+        # cache under ptypes is first filled inside this query, so the
+        # planner cannot size it, and AQE turned the planned shuffle join
+        # into a broadcast one before or after the hasType side's stage
+        # started, whichever stage finished first: two plans (and two sets
+        # of generated classes) for one build
         .unionByName(keyed(triples.filter(F.col("pred") == WOC + "hasType")
-                           .join(ptypes.select(F.col("eid").alias("obj")),
-                                 "obj", "left_semi"), "obj")))
+                           .join(F.broadcast(ptypes.select(
+                               F.col("eid").alias("obj"))),
+                               "obj", "left_semi"), "obj")))
     # eager, not lazy: CLAUDE.md pitfall 10
     settled = (subgraph.groupBy("file")
                .applyInPandas(_settle_file, schema=_SETTLED_SCHEMA)

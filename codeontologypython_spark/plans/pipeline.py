@@ -182,8 +182,10 @@ def run_pipeline(
                      os.path.join(workdir, "stage2_entities")),
             "canonicalize": (triples_path,),
         }
+        n_triples = None
 
         def land(stage, build):
+            nonlocal n_triples
             paths = stage_paths[stage]
             # a landed stage is reusable on resume only when stage 1 added
             # nothing new (its inputs are then byte-identical to the prior
@@ -196,7 +198,7 @@ def run_pipeline(
                 return tuple(spark.read.parquet(p) for p in paths)
             for df, p in zip(build(), paths):
                 if p == triples_path:
-                    write_triple_table(df, p)
+                    n_triples = write_triple_table(df, p)
                 else:
                     df.write.mode("overwrite").parquet(p)
             frames = tuple(spark.read.parquet(p) for p in paths)
@@ -211,6 +213,8 @@ def run_pipeline(
         # ---- Stage 4: the N-Triples sink over the landed table ------------
         if write_nt:
             write_ntriples(final, nt_path)
-        n = final.count()
+        if n_triples is None:
+            # a resume reused the landed triple table: count what it holds
+            n_triples = final.count()
     return PipelineResult(triples_path, nt_path if write_nt else None,
-                          lineage_path, n, time.time() - t0)
+                          lineage_path, n_triples, time.time() - t0)

@@ -2,7 +2,10 @@
 
 Local mode stands in for a multi-executor cluster; every setting here is one
 that would carry over to a real cluster (AQE, skew join handling, Arrow
-batching sized for large ``content`` blobs).
+batching sized for large ``content`` blobs). Every session-level size
+decision sits here: the three broadcast gates and the codegen cache, which
+holds one whole build's generated classes so that a long-lived session
+(test suite, resume loop, query runner) compiles a repeated build only once.
 """
 
 from __future__ import annotations
@@ -26,6 +29,23 @@ _AUTO_SALT = 16
 # canonicalize.canonicalize_stage rewrites IRIs with shuffle joins
 _IRI_BROADCAST_MAX_ROWS = 4_000_000
 
+# Whole-stage codegen classes the session keeps compiled
+# (spark.sql.codegen.cache.maxEntries, an LRU keyed by the generated source).
+# One KG build compiles ~290-380 classes; Spark's default of 100 evicted each
+# of them before the next build could reuse it, so every repeated build in a
+# session recompiled ~335 classes (~3-4 s of a warm `tools/job_sites.py
+# --corpus ml` build on a 4-vCPU box). At 2000 a repeated build compiles 0,
+# with room for the SPARQL templates and the other plans of a test session.
+# Static: it only takes effect when get_spark creates the SparkContext.
+# Spark also names each whole-stage class after its codegen stage id, which
+# AQE hands out in the order query stages finish, so the same stage could
+# get a new id, and so a new class, in every build (14-60 per repeated
+# fixture build). get_spark takes the id out of the class name
+# (spark.sql.codegen.useIdInClassName; plans and explain output keep it),
+# and identical stages of one build then share a class too (a first fixture
+# build compiles 309 classes instead of 381).
+_CODEGEN_CACHE_ENTRIES = 2000
+
 
 def _default_driver_memory() -> str:
     """About 40% of physical memory (MemTotal), in whole GiB: the local-mode
@@ -45,8 +65,14 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     cpus defaults to $SPARK_GRAFT_CPUS or all cores. Shuffle partitions
-    default to the core count — at cluster scale this would be set to
-    2-3x total executor cores instead.
+    default to four per core (at least 16); AQE coalesces small shuffles.
+
+    Static confs (heap, codegen cache size) apply only when this call
+    creates the SparkContext. The tests, tools/, perfbench and bench.py
+    start their sessions here; the spark-submit scripts in jobs/ take the
+    cluster's session, run one build per process and so never repeat a
+    plan. A session built elsewhere keeps Spark's 100-entry codegen cache
+    and recompiles every repeated build.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -76,6 +102,9 @@ def get_spark(
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM")
                 or _default_driver_memory())
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(_CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.autoBroadcastJoinThreshold",
                 str(_BROADCAST_JOIN_THRESHOLD_BYTES))
     )

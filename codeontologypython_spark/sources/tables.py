@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 N_REPO_BUCKETS = 64
@@ -26,7 +26,10 @@ def with_repo_bucket(df: DataFrame, n_buckets: int = N_REPO_BUCKETS) -> DataFram
 
 
 def write_triple_table(triples: DataFrame, path: str,
-                       fmt: str = "parquet") -> None:
+                       fmt: str = "parquet") -> int:
+    """Write ``triples`` as the repo-bucketed triple table and return its
+    row count, taken by an ``observe()`` on the write job itself (no second
+    pass over the table)."""
     # repartition by the partition column first: otherwise every shuffle
     # task writes a file into every bucket directory (tasks x buckets small
     # files + per-task dynamic-partition sort — measured 6x slower).
@@ -36,12 +39,17 @@ def write_triple_table(triples: DataFrame, path: str,
     # write task (measured 12s there). xxhash64(subj) is content-derived,
     # so task retries reproduce the same row placement (guide §2.5); AQE
     # coalesces the resulting shuffle back to sensibly-sized writers.
+    # The count sits above the exchange, in the write's result stage, whose
+    # accumulator updates Spark merges once per partition.
+    rows = Observation()
     (with_repo_bucket(triples)
      .repartition("repo_bucket", F.pmod(F.xxhash64("subj"), F.lit(16)))
+     .observe(rows, F.count(F.lit(1)).alias("n"))
      .write.mode("overwrite")
      .partitionBy("repo_bucket")
      .format(fmt)
      .save(path))
+    return rows.get["n"]
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:

@@ -13,11 +13,15 @@ innermost frame in the program (``codeontologypython_spark/...:line``). The
 session writes a Spark event log; after it stops, each job is attributed to
 the call that was in progress when the job was submitted (jobs of AQE stages
 and broadcasts are submitted inside the call that planned them), and its
-wall is its completion minus its submission time. Prints one line per call
-site, most jobs first, then the total, then jobs and job wall per program
-module: the file of a site's innermost frame (a job submitted inside a
-``relational.py`` primitive counts for ``relational.py``), with the
-``sources/`` sinks taken together.
+wall is its completion minus its submission time. A job's driver idle time
+is the time before its submission during which no job of the build ran (the
+driver planning, probing or waiting on Python), charged to the job's site.
+Prints one line per call site, most jobs first, then the total, then jobs,
+job wall and driver idle per program module: the file of a site's innermost
+frame (a job submitted inside a ``relational.py`` primitive counts for
+``relational.py``), with the ``sources/`` sinks taken together. Last, the
+whole-stage codegen classes each build compiled and their compile time
+(count x mean of Spark's ``CodegenMetrics`` compile-time histogram).
 """
 
 from __future__ import annotations
@@ -107,41 +111,60 @@ def read_jobs(log_dir: str) -> list[tuple[float, float]]:
     return [(start[j], end.get(j, start[j])) for j in sorted(start)]
 
 
-def attribute(jobs, calls, t0, t1) -> dict[str, list[float]]:
-    """site -> [jobs, job wall s] for the jobs submitted in [t0, t1]; a job
-    goes to the longest call whose window holds its submission (the event
-    log's millisecond clock can put it on a neighbouring short call)."""
+def attribute(jobs, calls, t0, t1):
+    """site -> [jobs, job wall s, driver idle s] for the jobs submitted in
+    [t0, t1], plus the largest idle gap as (s, site) and the idle time after
+    the last job. A job goes to the longest call whose window holds its
+    submission (the event log's millisecond clock can put it on a
+    neighbouring short call); its idle time is the part of the interval
+    since the build started or the last job ended, whichever is later, in
+    which no job ran."""
     out: dict[str, list[float]] = {}
-    for sub, done in jobs:
+    busy_until, largest = t0, (0.0, "")
+    for sub, done in sorted(jobs):
         if not t0 <= sub <= t1:
             continue
         hits = [c for c in calls if c[0] - 1e-3 <= sub <= c[1] + 1e-3]
         site = (max(hits, key=lambda c: c[1] - c[0])[2] if hits
                 else "(no call in progress)")
-        agg = out.setdefault(site, [0, 0.0])
+        idle = max(0.0, sub - busy_until)
+        busy_until = max(busy_until, done)
+        largest = max(largest, (idle, site))
+        agg = out.setdefault(site, [0, 0.0, 0.0])
         agg[0] += 1
         agg[1] += done - sub
-    return out
+        agg[2] += idle
+    return out, largest, max(0.0, t1 - busy_until)
 
 
 def by_module(sites: dict[str, list[float]]) -> dict[str, list[float]]:
-    """module -> [jobs, job wall s], from the per-site totals."""
+    """module -> [jobs, job wall s, driver idle s], from the per-site
+    totals."""
     out: dict[str, list[float]] = {}
-    for site, (n, wall) in sites.items():
+    for site, row in sites.items():
         mod = site.split(":", 1)[0]
         if mod.startswith("sources" + os.sep):
             mod = "sources" + os.sep
-        agg = out.setdefault(mod, [0, 0.0])
-        agg[0] += n
-        agg[1] += wall
+        agg = out.setdefault(mod, [0, 0.0, 0.0])
+        for i, v in enumerate(row):
+            agg[i] += v
     return out
 
 
 def _print_rows(totals: dict[str, list[float]], limit: int = 0) -> None:
     """One line per name, most jobs first; ``limit`` > 0 keeps the first."""
     rows = sorted(totals.items(), key=lambda kv: (-kv[1][0], kv[0]))
-    for name, (n, wall) in rows[:limit or None]:
-        print(f"{n:>5} {wall:>10.2f}  {name}")
+    for name, (n, wall, idle) in rows[:limit or None]:
+        print(f"{n:>5} {wall:>10.2f} {idle:>8.2f}  {name}")
+
+
+def codegen_compiles(spark) -> tuple[int, float]:
+    """(classes compiled so far, their compile time in s as count x mean)
+    from Spark's JVM-wide codegen compile-time histogram."""
+    hist = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+            .CodegenMetrics.METRIC_COMPILATION_TIME())
+    n = hist.getCount()
+    return n, n * hist.getSnapshot().getMean() / 1e3
 
 
 def main(argv=None) -> None:
@@ -173,7 +196,9 @@ def main(argv=None) -> None:
             )
             src = source_files_df(spark)
         src = src.localCheckpoint()
+        compiled = [codegen_compiles(spark)]
         run_pipeline(spark, src, os.path.join(work, "warm"))
+        compiled.append(codegen_compiles(spark))
         calls = CallLog()
         calls.install()
         calls.on = True
@@ -181,17 +206,27 @@ def main(argv=None) -> None:
         res = run_pipeline(spark, src, os.path.join(work, "measured"))
         t1 = time.time()
         calls.on = False
+        compiled.append(codegen_compiles(spark))
         spark.stop()
 
-        sites = attribute(read_jobs(log_dir), calls.calls, t0, t1)
-        print(f"{'jobs':>5} {'job wall s':>10}  call site")
+        sites, (gap, gap_site), tail = attribute(
+            read_jobs(log_dir), calls.calls, t0, t1)
+        head = f"{'jobs':>5} {'job wall s':>10} {'idle s':>8}"
+        print(f"{head}  call site")
         _print_rows(sites, args.sites)
-        n_all = sum(v[0] for v in sites.values())
-        wall_all = sum(v[1] for v in sites.values())
-        print(f"{n_all:>5} {wall_all:>10.2f}  total "
+        n_all, wall_all, idle_all = (sum(v[i] for v in sites.values())
+                                     for i in range(3))
+        print(f"{n_all:>5} {wall_all:>10.2f} {idle_all:>8.2f}  total "
               f"({res.n_triples} triples, build {t1 - t0:.1f} s)")
-        print(f"\n{'jobs':>5} {'job wall s':>10}  program module")
+        print(f"driver idle after the last job {tail:.2f} s; largest gap "
+              f"{gap:.2f} s, before a job of {gap_site}")
+        print(f"\n{head}  program module")
         _print_rows(by_module(sites))
+        print("\ncodegen classes compiled, compile s (count x mean)")
+        for name, (n0, s0), (n1, s1) in (
+                ("warm build", compiled[0], compiled[1]),
+                ("measured build", compiled[1], compiled[2])):
+            print(f"{n1 - n0:>5} {s1 - s0:>10.2f}  {name}")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

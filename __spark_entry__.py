@@ -1442,7 +1442,7 @@ def oracle_sql() -> dict[str, str]:
             sh_all AS (SELECT doc_id,
                               unnest({_SHINGLES.format(t='t')}) AS shingle
                        FROM toks),
-            -- stop-shingle cap mirrors ngram_jaccard_pairs(max_shingle_df)
+            -- stop-shingle cap mirrors dedup._MAX_SHINGLE_DF
             sh AS (SELECT * FROM sh_all
                    WHERE shingle IN (SELECT shingle FROM sh_all
                                      GROUP BY shingle

@@ -1,21 +1,24 @@
 """codeontologypython_spark — a PySpark-native knowledge-graph construction
 engine with the capabilities of SandroGT/CodeOntologyPython.
 
-The reference (/root/reference) is a single-process pipeline that parses every
-``.py`` file of a project, resolves cross-file references, and emits RDF
-triples for the public CodeOntology vocabulary (``http://rdf.webofcode.org/woc/``).
-This package re-expresses those capabilities Spark-first:
+The reference is a single-process pipeline that parses every ``.py`` file
+of a project, resolves cross-file references, and emits RDF triples for the
+public CodeOntology vocabulary (the ``woc:`` namespace, :mod:`.woc`). This
+package re-expresses those capabilities Spark-first:
 
-- Stage 1 (extract): Arrow-batched ``mapInPandas`` UDF parses each file with
-  the stdlib ``ast`` module and emits per-file-local entities, literal triples
-  and unresolved cross-file mentions (reference: ``parser.py``,
+- Stage 1 (extract): one Arrow-batched ``mapInArrow`` pass parses each file
+  with the stdlib ``ast`` module and emits per-file-local entities, literal
+  triples and unresolved cross-file mentions (reference: ``parser.py``,
   ``extractor.py``, ``individuals.py``).
 - Stage 2 (link): broadcast / salted hash joins resolve mentions against a
-  distributed symbol table; bounded iterative joins replace the reference's
-  recursive pointer-chasing (reference: ``tracking.py``,
+  distributed symbol table; the symbol-level fixpoints (alias chains,
+  wildcard re-exports, the extends walk with C3 MRO and overrides) run as
+  local grouped passes in place of the reference's recursive
+  pointer-chasing (reference: ``tracking.py``,
   ``transformer/__init__.py``).
-- Stage 3 (canonicalize): window dedup with min-commit tiebreak, content-hash
-  IRI assignment via aggregation (reference: ``individuals.py:54-85``),
+- Stage 3 (canonicalize): per-file ParameterizedType settlement, dedup by
+  ``min(struct)`` aggregates with a min-commit tiebreak, content-hash IRI
+  assignment via aggregation (reference: ``individuals.py:54-85``),
   inverse-property materialization (reference: ``extractor.py:35-38``).
 - Stage 4 (materialize): partitioned parquet triple table + N-Triples text
   sink (reference: ``python3/__init__.py:62-64``).

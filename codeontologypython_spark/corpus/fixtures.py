@@ -352,28 +352,21 @@ def _fake_commit(repo: str, path: str, content: str) -> str:
     return "c" + hashlib.sha256(f"{repo}\n{path}\n{content}".encode()).hexdigest()[:39]
 
 
-def source_files_rows(copies: int = 1) -> list[tuple]:
-    """Rows for the source_files table.
-
-    ``copies > 1`` replicates each repo under suffixed names (deterministic),
-    used by bench.py to scale the corpus without changing per-file content.
-    """
+def source_files_rows() -> list[tuple]:
+    """Rows for the source_files table: every fixture file, each repo's
+    files in path order."""
     rows = []
     for repo, files in FIXTURE_REPOS.items():
-        for c in range(copies):
-            r = repo if c == 0 else f"{repo}__copy{c:03d}"
-            for path, content in sorted(files.items()):
-                lang = "python" if path.endswith(".py") else "text"
-                rows.append((r, path, _fake_commit(r, path, content), lang, content))
+        for path, content in sorted(files.items()):
+            lang = "python" if path.endswith(".py") else "text"
+            rows.append((repo, path, _fake_commit(repo, path, content), lang,
+                         content))
     return rows
 
 
-def source_files_df(spark: SparkSession, copies: int = 1, partitions: int | None = None) -> DataFrame:
+def source_files_df(spark: SparkSession) -> DataFrame:
     """Build the source_files DataFrame (input_hint shape)."""
-    df = spark.createDataFrame(source_files_rows(copies), schema=SOURCE_FILES)
-    if partitions:
-        df = df.repartition(partitions, "repo", "path")
-    return df
+    return spark.createDataFrame(source_files_rows(), schema=SOURCE_FILES)
 
 
 # the fixture corpus's project manifest (S3 remnant — reference

@@ -18,9 +18,8 @@ from pyspark.sql import functions as F
 
 
 def chunk_documents(docs: DataFrame, chunk_size: int = 1000,
-                    overlap: int = 100, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """(id_col, chunk_idx, chunk_text, n_chunks): window i covers
+                    overlap: int = 100) -> DataFrame:
+    """(doc_id, chunk_idx, chunk_text, n_chunks): window i covers
     characters [i*stride, i*stride + chunk_size) with
     stride = chunk_size - overlap; the last window may be shorter.
     n_chunks = 1 for docs at or under chunk_size (a whole-doc chunk, even
@@ -30,18 +29,19 @@ def chunk_documents(docs: DataFrame, chunk_size: int = 1000,
     if not 0 <= overlap < chunk_size:
         raise ValueError("need 0 <= overlap < chunk_size")
     stride = chunk_size - overlap
-    ln = F.length(F.col(text_col))
+    text = F.col("text")
+    ln = F.length(text)
     n = (F.when(ln <= chunk_size, F.lit(1))
          .otherwise(F.ceil((ln - F.lit(chunk_size)).cast("double")
                            / F.lit(stride)) + 1)
          .cast("int"))
     return (docs
-            .select(F.col(id_col), F.col(text_col), n.alias("n_chunks"),
+            .select("doc_id", text, n.alias("n_chunks"),
                     F.explode(F.sequence(F.lit(0), n - 1)).alias("chunk_idx"))
             .select(
-                id_col,
+                "doc_id",
                 "chunk_idx",
-                F.col(text_col).substr(
+                text.substr(
                     F.col("chunk_idx") * stride + 1,
                     F.lit(chunk_size)).alias("chunk_text"),
                 "n_chunks"))

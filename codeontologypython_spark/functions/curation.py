@@ -62,15 +62,13 @@ class CurationAudit:
 def curate(docs: DataFrame, benchmark: DataFrame | None = None,
            weights: DataFrame | None = None, *, lang: str = "en",
            min_quality: int = 2, max_repetition: float = 0.5,
-           min_shared_shingles: int = 3,
-           text_col: str = "text",
-           id_col: str = "doc_id") -> tuple[DataFrame, CurationAudit]:
+           min_shared_shingles: int = 3) -> tuple[DataFrame, CurationAudit]:
     """Returns (curated_docs, audit). ``benchmark`` (optional) is the
     eval-set table to decontaminate against; ``weights`` (optional) is the
     (source, fraction) mixing table for ``weighted_sample``. The audit's
     stage counts accumulate inside the single action that materializes
     ``curated_docs`` — read them with ``audit.counts()`` afterwards."""
-    text = F.col(text_col)
+    text = F.col("text")
     audit = CurationAudit()
     docs = audit._attach("input", docs)
 
@@ -80,20 +78,18 @@ def curate(docs: DataFrame, benchmark: DataFrame | None = None,
         & (F.coalesce(repetition_ratio(text), F.lit(0.0)) <= max_repetition))
     gated = audit._attach("quality_gate", gated)
 
-    deduped = (exact_dedup(gated, text_col=text_col, id_col=id_col)
-               .drop("content_md5", "dup_count"))
+    deduped = exact_dedup(gated).drop("content_md5", "dup_count")
     deduped = audit._attach("exact_dedup", deduped)
 
     if benchmark is not None:
         contaminated = decontaminate(deduped, benchmark,
-                                     min_shared=min_shared_shingles,
-                                     text_col=text_col, id_col=id_col)
-        deduped = deduped.join(contaminated.select(id_col), id_col,
+                                     min_shared=min_shared_shingles)
+        deduped = deduped.join(contaminated.select("doc_id"), "doc_id",
                                "left_anti")
         deduped = audit._attach("decontaminated", deduped)
 
     if weights is not None:
-        deduped = weighted_sample(deduped, weights, key_col=id_col)
+        deduped = weighted_sample(deduped, weights)
         deduped = audit._attach("mixed", deduped)
 
     return deduped, audit

@@ -25,18 +25,17 @@ from codeontologypython_spark.functions.textops import (
 from codeontologypython_spark.operators.relational import fan_out
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the min-id representative per exact content hash; adds the group
     size. ONE map-side-combining aggregation on md5(text) produces both the
     representative row (min(struct) keyed by id first — ids are unique, so
     this equals the min-id row) and the group size; the round-5 form paid a
     row_number window shuffle PLUS a size aggregation PLUS a join to stitch
     them (CLAUDE.md pitfall 5)."""
-    h = df.withColumn("content_md5", F.md5(F.col(text_col)))
-    others = [c for c in df.columns if c != id_col]
+    h = df.withColumn("content_md5", F.md5(F.col("text")))
+    others = [c for c in df.columns if c != "doc_id"]
     agg = (h.groupBy("content_md5")
-           .agg(F.min(F.struct(F.col(id_col),
+           .agg(F.min(F.struct(F.col("doc_id"),
                                *[F.col(c) for c in others])).alias("w"),
                 F.count("*").alias("dup_count")))
     # column order matches the round-5 join output: content_md5, df's
@@ -46,22 +45,23 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
                       "dup_count")
 
 
-def _shingle_table(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+def _shingle_table(df: DataFrame) -> DataFrame:
     return (df
-            .select(F.col(id_col).alias("doc"),
+            .select(F.col("doc_id").alias("doc"),
                     F.explode(F.array_distinct(
-                        shingles_col(F.col(text_col), n))).alias("shingle")))
+                        shingles_col(F.col("text")))).alias("shingle")))
 
 
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", n: int = 3,
-                        threshold: float = 0.8,
-                        max_shingle_df: int | None = 500) -> DataFrame:
+# stop-shingle cap of ngram_jaccard_pairs (document frequency)
+_MAX_SHINGLE_DF = 500
+
+
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Candidate pairs via the shingle inverted index (docs sharing >=1
     shingle), exact Jaccard = |∩| / (|A|+|B|-|∩|) over the capped shingle
     universe. Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
 
-    ``max_shingle_df`` drops stop-shingles ("in the", "of the") whose
+    ``_MAX_SHINGLE_DF`` drops stop-shingles ("in the", "of the") whose
     document frequency exceeds the cap BEFORE the pair join — without it one
     hot shingle's bucket grows quadratically in its document frequency
     (df=10^6 -> 10^12 pairs from a single shuffle group at corpus scale).
@@ -73,8 +73,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # the dominant expression cost and a single-file scan would otherwise
     # evaluate it on one core (no-op at corpus scale, relational.fan_out)
     fanned = fan_out(df)
-    sh = _shingle_table(fanned, text_col, id_col,
-                        n).localCheckpoint(eager=False)
+    sh = _shingle_table(fanned).localCheckpoint(eager=False)
     if fanned is not df:
         # the input was single-file small, so the exploded table is small
         # too: the three downstream jobs (drop-set scan, sizes, posting
@@ -83,13 +82,12 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
         # (no data movement). Never taken at corpus scale (fan_out no-ops).
         par = df.sparkSession.sparkContext.defaultParallelism
         sh = sh.coalesce(max(2, par // 8))
-    if max_shingle_df is not None:
-        # the HOT shingles are few: broadcast the tiny drop set so capping is
-        # a map-side anti-join, and every surviving posting list is <= cap —
-        # the collect_list below is memory-bounded by construction
-        drop = (sh.groupBy("shingle").agg(F.count("*").alias("df"))
-                .filter(F.col("df") > max_shingle_df).select("shingle"))
-        sh = sh.join(F.broadcast(drop), "shingle", "left_anti")
+    # the HOT shingles are few: broadcast the tiny drop set so capping is a
+    # map-side anti-join, and every surviving posting list is <= cap — the
+    # collect_list below is memory-bounded by construction
+    drop = (sh.groupBy("shingle").agg(F.count("*").alias("df"))
+            .filter(F.col("df") > _MAX_SHINGLE_DF).select("shingle"))
+    sh = sh.join(F.broadcast(drop), "shingle", "left_anti")
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     # pair generation from per-shingle posting lists (collect_list +
     # double-explode): ONE shuffle of the shingle table instead of the
@@ -123,11 +121,11 @@ _MH_A = [268435399, 268435367, 268435361, 268435337,
          268435331, 268435313, 268435291, 268435273]  # primes < 2^29
 _MH_B = [1000003, 2000029, 3000073, 4000037,
          5000011, 6000011, 7000003, 8000009]
+_MH_K = len(_MH_A)  # hashes per signature
+_MH_BANDS = 4       # LSH bands of _MH_K // _MH_BANDS rows each
 
 
-def minhash_signature(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", n: int = 3,
-                      num_hashes: int = 8) -> DataFrame:
+def minhash_signature(df: DataFrame) -> DataFrame:
     """K-permutation MinHash signature as K columns mh_0..mh_{K-1}.
     base(s) = int(md5(s)[:8], 16); h_k = (A_k*base + B_k) mod (2^31-1) —
     bit-identical in the SQL oracle.
@@ -137,11 +135,10 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     via localCheckpoint BEFORE splitting into columns: Catalyst's
     CollapseProject would otherwise inline the fold into every mh_k column
     and evaluate the md5s K times."""
-    assert num_hashes <= len(_MH_A)
-    sh = F.array_distinct(shingles_col(F.col(text_col), n))
-    a_arr = F.array(*[F.lit(a) for a in _MH_A[:num_hashes]])
-    b_arr = F.array(*[F.lit(b) for b in _MH_B[:num_hashes]])
-    init = F.array_repeat(F.lit(_MH_P + 1).cast("long"), num_hashes)
+    sh = F.array_distinct(shingles_col(F.col("text")))
+    a_arr = F.array(*[F.lit(a) for a in _MH_A])
+    b_arr = F.array(*[F.lit(b) for b in _MH_B])
+    init = F.array_repeat(F.lit(_MH_P + 1).cast("long"), _MH_K)
 
     def step(acc, s):
         base = hash_hex_prefix_to_long(s)
@@ -152,7 +149,8 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     mins = F.aggregate(sh, init, step)
     # fan_out: the md5-per-shingle fold is the signature's whole cost and a
     # single-file scan would evaluate it on one core (no-op at corpus scale)
-    packed = (fan_out(df).select(F.col(id_col).alias("doc"), mins.alias("mins"))
+    packed = (fan_out(df).select(F.col("doc_id").alias("doc"),
+                                 mins.alias("mins"))
               .localCheckpoint(eager=False))
     # a shingle-less doc never updated the fold: its mins are still the
     # (P+1) sentinel — drop it AFTER materialization (a pre-checkpoint
@@ -161,45 +159,41 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
             .filter(F.element_at("mins", 1) != _MH_P + 1)
             .select("doc", *[
                 F.element_at("mins", k + 1).alias(f"mh_{k}")
-                for k in range(num_hashes)]))
+                for k in range(_MH_K)]))
 
 
-def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", n: int = 3,
-                      num_hashes: int = 8, bands: int = 4,
-                      threshold: float = 0.5) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` bands of r rows; docs
-    colliding in any band become candidates; candidates are confirmed by
-    estimated Jaccard = fraction of equal signature components."""
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """LSH banding: split the signature into ``_MH_BANDS`` bands of r rows;
+    docs colliding in any band become candidates; candidates are confirmed
+    by estimated Jaccard = fraction of equal signature components."""
     # bucket rows CARRY the signature, so the band self-join confirms
     # est-Jaccard inline — one shuffle of (doc, sig, band, key) instead of a
     # candidate-distinct shuffle plus two signature re-joins; the threshold
     # filter runs before the pair-dedup distinct, shrinking that shuffle too
-    sig = minhash_signature(df, text_col, id_col, n,
-                            num_hashes).localCheckpoint(eager=False)
-    r = num_hashes // bands
+    sig = minhash_signature(df).localCheckpoint(eager=False)
+    r = _MH_K // _MH_BANDS
     band_cols = [
         F.struct(F.lit(b).alias("band"),
                  F.concat_ws("_", *[F.col(f"mh_{b * r + i}")
                                     for i in range(r)]).alias("key"))
-        for b in range(bands)]
-    buckets = (sig.select("doc", *[f"mh_{k}" for k in range(num_hashes)],
+        for b in range(_MH_BANDS)]
+    mh = [f"mh_{k}" for k in range(_MH_K)]
+    buckets = (sig.select("doc", *mh,
                           F.explode(F.array(*band_cols)).alias("bk"))
-               .select("doc", *[f"mh_{k}" for k in range(num_hashes)],
-                       "bk.band", "bk.key"))
+               .select("doc", *mh, "bk.band", "bk.key"))
     x = buckets.select(F.col("doc").alias("doc_a"), "band", "key",
                        *[F.col(f"mh_{k}").alias(f"a_mh_{k}")
-                         for k in range(num_hashes)])
+                         for k in range(_MH_K)])
     y = buckets.select(F.col("doc").alias("doc_b"), "band", "key",
                        *[F.col(f"mh_{k}").alias(f"b_mh_{k}")
-                         for k in range(num_hashes)])
+                         for k in range(_MH_K)])
     est = None
-    for k in range(num_hashes):
+    for k in range(_MH_K):
         term = (F.col(f"a_mh_{k}") == F.col(f"b_mh_{k}")).cast("int")
         est = term if est is None else est + term
     return (x.join(y, ["band", "key"])
             .filter(F.col("doc_a") < F.col("doc_b"))
-            .withColumn("est_jaccard", est.cast("double") / num_hashes)
+            .withColumn("est_jaccard", est.cast("double") / _MH_K)
             .filter(F.col("est_jaccard") >= threshold)
             .select("doc_a", "doc_b", "est_jaccard")
             .distinct())
@@ -232,8 +226,7 @@ def simhash64(text: Column) -> Column:
     return F.shiftleft(majority_word(hi), 32) + majority_word(lo)
 
 
-def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
+def simhash_near_dup_pairs(df: DataFrame,
                            min_equal_chunks: int = 3) -> DataFrame:
     """Near-dup pairs: equal value in >= k of the 4 16-bit chunks (standard
     SimHash block-permutation trick).
@@ -247,8 +240,8 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
     assert min_equal_chunks >= 2, "chunk-pair bucketing needs >=2 equal chunks"
     # fan_out: the 64-bit-majority expression is heavy and a single-file
     # scan would evaluate it on one core (no-op at corpus scale)
-    sh = fan_out(df).select(F.col(id_col).alias("doc"),
-                            simhash64(F.col(text_col)).alias("sh"))
+    sh = fan_out(df).select(F.col("doc_id").alias("doc"),
+                            simhash64(F.col("text")).alias("sh"))
     # materialize ONCE before the 6 chunk-pair self-joins: each join branch
     # re-derives both of its sides, so without the barrier the (very large —
     # 64 bit-majority folds) simhash expression tree is re-evaluated 12x AND
@@ -281,9 +274,11 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
             .select("doc_a", "doc_b", "equal_chunks"))
 
 
+# round bound of near_dup_clusters' label propagation
+_CC_MAX_ITERS = 20
+
+
 def near_dup_clusters(docs: DataFrame, pairs: DataFrame,
-                      id_col: str = "doc_id",
-                      max_iters: int = 20,
                       checkpoint_dir: str | None = None) -> DataFrame:
     """Connected components over near-duplicate candidate pairs — the step
     that turns pairwise LSH/SimHash output into dedup decisions: every doc
@@ -293,10 +288,11 @@ def near_dup_clusters(docs: DataFrame, pairs: DataFrame,
     Spark shape: iterative min-label propagation, the standard large-graph
     CC (label rows join the edge list, each round's labels localCheckpointed
     so plans stay flat), converging in O(cluster diameter) rounds — near-dup
-    clusters are star-/clique-like, so 2-4 rounds in practice, ``max_iters``
-    bounds adversarial chains. Each round is one join + one map-side-combined
-    min aggregation; the convergence probe is an anti-join emptiness check
-    (at corpus scale, run the probe every few rounds instead).
+    clusters are star-/clique-like, so 2-4 rounds in practice,
+    ``_CC_MAX_ITERS`` bounds adversarial chains. Each round is one join +
+    one map-side-combined min aggregation; the convergence probe is an
+    anti-join emptiness check (at corpus scale, run the probe every few
+    rounds instead).
     ``checkpoint_dir`` swaps the per-round localCheckpoint for a reliable
     parquet barrier (relational.reliable_barrier — the cluster-scale mode).
     """
@@ -309,10 +305,10 @@ def near_dup_clusters(docs: DataFrame, pairs: DataFrame,
         .distinct(), checkpoint_dir, "cc_edges")
     labels = reliable_barrier(
         docs.select(
-            F.col(id_col).cast("long").alias("node"),
-            F.col(id_col).cast("long").alias("cluster_id")),
+            F.col("doc_id").cast("long").alias("node"),
+            F.col("doc_id").cast("long").alias("cluster_id")),
         checkpoint_dir, "cc_labels_init")
-    for i in range(max_iters):
+    for i in range(_CC_MAX_ITERS):
         prop = (edges.join(labels.withColumnRenamed("node", "src"), "src")
                 .groupBy(F.col("dst").alias("node"))
                 .agg(F.min("cluster_id").alias("nbr_min")))
@@ -327,22 +323,11 @@ def near_dup_clusters(docs: DataFrame, pairs: DataFrame,
             labels = new
             break
         labels = new
-    return labels.select(F.col("node").alias(id_col), "cluster_id")
-
-
-def dedup_corpus(docs: DataFrame, pairs: DataFrame,
-                 id_col: str = "doc_id") -> DataFrame:
-    """Deduplicated corpus: keep ONE representative per near-dup cluster
-    (the min-id member). Returns the kept docs' rows."""
-    clusters = near_dup_clusters(docs, pairs, id_col)
-    keep = (clusters.filter(F.col(id_col) == F.col("cluster_id"))
-            .select(id_col))
-    return docs.join(keep, id_col, "left_semi")
+    return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  n: int = 3, min_shared: int = 3) -> DataFrame:
+                  min_shared: int = 3) -> DataFrame:
     """Pretraining decontamination: flag corpus documents sharing at least
     ``min_shared`` distinct n-gram shingles with ANY benchmark document —
     the standard guard against test-set leakage into training data.
@@ -351,17 +336,12 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     smaller than the corpus, so its distinct shingle set is BROADCAST and
     the corpus-side count is a map-side-combined aggregation — the corpus
     shuffles only (doc, count) rows, never its shingles. Returns
-    (id_col, n_shared_shingles) for flagged docs."""
-    from codeontologypython_spark.functions.textops import shingles_col
-
-    d = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(
-            shingles_col(F.col(text_col), n))).alias("shingle"))
+    (doc_id, n_shared_shingles) for flagged docs."""
+    d = _shingle_table(docs)
     b = (benchmark.select(F.explode(F.array_distinct(
-            shingles_col(F.col(text_col), n))).alias("shingle"))
+            shingles_col(F.col("text")))).alias("shingle"))
          .distinct())
     return (d.join(F.broadcast(b), "shingle")
-            .groupBy(F.col("doc").alias(id_col))
+            .groupBy(F.col("doc").alias("doc_id"))
             .agg(F.count("*").alias("n_shared_shingles"))
             .filter(F.col("n_shared_shingles") >= min_shared))

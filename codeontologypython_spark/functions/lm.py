@@ -39,27 +39,19 @@ from codeontologypython_spark.functions.textops import tokens_col
 MICRO = 100_000_000  # 1e8: micro-log-prob quantization
 
 
-def unigram_model(docs: DataFrame, text_col: str = "text",
-                  cache: bool = True) -> DataFrame:
+def unigram_model(docs: DataFrame) -> DataFrame:
     """(word, logp_micro) unigram table: logp_micro =
     round(ln(count/total) * 1e8) as BIGINT.
 
-    With ``cache=True`` (default) this is one corpus pass total: the
-    exploded word counts are persisted (vocab-sized — tiny relative to the
-    corpus), the scalar total is a vocab-table aggregate over that cache
-    (one long to the driver), and the returned model is a projection of
-    the same cache — consumers never re-run the explode/shuffle. Lifetime
-    contract: that vocab cache lives until the session ends (or
-    ``spark.catalog.clearCache()``) — it is the model's backing store, so
-    dropping it merely recomputes on next use, but a long-lived session
-    training MANY models accumulates one cached vocab table per call;
-    such callers pass ``cache=False`` and pay a second explode pass (the
-    total aggregate and the model consumer each recompute the shuffle)
-    in exchange for zero retained state."""
-    words = docs.select(F.explode(tokens_col(F.col(text_col))).alias("word"))
-    counts = words.groupBy("word").agg(F.count("*").alias("c"))
-    if cache:
-        counts = counts.persist()
+    One corpus pass total: the exploded word counts are persisted
+    (vocab-sized — tiny relative to the corpus), the scalar total is a
+    vocab-table aggregate over that cache (one long to the driver), and the
+    returned model is a projection of the same cache — consumers never
+    re-run the explode/shuffle. Lifetime contract: that vocab cache lives
+    until the session ends (or ``spark.catalog.clearCache()``) — it is the
+    model's backing store, so dropping it merely recomputes on next use."""
+    words = docs.select(F.explode(tokens_col(F.col("text"))).alias("word"))
+    counts = words.groupBy("word").agg(F.count("*").alias("c")).persist()
     total = counts.agg(F.sum("c")).collect()[0][0] or 0
     return counts.select(
         "word",
@@ -68,11 +60,9 @@ def unigram_model(docs: DataFrame, text_col: str = "text",
 
 
 def unigram_doc_scores(docs: DataFrame, model: DataFrame | None = None,
-                       text_col: str = "text",
-                       id_col: str = "doc_id",
                        oov_logp_micro: int | None = None) -> DataFrame:
     """Per-document average token log-probability:
-    (id_col, n_scored_tokens, avg_logprob) with avg_logprob =
+    (doc_id, n_scored_tokens, avg_logprob) with avg_logprob =
     round(sum(logp_micro) / n / 1e8, 4). Docs with zero tokens are kept
     with null avg. ``model`` defaults to self-training on ``docs``.
 
@@ -82,9 +72,9 @@ def unigram_doc_scores(docs: DataFrame, model: DataFrame | None = None,
     every OOV token that fixed micro-log-prob instead (left join +
     coalesce), so ``n_scored_tokens`` then counts ALL tokens."""
     if model is None:
-        model = unigram_model(docs, text_col)
-    toks = docs.select(F.col(id_col),
-                       F.explode(tokens_col(F.col(text_col))).alias("word"))
+        model = unigram_model(docs)
+    toks = docs.select("doc_id",
+                       F.explode(tokens_col(F.col("text"))).alias("word"))
     if oov_logp_micro is None:
         toks = toks.join(model, "word")
     else:
@@ -92,12 +82,12 @@ def unigram_doc_scores(docs: DataFrame, model: DataFrame | None = None,
                 .withColumn("logp_micro",
                             F.coalesce("logp_micro",
                                        F.lit(int(oov_logp_micro)))))
-    scored = (toks.groupBy(id_col)
+    scored = (toks.groupBy("doc_id")
               .agg(F.count("*").alias("n_scored_tokens"),
                    F.sum("logp_micro").alias("s")))
-    base = docs.select(id_col)
-    return (base.join(scored, id_col, "left")
-            .select(id_col,
+    base = docs.select("doc_id")
+    return (base.join(scored, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_scored_tokens", F.lit(0).cast("long"))
                     .alias("n_scored_tokens"),
                     F.round(F.col("s").cast("double")

@@ -31,19 +31,18 @@ from codeontologypython_spark.functions.textops import (
 )
 
 
-def pack_sequences(df: DataFrame, ctx_len: int, n_buckets: int = 1024,
-                   text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
-    """Returns (id_col, bucket, n_tokens, seq_id, offset): the document's
+def pack_sequences(df: DataFrame, ctx_len: int,
+                   n_buckets: int = 1024) -> DataFrame:
+    """Returns (doc_id, bucket, n_tokens, seq_id, offset): the document's
     bucket stream, its whitespace-token count, the index of the ctx_len
     sequence its first token lands in, and the offset within it."""
-    did = F.col(id_col)
+    did = F.col("doc_id")
     t = df.select(
         did,
         (hash_hex_prefix_to_long(did.cast("string")) % n_buckets)
         .alias("bucket"),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"))
-    w = (Window.partitionBy("bucket").orderBy(id_col)
+        token_count(F.col("text")).cast("long").alias("n_tokens"))
+    w = (Window.partitionBy("bucket").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     start = (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("start")
     packed = t.select(did, "bucket", "n_tokens", start)

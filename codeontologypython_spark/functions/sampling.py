@@ -1,6 +1,6 @@
 """Deterministic corpus sampling / source mixing for a training-data
-pipeline: reproducible hash-based Bernoulli sampling, per-source weighted
-mixing (RedPajama/Dolma-style source reweighting), and sampling a corpus
+pipeline: per-source weighted mixing (RedPajama/Dolma-style source
+reweighting) by a reproducible hash of the row key, and sampling a corpus
 down to a per-source token budget.
 
 Scale-first:
@@ -39,46 +39,36 @@ def uniform_from_key(key: Column) -> Column:
     return hash_hex_prefix_to_long(key.cast("string")) / F.lit(_TWO_32)
 
 
-def hash_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
-    """Reproducible Bernoulli sample: keep rows with u(key) < fraction."""
-    return df.filter(uniform_from_key(F.col(key_col)) < F.lit(fraction))
-
-
-def weighted_sample(df: DataFrame, weights: DataFrame,
-                    key_col: str = "doc_id",
-                    group_col: str = "source") -> DataFrame:
-    """Per-source weighted mix: ``weights`` is a small (group, fraction)
-    table, broadcast-joined; each row keeps iff u(key) < its group's
-    fraction. Groups absent from ``weights`` are dropped (fraction 0)."""
-    w = F.broadcast(weights.select(group_col, "fraction"))
-    return (df.join(w, group_col)
-            .filter(uniform_from_key(F.col(key_col)) < F.col("fraction"))
+def weighted_sample(df: DataFrame, weights: DataFrame) -> DataFrame:
+    """Per-source weighted mix: ``weights`` is a small (source, fraction)
+    table, broadcast-joined; each row keeps iff u(doc_id) < its source's
+    fraction. Sources absent from ``weights`` are dropped (fraction 0)."""
+    w = F.broadcast(weights.select("source", "fraction"))
+    return (df.join(w, "source")
+            .filter(uniform_from_key(F.col("doc_id")) < F.col("fraction"))
             .drop("fraction"))
 
 
-def token_budget_fractions(df: DataFrame, budget_per_source: Column | float,
-                           text_col: str = "text",
-                           group_col: str = "source") -> DataFrame:
+def token_budget_fractions(df: DataFrame,
+                           budget_per_source: Column | float) -> DataFrame:
     """Per-source keep fractions that sample each source down to ~a token
     budget: fraction = least(1, budget / source_total_tokens). One
     single-row-per-source aggregation; the result is the broadcast side of
     ``weighted_sample``."""
     budget = (budget_per_source if isinstance(budget_per_source, Column)
               else F.lit(float(budget_per_source)))
-    totals = (df.groupBy(group_col)
-              .agg(F.sum(token_count(F.col(text_col))).alias("total_tokens")))
+    totals = (df.groupBy("source")
+              .agg(F.sum(token_count(F.col("text"))).alias("total_tokens")))
     return totals.select(
-        group_col,
+        "source",
         F.least(F.lit(1.0),
                 budget / F.col("total_tokens").cast("double"))
         .alias("fraction"))
 
 
-def token_budget_sample(df: DataFrame, budget_per_source: float,
-                        text_col: str = "text", key_col: str = "doc_id",
-                        group_col: str = "source") -> DataFrame:
+def token_budget_sample(df: DataFrame,
+                        budget_per_source: float) -> DataFrame:
     """Sample each source down to ~``budget_per_source`` whitespace tokens
     (expected value under the deterministic uniform): the data-mixing step
     that equalizes source contributions before training."""
-    fr = token_budget_fractions(df, budget_per_source, text_col, group_col)
-    return weighted_sample(df, fr, key_col, group_col)
+    return weighted_sample(df, token_budget_fractions(df, budget_per_source))

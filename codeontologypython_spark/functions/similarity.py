@@ -29,26 +29,25 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                round_digits: int = 4) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame,
+                k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query (excluding self). Rounded cosine keeps
     the ranking engine-portable (float-sum ulp differences vs SQL oracles);
     ties break on neighbor id."""
     from codeontologypython_spark.operators.relational import fan_out
 
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qv"))
     # fan_out: the |Q| x N cosine folds evaluate on the corpus side's
     # partitions, and a single-file scan would run them on one core
     # (no-op at corpus scale, relational.fan_out)
-    c = fan_out(corpus).select(F.col(id_col).alias("neighbor_id"),
-                               F.col(vec_col).alias("cv"))
+    c = fan_out(corpus).select(F.col("vec_id").alias("neighbor_id"),
+                               F.col("embedding").alias("cv"))
     scored = (q.crossJoin(c)
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .withColumn("cos", F.round(
                   cosine(F.col("qv").cast("array<double>"),
-                         F.col("cv").cast("array<double>")), round_digits)))
+                         F.col("cv").cast("array<double>")), 4)))
     from pyspark.sql import Window
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc())
@@ -57,7 +56,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             .select("query_id", "neighbor_id", "cos", "rank"))
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
@@ -74,28 +73,25 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
 
 
 def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 dim: int = 16, n_planes: int = 6, seed: int = 42,
-                 round_digits: int = 4) -> DataFrame:
+                 dim: int = 16, n_planes: int = 6) -> DataFrame:
     """Approximate top-k: sign-LSH bucket join, exact cosine within bucket.
-    At scale the corpus is written bucketed by signature so the probe is a
-    co-located join; recall is traded via n_planes (fewer planes -> bigger
-    buckets -> higher recall)."""
+    Recall is traded via n_planes (fewer planes -> bigger buckets -> higher
+    recall)."""
     from codeontologypython_spark.operators.relational import fan_out
 
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes, 42)
+    vec = F.col("embedding")
     # fan_out: n_planes dot products per corpus row (no-op at corpus scale)
-    c = fan_out(corpus).select(F.col(id_col).alias("neighbor_id"),
-                               F.col(vec_col).alias("cv"),
-                               lsh_signature(F.col(vec_col), planes).alias("bucket"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"),
-                       lsh_signature(F.col(vec_col), planes).alias("bucket"))
+    c = fan_out(corpus).select(F.col("vec_id").alias("neighbor_id"),
+                               vec.alias("cv"),
+                               lsh_signature(vec, planes).alias("bucket"))
+    q = queries.select(F.col("vec_id").alias("query_id"), vec.alias("qv"),
+                       lsh_signature(vec, planes).alias("bucket"))
     scored = (q.join(c, "bucket")
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .withColumn("cos", F.round(
                   cosine(F.col("qv").cast("array<double>"),
-                         F.col("cv").cast("array<double>")), round_digits)))
+                         F.col("cv").cast("array<double>")), 4)))
     from pyspark.sql import Window
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc())
@@ -110,9 +106,8 @@ def _sq_dist(vec: Column, cent: list[float]) -> Column:
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
-def ivf_centroids(corpus: DataFrame, n_cells: int = 8, iters: int = 2,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  round_digits: int = 6) -> list[list[float]]:
+def ivf_centroids(corpus: DataFrame, n_cells: int = 8,
+                  iters: int = 2) -> list[list[float]]:
     """Deterministic mini k-means (Lloyd) for the IVF coarse quantizer.
 
     Init = the ``n_cells`` vectors with the smallest ids; each iteration is
@@ -122,20 +117,18 @@ def ivf_centroids(corpus: DataFrame, n_cells: int = 8, iters: int = 2,
     the next round's literals. Means are rounded so the engine-portable SQL
     oracle reproduces the exact same centroids despite summation-order ulps.
     """
-    first = (corpus.orderBy(id_col).limit(n_cells)
-             .select(F.col(vec_col).cast("array<double>").alias("v"))
-             .collect())
+    vec = F.col("embedding").cast("array<double>")
+    first = (corpus.orderBy("vec_id").limit(n_cells)
+             .select(vec.alias("v")).collect())
     cents = [list(r["v"]) for r in first]
     dim = len(cents[0])
     for _ in range(iters):
-        assigned = corpus.select(
-            F.col(vec_col).cast("array<double>").alias("v"),
-            _assign_cell(F.col(vec_col).cast("array<double>"), cents)
-            .alias("cell"))
+        assigned = corpus.select(vec.alias("v"),
+                                 _assign_cell(vec, cents).alias("cell"))
         stats = (assigned
                  .select("cell", F.posexplode("v").alias("dim", "x"))
                  .groupBy("cell", "dim")
-                 .agg(F.round(F.avg("x"), round_digits).alias("m"))
+                 .agg(F.round(F.avg("x"), 6).alias("m"))
                  .collect())
         new = {c: [None] * dim for c in {r["cell"] for r in stats}}
         for r in stats:
@@ -155,105 +148,33 @@ def _assign_cell(vec: Column, cents: list[list[float]]) -> Column:
 
 
 def ivf_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                 n_cells: int = 8, iters: int = 2, nprobe: int = 2,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 round_digits: int = 4) -> DataFrame:
+                 n_cells: int = 8, iters: int = 2,
+                 nprobe: int = 2) -> DataFrame:
     """IVF approximate top-k: coarse k-means quantizer partitions the corpus
     into cells; each query probes only its ``nprobe`` nearest cells and runs
     exact cosine inside them — the inverted-file alternative to sign-LSH
-    bucketing (at scale the corpus is written partitioned/bucketed by cell,
-    so probes are partition-pruned scans, never full passes)."""
+    bucketing."""
     from codeontologypython_spark.operators.relational import fan_out
 
-    cents = ivf_centroids(corpus, n_cells, iters, id_col, vec_col)
+    cents = ivf_centroids(corpus, n_cells, iters)
+    vec = F.col("embedding").cast("array<double>")
     # fan_out: the n_cells x dim argmin expression per corpus row is the
     # probe's map cost (no-op at corpus scale)
-    c = fan_out(corpus).select(F.col(id_col).alias("neighbor_id"),
-                               F.col(vec_col).cast("array<double>").alias("cv"))
+    c = fan_out(corpus).select(F.col("vec_id").alias("neighbor_id"),
+                               vec.alias("cv"))
     c = c.withColumn("cell", _assign_cell(F.col("cv"), cents))
     dists = F.array(*[
         F.struct(_sq_dist(F.col("qv"), cent).alias("d"),
                  F.lit(j).alias("cell"))
         for j, cent in enumerate(cents)])
-    q = (queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).cast("array<double>").alias("qv"))
+    q = (queries.select(F.col("vec_id").alias("query_id"), vec.alias("qv"))
          .withColumn("probe", F.explode(F.slice(F.array_sort(dists),
                                                 1, nprobe)))
          .select("query_id", "qv", F.col("probe.cell").alias("cell")))
     scored = (q.join(c, "cell")
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .withColumn("cos", F.round(cosine(F.col("qv"), F.col("cv")),
-                                         round_digits)))
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos", "rank"))
-
-
-def write_ann_index(corpus: DataFrame, path: str,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    dim: int = 16, n_planes: int = 6, seed: int = 42) -> None:
-    """Materialize the sign-LSH index as a bucket-PARTITIONED table — the
-    100TB serving shape: a probe reads only its bucket's files (partition
-    pruning), never the corpus. Repartition by bucket first so each bucket
-    directory gets one writer's files, not tasks x buckets fragments."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    (corpus
-     .withColumn("bucket", lsh_signature(F.col(vec_col), planes))
-     .repartition("bucket")
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-
-
-def probe_ann_index(spark, path: str, queries: DataFrame, k: int = 5,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    dim: int = 16, n_planes: int = 6, seed: int = 42,
-                    round_digits: int = 4,
-                    prune_strategy: str = "auto",
-                    collect_threshold: int = 10_000) -> DataFrame:
-    """Top-k probe against a bucketed on-disk index: the query's bucket
-    signature becomes a PARTITION FILTER on the index scan — the physical
-    plan reads only the probed buckets' files. Results equal lsh_ann_topk
-    over the same corpus (same planes, same tie order).
-
-    ``prune_strategy`` (mirrors linking's ``broadcast_symtab="auto"``):
-
-    - ``"collect"`` — collect the distinct probed bucket ids to the driver
-      and push a static ``IN`` partition filter. Best for small query sets:
-      pruning is visible in the local-mode plan (PartitionFilters).
-    - ``"join"`` — no driver collect; the bucket equi-join alone drives the
-      scan, and on a cluster dynamic partition pruning (broadcast of the
-      bucket-distinct query side) prunes the index partitions at runtime.
-      The scale path when |Q| is large — the driver never holds the probe
-      set.
-    - ``"auto"`` — bounded probe of the query count (``limit(T+1).count()``,
-      never a full scan) picks collect below ``collect_threshold`` rows,
-      join above.
-    """
-    planes = _hyperplanes(dim, n_planes, seed)
-    index = spark.read.parquet(path)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"),
-                       lsh_signature(F.col(vec_col), planes).alias("bucket"))
-    if prune_strategy == "auto":
-        n_q = queries.limit(collect_threshold + 1).count()
-        prune_strategy = "collect" if n_q <= collect_threshold else "join"
-    if prune_strategy == "collect":
-        buckets = [r["bucket"]
-                   for r in q.select("bucket").distinct().collect()]
-        pruned = index.filter(F.col("bucket").isin(buckets))
-    elif prune_strategy == "join":
-        pruned = index
-    else:
-        raise ValueError(f"unknown prune_strategy: {prune_strategy!r}")
-    c = pruned.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("cv"), "bucket")
-    scored = (q.join(c, "bucket")
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("cos", F.round(
-                  cosine(F.col("qv").cast("array<double>"),
-                         F.col("cv").cast("array<double>")), round_digits)))
+                                         4)))
     from pyspark.sql import Window
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc())
@@ -263,8 +184,6 @@ def probe_ann_index(spark, path: str, queries: DataFrame, k: int = 5,
 
 
 def embedding_near_dup_pairs(corpus: DataFrame, threshold: float = 0.98,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
                              dim: int = 16, n_planes: int = 4,
                              seed: int = 7) -> DataFrame:
     """Embedding-cosine near-duplicate detection: LSH bucket self-join +
@@ -275,8 +194,8 @@ def embedding_near_dup_pairs(corpus: DataFrame, threshold: float = 0.98,
     # fan_out the signature compute; localCheckpoint so the self-join's two
     # branches don't each re-evaluate the n_planes dot products
     t = (fan_out(corpus)
-         .select(F.col(id_col).alias("doc"), F.col(vec_col).alias("v"),
-                 lsh_signature(F.col(vec_col), planes).alias("bucket"))
+         .select(F.col("vec_id").alias("doc"), F.col("embedding").alias("v"),
+                 lsh_signature(F.col("embedding"), planes).alias("bucket"))
          .localCheckpoint(eager=False))
     a = t.select(F.col("doc").alias("doc_a"), F.col("v").alias("va"), "bucket")
     b = t.select(F.col("doc").alias("doc_b"), F.col("v").alias("vb"), "bucket")

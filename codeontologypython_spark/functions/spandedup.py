@@ -49,25 +49,25 @@ def token_chunks_col(text: Column, width: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def paragraphs_col(text: Column, sep: str = "\n\n") -> Column:
-    """Paragraph spans: split on ``sep``, blank paragraphs dropped (the
+def paragraphs_col(text: Column) -> Column:
+    """Paragraph spans: split on blank lines, blank paragraphs dropped (the
     natural granularity for prose corpora; the synthetic test corpus is
     single-line, so the oracle query exercises token_chunks_col instead)."""
-    return F.filter(F.split(text, sep), lambda p: p != "")
+    return F.filter(F.split(text, "\n\n"), lambda p: p != "")
 
 
-def span_dedup(df: DataFrame, spans: Column, id_col: str = "doc_id",
+def span_dedup(df: DataFrame, spans: Column,
                join_sep: str = " ") -> DataFrame:
     """Keep only the corpus-wide FIRST occurrence (min (doc_id, pos)) of
     each distinct span; rebuild each document from its surviving spans.
 
-    Returns (id_col, text_clean, n_kept, n_removed) for EVERY input row —
+    Returns (doc_id, text_clean, n_kept, n_removed) for EVERY input row —
     a document whose spans were all seen earlier comes back with
     text_clean = '' and n_kept = 0.
     """
     from codeontologypython_spark.operators.relational import fan_out
 
-    did = F.col(id_col)
+    did = F.col("doc_id")
     src = fan_out(df)
     # decision pass on keys only: the span column is projected away before
     # the exchange, so the groupBy shuffles ~50 B/span, not the text
@@ -77,7 +77,7 @@ def span_dedup(df: DataFrame, spans: Column, id_col: str = "doc_id",
              .agg(F.min(F.struct(did.alias("d"), F.col("pos").alias("p")))
                   .alias("first")))
     # per-doc kept positions (sorted = original span order)
-    keep = (first.groupBy(F.col("first.d").alias(id_col))
+    keep = (first.groupBy(F.col("first.d").alias("doc_id"))
             .agg(F.sort_array(F.collect_list("first.p")).alias("keep_pos")))
     # placement pass: rebuild each doc locally from its OWN spans array —
     # the only join that touches span bytes, and the position-list side is
@@ -85,7 +85,7 @@ def span_dedup(df: DataFrame, spans: Column, id_col: str = "doc_id",
     base = src.select(did, spans.alias("__spans"))
     n_kept = F.coalesce(F.size("keep_pos").cast("long"),
                         F.lit(0).cast("long"))
-    return (base.join(keep, id_col, "left")
+    return (base.join(keep, "doc_id", "left")
             .select(did,
                     F.coalesce(
                         F.concat_ws(join_sep, F.transform(

@@ -74,23 +74,23 @@ def bytes_per_token(text: Column) -> Column:
             / bpe_token_count(text).cast("double"))
 
 
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """n-token shingles (n-grams joined by a space). Guarded: F.sequence
-    descends when start > stop, so docs shorter than n tokens must yield an
+def shingles_col(text: Column) -> Column:
+    """3-token shingles (trigrams joined by a space). Guarded: F.sequence
+    descends when start > stop, so docs shorter than 3 tokens must yield an
     empty array explicitly."""
     toks = tokens_col(text)
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
+    idx = F.sequence(F.lit(1), F.size(toks) - 2)
     return F.when(
-        F.size(toks) >= n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+        F.size(toks) >= 3,
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, 3)))
     ).otherwise(F.array().cast("array<string>"))
 
 
-def doc_fingerprint(text: Column, n: int = 3) -> Column:
+def doc_fingerprint(text: Column) -> Column:
     """Rolling-hash document fingerprint = lexicographic min of the md5 of
-    each n-token shingle (== a 1-permutation MinHash; stable across engines
+    each 3-token shingle (== a 1-permutation MinHash; stable across engines
     because md5 is standardized)."""
-    return F.array_min(F.transform(shingles_col(text, n), F.md5))
+    return F.array_min(F.transform(shingles_col(text), F.md5))
 
 
 def hash_hex_prefix_to_long(c: Column) -> Column:
@@ -119,12 +119,12 @@ def normalize_text(text: Column) -> Column:
     return F.trim(out)
 
 
-def repetition_ratio(text: Column, n: int = 3) -> Column:
+def repetition_ratio(text: Column) -> Column:
     """Intra-document repetition (Gopher/RefinedWeb-style quality signal):
-    1 - distinct/total n-gram shingles. 0 = no repeated n-grams, ->1 =
+    1 - distinct/total 3-token shingles. 0 = no repeated n-grams, ->1 =
     degenerate loops. Null for docs shorter than one shingle. Integer-exact
     operands, so the double division is bit-identical across engines."""
-    sh = shingles_col(text, n)
+    sh = shingles_col(text)
     return F.when(
         F.size(sh) > 0,
         F.lit(1.0) - (F.size(F.array_distinct(sh)).cast("double")

@@ -2,11 +2,11 @@
 "vectorized pandas/Arrow UDFs parse each Python file's AST per partition").
 
 One ``mapInArrow`` pass over the source_files table runs
-:func:`codeontologypython_spark.operators.pyfile.extract_file` per row and
-emits a unified flat record stream (entities / per-file triples / mentions /
-errors), split afterwards by cheap filter+select. Each file is parsed exactly
-once — the relational replacement for the reference's astroid FQN parse cache
-(parser.py:65-82, serializer.py:96-100).
+:func:`codeontologypython_spark.operators.pyfile.extract_file_columnar` per
+row and emits a unified flat record stream (entities / per-file triples /
+mentions / errors), split afterwards by cheap filter+select. Each file is
+parsed exactly once — the relational replacement for the reference's astroid
+FQN parse cache (parser.py:65-82, serializer.py:96-100).
 
 Throughput notes (measured, see BASELINE.md):
 - each input file emits ~10^3-10^4 output rows, so the OUTPUT path dominates:

@@ -348,11 +348,11 @@ def materialize_fields(classes: DataFrame, facts_mentions: DataFrame,
 
     modifier = (F.when(F.col("name").startswith("__")
                        & ~F.col("name").endswith("__"),
-                       F.lit(WOC + "PythonPrivateAccessModifier"))
+                       F.lit(woc.PRIVATE_ACCESS_MODIFIER))
                 .when(F.col("name").startswith("_")
                       & ~F.col("name").startswith("__"),
-                      F.lit(WOC + "PythonProtectedAccessModifier"))
-                .otherwise(F.lit(WOC + "PythonPublicAccessModifier")))
+                      F.lit(woc.PROTECTED_ACCESS_MODIFIER))
+                .otherwise(F.lit(woc.PUBLIC_ACCESS_MODIFIER)))
 
     triples = (
         trip(F.col("fid"), RDF_TYPE, F.lit(WOC + "Field"), False)

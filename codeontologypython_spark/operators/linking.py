@@ -31,13 +31,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from codeontologypython_spark import session
+from codeontologypython_spark import session, woc
 from codeontologypython_spark.operators.relational import (
     one_group,
     salted_join,
 )
 
-WOC = "http://rdf.webofcode.org/woc/"
+WOC = woc.WOC
 
 # resolution priority across entity kinds when one FQN names several
 # (a package beats a class beats a function beats a variable)

@@ -659,10 +659,6 @@ def build_local_infer_env(tree: ast.Module):
 # The extractor
 # --------------------------------------------------------------------------
 
-WOC = "http://rdf.webofcode.org/woc/"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-OWL_SAME_AS = "http://www.w3.org/2002/07/owl#sameAs"
-
 _PUBLIC = "PythonPublicAccessModifier"
 _PROTECTED = "PythonProtectedAccessModifier"
 _PRIVATE = "PythonPrivateAccessModifier"
@@ -700,7 +696,6 @@ class FileExtractor:
     """Extract one file. Produces .entities / .triples / .mentions lists."""
 
     def __init__(self, repo: str, path: str, commit: str, content: str,
-                 project_name: str | None = None,
                  emit_invokes: bool = False):
         # emit_invokes: the reference never emits woc:invokes (extract_call
         # is a no-op, extractor.py:531-532; future work README.md:119), so
@@ -711,7 +706,7 @@ class FileExtractor:
         self.path = path
         self.commit = commit
         self.content = content
-        self.project_name = project_name or repo.rstrip("/").rsplit("/", 1)[-1]
+        self.project_name = repo.rstrip("/").rsplit("/", 1)[-1]
         self.module_fqn = module_fqn_of_path(path)
         self.library = library_of_path(path)
         self.entities: list[dict] = []
@@ -1094,13 +1089,12 @@ class FileExtractor:
                     self.t(eid, "hasNextStatement", chain_elems[i + 1], False)
 
     def _stmt_base(self, node, kind: str, tag: str, block_eid: str | None,
-                   src_node=None, member: bool = True) -> str:
+                   member: bool = True) -> str:
         """init_statement core (individuals.py:238-279): typed individual with
         hasSourceCode + hasLine, membership in the enclosing block."""
-        src_node = src_node or node
-        eid = self.ent(self._eid(tag), kind, line=getattr(src_node, "lineno", None))
-        self.lit(eid, "hasSourceCode", self._src(src_node))
-        self.lit(eid, "hasLine", getattr(src_node, "lineno", None))
+        eid = self.ent(self._eid(tag), kind, line=getattr(node, "lineno", None))
+        self.lit(eid, "hasSourceCode", self._src(node))
+        self.lit(eid, "hasLine", getattr(node, "lineno", None))
         if member and block_eid:
             self.t(block_eid, "hasBlockStatement", eid, False)
         return eid

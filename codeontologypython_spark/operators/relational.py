@@ -46,15 +46,15 @@ def reliable_barrier(df: DataFrame, checkpoint_dir: str | None,
     return df.sparkSession.read.parquet(path)
 
 
-def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Scale-adaptive parallelism floor for expression-heavy operators.
 
     A small input (one parquet file under maxPartitionBytes) scans as ONE
     partition, so every per-row expression upstream of the first exchange —
     shingle explosion, MinHash folds, regex scrubbing — runs on one core
-    regardless of cluster width. Repartitioning to
-    ``defaultParallelism * multiplier`` costs one shuffle of the (by
-    construction small) input and unlocks full-width evaluation.
+    regardless of cluster width. Repartitioning to ``defaultParallelism``
+    costs one shuffle of the (by construction small) input and unlocks
+    full-width evaluation.
 
     Scale-adaptive: when the input already has at least that many partitions
     (any corpus-scale table), this is a NO-OP — no shuffle is ever added to
@@ -62,16 +62,16 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     The explicit partition number is deliberate: AQE never coalesces a
     user-specified ``repartition(n)``, while a bare ``repartition(col)``
     would be coalesced right back to one partition at these sizes.
-    ``multiplier=1`` (one task per core) measured best for expression-heavy
-    map work at bench scale; finer grains only add scheduling overhead to
-    the downstream small-shuffle jobs.
+    One task per core measured best for expression-heavy map work at bench
+    scale; finer grains only add scheduling overhead to the downstream
+    small-shuffle jobs.
 
     Precondition: ``df`` is a scan-level input (a table read, plus at most
     narrow projections/filters). The width probe ``df.rdd.getNumPartitions()``
     plans the physical query; with an upstream exchange under AQE that
     executes the intermediate query stages at plan-build time.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * multiplier
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -82,12 +82,11 @@ def salted_join(
     build: DataFrame,
     key: str,
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-defusing equi-join (north_star: "salted hash joins to defuse skew
     on hub modules"). The probe side gets a deterministic salt derived from
     its row content; the build side is replicated ``salt`` times. Result
-    equals a plain ``probe.join(build, key, how)``.
+    equals a plain inner ``probe.join(build, key)``.
 
     Use when the build side is too large to broadcast AND the probe key is
     skewed (hub symbols like ``os``/``typing`` at corpus scale). AQE skew-join
@@ -98,8 +97,7 @@ def salted_join(
     salt_col = (F.abs(F.hash(*[F.col(c) for c in all_probe_cols])) % salt)
     p = probe.withColumn("__salt", salt_col)
     b = build.withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
-    out = p.join(b, on=[key, "__salt"], how=how).drop("__salt")
-    return out
+    return p.join(b, on=[key, "__salt"]).drop("__salt")
 
 
 def top1_per_group(
@@ -218,19 +216,17 @@ _TC_MAX_ROUNDS = 10
 
 def transitive_closure(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Bounded transitive closure over an edge DataFrame, the join analog of
-    the reference's recursive ancestor walks (SURVEY L4): returns
+    """Bounded transitive closure over a (src, dst) edge DataFrame, the join
+    analog of the reference's recursive ancestor walks (SURVEY L4): returns
     (src, dst, depth) with depth the minimum path length, via
     :func:`bounded_fixpoint` (``_TC_MAX_ROUNDS``; barrier tags
     ``tc_round_<i>``), one shuffle join per round.
     """
-    seed = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
-                        F.lit(1).alias("depth"))
-    base = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
+    seed = edges.select("src", "dst", F.lit(1).alias("depth"))
+    base = edges.select(F.col("src").alias("e_src"),
+                        F.col("dst").alias("e_dst"))
 
     def step(frontier, _closure):
         return (frontier.join(base, frontier["dst"] == base["e_src"])

@@ -164,15 +164,20 @@ def run_pipeline(
                            else "overwrite").parquet(s1_path)
         extracted = spark.read.parquet(s1_path)
 
-        rows_in = src_df.groupBy("repo").agg(F.count("*").alias("rows_in"))
-        # per-partition triple-count metrics (north_star: "checkpoints
-        # per-partition lineage and triple-count metrics")
-        rows_out = (extracted
-                    .groupBy("repo",
-                             F.spark_partition_id().alias("partition_id"))
-                    .agg(F.count("*").alias("rows_out")))
-        _append_lineage(spark, lineage_path, "extract",
-                        rows_out.join(rows_in, "repo", "left"))
+        if stage1_fresh:
+            rows_in = src_df.groupBy("repo").agg(
+                F.count("*").alias("rows_in"))
+            # per-partition triple-count metrics (north_star: "checkpoints
+            # per-partition lineage and triple-count metrics"), for the repos
+            # this run extracted: a resume's done repos already have theirs
+            rows_out = (extracted
+                        .groupBy("repo",
+                                 F.spark_partition_id().alias("partition_id"))
+                        .agg(F.count("*").alias("rows_out")))
+            if done is not None:
+                rows_out = rows_out.join(done, "repo", "left_anti")
+            _append_lineage(spark, lineage_path, "extract",
+                            rows_out.join(rows_in, "repo", "left"))
 
         # ---- Stages 2-3 around the one build path: Stage 2 lands as
         # parquet checkpoints (resume + plan isolation), Stage 3 as the

@@ -59,9 +59,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codeontologypython_spark import woc
 from codeontologypython_spark.operators.relational import bounded_fixpoint
-
-_RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -150,7 +149,7 @@ class _Parser:
     def __init__(self, tokens: list[tuple[str, str]]):
         self.toks = tokens
         self.i = 0
-        self.prefixes: dict[str, str] = {"rdf": _RDF}
+        self.prefixes: dict[str, str] = {"rdf": woc.RDF}
         self.internal_vars: set[str] = set()
 
     def _fresh_var(self) -> str:
@@ -187,7 +186,7 @@ class _Parser:
                 raise ValueError(f"undeclared prefix {pfx!r}")
             return ("iri", self.prefixes[pfx] + local)
         if k == "a":
-            return ("iri", _RDF + "type")
+            return ("iri", woc.RDF_TYPE)
         if k == "string":
             return ("lit", v[1:-1].replace('\\"', '"').replace("\\\\", "\\"))
         raise ValueError(f"bad term {v!r}")

@@ -1,8 +1,8 @@
-"""Fixed StructType schemas for every stage boundary.
+"""Fixed StructType schemas: the source-file input table, the Stage-1
+extractor output, and the mention rows Stage 2 resolves.
 
 The reference's output model is schema-fixed (the OWL ontology); the Spark
-engine mirrors that with static StructTypes everywhere — no inference
-(SURVEY.md §1.3).
+engine mirrors that with static StructTypes — no inference (SURVEY.md §1.3).
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ SOURCE_FILES = T.StructType([
 
 # Stage-1 extractor output: one unified FLAT row stream, discriminated by
 # `rec`, split into entities / triples / mentions / errors by filter+select.
-# One mapInPandas pass means each file is parsed exactly once (the relational
+# One mapInArrow pass means each file is parsed exactly once (the relational
 # analog of the reference's parse cache, parser.py:65-82). The schema is flat
 # (not nested structs) deliberately: the extractor emits ~10^4 rows per input
 # file, and building flat columnar frames from tuples is ~10x cheaper than
@@ -61,26 +61,6 @@ EXTRACT_OUTPUT = T.StructType([
     T.StructField("err_msg", T.StringType(), True),
 ])
 
-ENTITIES = T.StructType([
-    T.StructField("repo", T.StringType(), False),
-    T.StructField("path", T.StringType(), False),
-    T.StructField("commit", T.StringType(), False),
-    T.StructField("eid", T.StringType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("name", T.StringType(), True),
-    T.StructField("fqn", T.StringType(), True),
-    T.StructField("line", T.IntegerType(), True),
-])
-
-TRIPLES = T.StructType([
-    T.StructField("repo", T.StringType(), False),
-    T.StructField("commit", T.StringType(), False),
-    T.StructField("subj", T.StringType(), False),
-    T.StructField("pred", T.StringType(), False),
-    T.StructField("obj", T.StringType(), False),
-    T.StructField("obj_is_literal", T.BooleanType(), False),
-])
-
 MENTIONS = T.StructType([
     T.StructField("repo", T.StringType(), False),
     T.StructField("path", T.StringType(), False),
@@ -90,24 +70,4 @@ MENTIONS = T.StructType([
     T.StructField("kind", T.StringType(), False),
     T.StructField("candidates", T.ArrayType(T.StringType()), False),
     T.StructField("raw", T.StringType(), True),
-])
-
-SYMBOL_TABLE = T.StructType([
-    T.StructField("fqn", T.StringType(), False),
-    T.StructField("eid", T.StringType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("repo", T.StringType(), False),
-    # true for alias/import-binding rows added by the L5 chase (the fqn is a
-    # bound name, not the entity's canonical fqn)
-    T.StructField("via_alias", T.BooleanType(), False),
-])
-
-# Per-stage, per-partition lineage + metrics (north_star checkpoint/resume).
-LINEAGE_METRICS = T.StructType([
-    T.StructField("stage", T.StringType(), False),
-    T.StructField("repo", T.StringType(), False),
-    T.StructField("partition_id", T.IntegerType(), True),
-    T.StructField("rows_in", T.LongType(), True),
-    T.StructField("rows_out", T.LongType(), True),
-    T.StructField("status", T.StringType(), False),
 ])

@@ -55,8 +55,5 @@ def to_ntriples(triples: DataFrame) -> DataFrame:
     return triples.select(nt_line().alias("value")).orderBy("value")
 
 
-def write_ntriples(triples: DataFrame, path: str, single_file: bool = False):
-    out = to_ntriples(triples)
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)
+def write_ntriples(triples: DataFrame, path: str):
+    to_ntriples(triples).write.mode("overwrite").text(path)

@@ -75,26 +75,24 @@ def stub_source_for(module_name: str) -> str | None:
     return "\n".join(lines) + "\n"
 
 
-def extension_stub_rows(module_names: list[str],
-                        repo: str = "python-stdlib-ext",
-                        commit: str = "stub-0") -> list[tuple]:
-    """(repo, path, commit, lang, content) rows for the given modules;
-    un-importable names are skipped (warn-and-skip, parser.py:67-89)."""
+def extension_stub_rows(module_names: list[str]) -> list[tuple]:
+    """(repo, path, commit, lang, content) rows for the given modules, all
+    in repo ``python-stdlib-ext`` at commit ``stub-0``; un-importable names
+    are skipped (warn-and-skip, parser.py:67-89)."""
     rows = []
     for name in module_names:
         src = stub_source_for(name)
         if src is None:
             continue
         path = name.replace(".", "/") + ".py"
-        rows.append((repo, path, commit, "python", src))
+        rows.append(("python-stdlib-ext", path, "stub-0", "python", src))
     return rows
 
 
 def extension_stubs_df(spark: SparkSession,
-                       module_names: list[str],
-                       repo: str = "python-stdlib-ext") -> DataFrame:
+                       module_names: list[str]) -> DataFrame:
     """Stub rows as a source_files DataFrame, ready to union with a corpus
     before extraction (the stub set is tiny — driver-side createDataFrame is
     appropriate here; real corpora land via the bulk ingest path)."""
-    return spark.createDataFrame(extension_stub_rows(module_names, repo),
+    return spark.createDataFrame(extension_stub_rows(module_names),
                                  schema=SOURCE_FILES)

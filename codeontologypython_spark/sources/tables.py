@@ -17,12 +17,13 @@ from pyspark.sql import functions as F
 N_REPO_BUCKETS = 64
 
 
-def with_repo_bucket(df: DataFrame, n_buckets: int = N_REPO_BUCKETS) -> DataFrame:
+def with_repo_bucket(df: DataFrame) -> DataFrame:
     """Stable bucket for partitioning by repo (north_star: 'Iceberg triple
     tables partitioned by repo bucket'). xxhash64 is deterministic across
     sessions (unlike F.hash's seed-sensitive variants across versions)."""
     return df.withColumn(
-        "repo_bucket", (F.abs(F.xxhash64("repo")) % n_buckets).cast("int"))
+        "repo_bucket",
+        (F.abs(F.xxhash64("repo")) % N_REPO_BUCKETS).cast("int"))
 
 
 def write_triple_table(triples: DataFrame, path: str,

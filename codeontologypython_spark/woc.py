@@ -17,7 +17,6 @@ OWL = "http://www.w3.org/2002/07/owl#"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
 RDF_TYPE = RDF + "type"
-OWL_NAMED_INDIVIDUAL = OWL + "NamedIndividual"
 OWL_SAME_AS = OWL + "sameAs"  # equivalent-statement groups (individuals.py:244-272)
 
 # --- OWL classes the reference instantiates (individuals.py:90-766) ----------

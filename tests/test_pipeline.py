@@ -193,14 +193,23 @@ def test_ingest_sha256_invariant(spark, source_files):
 
 def test_pipeline_resume(spark, source_files, tmp_path):
     """Kill-and-resume: run on a subset, then resume over the full corpus —
-    only missing repos are re-extracted; final output equals a fresh run."""
+    only missing repos are re-extracted, and only they get new extract
+    lineage rows; final output equals a fresh run."""
     from codeontologypython_spark.plans.pipeline import run_pipeline
+
+    def basic_lineage(res):
+        return sorted(tuple(r) for r in spark.read.parquet(res.lineage_path)
+                      .filter((F.col("stage") == "extract")
+                              & (F.col("repo") == "fixtures/proj_basic"))
+                      .collect())
 
     wd = str(tmp_path / "wd")
     part = source_files.filter(F.col("repo") == "fixtures/proj_basic")
     r1 = run_pipeline(spark, part, wd, write_nt=False)
     s1 = spark.read.parquet(os.path.join(wd, "stage1_extract"))
     basic_rows = s1.count()
+    lineage1 = basic_lineage(r1)
+    assert lineage1
 
     r2 = run_pipeline(spark, source_files, wd, resume=True, write_nt=False)
     s1b = spark.read.parquet(os.path.join(wd, "stage1_extract"))
@@ -211,13 +220,15 @@ def test_pipeline_resume(spark, source_files, tmp_path):
     assert r2.n_triples > r1.n_triples
 
     lineage = spark.read.parquet(r2.lineage_path)
-    assert lineage.filter(F.col("stage") == "extract").count() > 0
+    assert lineage.filter((F.col("stage") == "extract")
+                          & (F.col("repo") == "fixtures/proj_hub")).count() > 0
+    assert basic_lineage(r2) == lineage1
 
 
 def test_pipeline_resume_reuses_stage_checkpoints(spark, source_files,
                                                   tmp_path):
     """A resume whose stage 1 adds nothing reuses the landed stage-2/3
-    checkpoints: neither stage runs again (no new lineage rows), and the
+    checkpoints: no stage runs again (no new lineage rows), and the
     triple table equals the first run's. Stage 3 lands only as the triple
     table (no ``stage3_triples`` copy), and the reuse run leaves its data
     files as they are (same names, same mtimes)."""
@@ -227,7 +238,7 @@ def test_pipeline_resume_reuses_stage_checkpoints(spark, source_files,
     def stage_rows(res):
         lineage = spark.read.parquet(res.lineage_path)
         return {s: lineage.filter(F.col("stage") == s).count()
-                for s in ("link", "canonicalize")}
+                for s in ("extract", "link", "canonicalize")}
 
     def table(res):
         return sorted(tuple(r) for r in read_triple_table(
@@ -243,7 +254,7 @@ def test_pipeline_resume_reuses_stage_checkpoints(spark, source_files,
     wd = str(tmp_path / "wd")
     r1 = run_pipeline(spark, source_files, wd, write_nt=False)
     rows1, table1 = stage_rows(r1), table(r1)
-    assert rows1["link"] > 0 and rows1["canonicalize"] > 0
+    assert all(rows1.values())
     assert not os.path.exists(os.path.join(wd, "stage3_triples"))
     files1 = data_files(r1)
     assert files1

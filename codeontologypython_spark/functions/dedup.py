@@ -246,11 +246,13 @@ def simhash_near_dup_pairs(df: DataFrame,
     # re-derives both of its sides, so without the barrier the (very large —
     # 64 bit-majority folds) simhash expression tree is re-evaluated 12x AND
     # shipped in every branch's task binary (~11 MB each, measured as the
-    # whole operator's wall time at small scale)
+    # whole operator's wall time at small scale). Eager: a lazy checkpoint
+    # is first computed by the caller's action, after `sh` may be gone, and
+    # its task metrics then miss their accumulators (CLAUDE.md pitfall 10)
     chunks = sh.select(
         "doc", "sh",
         *[(F.shiftright("sh", 16 * i).bitwiseAND(F.lit(0xFFFF)))
-          .alias(f"c{i}") for i in range(4)]).localCheckpoint(eager=False)
+          .alias(f"c{i}") for i in range(4)]).localCheckpoint()
     pairs = None
     combos = [(i, j) for i in range(4) for j in range(i + 1, 4)]
     for i, j in combos:

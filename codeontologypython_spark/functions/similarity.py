@@ -33,17 +33,21 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame,
                 k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query (excluding self). Rounded cosine keeps
     the ranking engine-portable (float-sum ulp differences vs SQL oracles);
-    ties break on neighbor id."""
+    ties break on neighbor id. ``queries`` is broadcast, so it must be a
+    small set."""
     from codeontologypython_spark.operators.relational import fan_out
 
     q = queries.select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").alias("qv"))
     # fan_out: the |Q| x N cosine folds evaluate on the corpus side's
     # partitions, and a single-file scan would run them on one core
-    # (no-op at corpus scale, relational.fan_out)
+    # (no-op at corpus scale, relational.fan_out). The broadcast hint keeps
+    # them there: a filtered scan keeps its table's size estimate, so left
+    # to itself the planner broadcasts the fanned-out corpus and streams the
+    # one-partition query scan, and the cross join runs in one task
     c = fan_out(corpus).select(F.col("vec_id").alias("neighbor_id"),
                                F.col("embedding").alias("cv"))
-    scored = (q.crossJoin(c)
+    scored = (F.broadcast(q).crossJoin(c)
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .withColumn("cos", F.round(
                   cosine(F.col("qv").cast("array<double>"),

@@ -6,6 +6,8 @@ batching sized for large ``content`` blobs). Every session-level size
 decision sits here: the three broadcast gates and the codegen cache, which
 holds one whole build's generated classes so that a long-lived session
 (test suite, resume loop, query runner) compiles a repeated build only once.
+So does the Python worker daemon (:mod:`.worker_daemon`), which stops every
+Python task from re-reading the zip archives on the workers' PYTHONPATH.
 """
 
 from __future__ import annotations
@@ -67,12 +69,17 @@ def get_spark(
     cpus defaults to $SPARK_GRAFT_CPUS or all cores. Shuffle partitions
     default to four per core (at least 16); AQE coalesces small shuffles.
 
-    Static confs (heap, codegen cache size) apply only when this call
-    creates the SparkContext. The tests, tools/, perfbench and bench.py
-    start their sessions here; the spark-submit scripts in jobs/ take the
-    cluster's session, run one build per process and so never repeat a
-    plan. A session built elsewhere keeps Spark's 100-entry codegen cache
-    and recompiles every repeated build.
+    Static confs (heap, codegen cache size, worker daemon) apply only when
+    this call creates the SparkContext. The tests, tools/, perfbench and
+    bench.py start their sessions here; the spark-submit scripts in jobs/
+    take the cluster's session, run one build per process and so never
+    repeat a plan. A session built elsewhere keeps Spark's 100-entry codegen
+    cache and recompiles every repeated build, and its Python workers
+    re-read their zip archives in every task.
+
+    The worker daemon is imported by module name, so the Python workers
+    must find this package where they already find its UDF modules: the
+    working directory the session started in, or PYTHONPATH.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -105,6 +112,12 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries",
                 str(_CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # fork the Python workers from worker_daemon: PySpark's own daemon
+        # behind a zipimporter cache check (~150 ms less per Python task).
+        # Named, not imported: imported here, it would load with the
+        # package, before `python -m` runs it, which draws a RuntimeWarning
+        .config("spark.python.daemon.module",
+                "codeontologypython_spark.worker_daemon")
         .config("spark.sql.autoBroadcastJoinThreshold",
                 str(_BROADCAST_JOIN_THRESHOLD_BYTES))
     )

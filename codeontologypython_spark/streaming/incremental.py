@@ -52,13 +52,19 @@ def start_incremental_extract(spark: SparkSession, source_dir: str,
                                  "left_anti")
         else:
             todo = batch_df
-        if todo.isEmpty():
-            return
-        out = extract_stage(todo)
-        out.write.mode("append").parquet(extract_path)
-        (todo.select("repo", "path", "commit")
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(lineage_path))
+        # three actions read `todo` (the empty check and two writes):
+        # persisted, the anti-join runs once per batch, not three times
+        todo = todo.persist()
+        try:
+            if todo.isEmpty():
+                return
+            out = extract_stage(todo)
+            out.write.mode("append").parquet(extract_path)
+            (todo.select("repo", "path", "commit")
+             .withColumn("batch_id", F.lit(batch_id))
+             .write.mode("append").parquet(lineage_path))
+        finally:
+            todo.unpersist()
 
     return (stream.writeStream
             .foreachBatch(process_batch)

@@ -16,12 +16,16 @@ and broadcasts are submitted inside the call that planned them), and its
 wall is its completion minus its submission time. A job's driver idle time
 is the time before its submission during which no job of the build ran (the
 driver planning, probing or waiting on Python), charged to the job's site.
-Prints one line per call site, most jobs first, then the total, then jobs,
-job wall and driver idle per program module: the file of a site's innermost
-frame (a job submitted inside a ``relational.py`` primitive counts for
-``relational.py``), with the ``sources/`` sinks taken together. Last, the
-whole-stage codegen classes each build compiled and their compile time
-(count x mean of Spark's ``CodegenMetrics`` compile-time histogram).
+Each job also brings its tasks and their summed executor run time (the
+event log's ``Executor Run Time``), so a fixed per-task cost shows as run
+time per task: a Python task that re-read its workers' zip archives spent
+~150 ms before its first row. Prints one line per call site, most jobs
+first, then the total, then the same columns per program module: the file
+of a site's innermost frame (a job submitted inside a ``relational.py``
+primitive counts for ``relational.py``), with the ``sources/`` sinks taken
+together. Last, the whole-stage codegen classes each build compiled and
+their compile time (count x mean of Spark's ``CodegenMetrics``
+compile-time histogram).
 """
 
 from __future__ import annotations
@@ -96,32 +100,44 @@ def _site() -> str:
     return " < ".join(parts) or "(outside the program)"
 
 
-def read_jobs(log_dir: str) -> list[tuple[float, float]]:
-    """(submission, completion) epoch seconds of every job in the log."""
+def read_jobs(log_dir: str) -> list[tuple[float, float, int, float]]:
+    """(submission, completion) epoch seconds, tasks run and their summed
+    executor run time in s, of every job in the log. A task counts for the
+    job that submitted its stage."""
     (name,) = os.listdir(log_dir)
-    start, end = {}, {}
+    start, end, job_of = {}, {}, {}
+    tasks: dict[int, list[float]] = {}
     with open(os.path.join(log_dir, name)) as fh:
         for line in fh:
             if line.startswith('{"Event":"SparkListenerJobStart"'):
                 e = json.loads(line)
                 start[e["Job ID"]] = e["Submission Time"] / 1e3
+                for stage in e["Stage IDs"]:
+                    job_of[stage] = e["Job ID"]
             elif line.startswith('{"Event":"SparkListenerJobEnd"'):
                 e = json.loads(line)
                 end[e["Job ID"]] = e["Completion Time"] / 1e3
-    return [(start[j], end.get(j, start[j])) for j in sorted(start)]
+            elif line.startswith('{"Event":"SparkListenerTaskEnd"'):
+                e = json.loads(line)
+                agg = tasks.setdefault(job_of.get(e["Stage ID"]), [0, 0.0])
+                agg[0] += 1
+                agg[1] += (e.get("Task Metrics") or {}).get(
+                    "Executor Run Time", 0) / 1e3
+    return [(start[j], end.get(j, start[j]), *tasks.get(j, (0, 0.0)))
+            for j in sorted(start)]
 
 
 def attribute(jobs, calls, t0, t1):
-    """site -> [jobs, job wall s, driver idle s] for the jobs submitted in
-    [t0, t1], plus the largest idle gap as (s, site) and the idle time after
-    the last job. A job goes to the longest call whose window holds its
-    submission (the event log's millisecond clock can put it on a
-    neighbouring short call); its idle time is the part of the interval
-    since the build started or the last job ended, whichever is later, in
-    which no job ran."""
+    """site -> [jobs, job wall s, driver idle s, tasks, task run s] for the
+    jobs submitted in [t0, t1], plus the largest idle gap as (s, site) and
+    the idle time after the last job. A job goes to the longest call whose
+    window holds its submission (the event log's millisecond clock can put
+    it on a neighbouring short call); its idle time is the part of the
+    interval since the build started or the last job ended, whichever is
+    later, in which no job ran."""
     out: dict[str, list[float]] = {}
     busy_until, largest = t0, (0.0, "")
-    for sub, done in sorted(jobs):
+    for sub, done, n_tasks, run_s in sorted(jobs):
         if not t0 <= sub <= t1:
             continue
         hits = [c for c in calls if c[0] - 1e-3 <= sub <= c[1] + 1e-3]
@@ -130,22 +146,21 @@ def attribute(jobs, calls, t0, t1):
         idle = max(0.0, sub - busy_until)
         busy_until = max(busy_until, done)
         largest = max(largest, (idle, site))
-        agg = out.setdefault(site, [0, 0.0, 0.0])
-        agg[0] += 1
-        agg[1] += done - sub
-        agg[2] += idle
+        agg = out.setdefault(site, [0, 0.0, 0.0, 0, 0.0])
+        for i, v in enumerate((1, done - sub, idle, n_tasks, run_s)):
+            agg[i] += v
     return out, largest, max(0.0, t1 - busy_until)
 
 
 def by_module(sites: dict[str, list[float]]) -> dict[str, list[float]]:
-    """module -> [jobs, job wall s, driver idle s], from the per-site
-    totals."""
+    """module -> [jobs, job wall s, driver idle s, tasks, task run s], from
+    the per-site totals."""
     out: dict[str, list[float]] = {}
     for site, row in sites.items():
         mod = site.split(":", 1)[0]
         if mod.startswith("sources" + os.sep):
             mod = "sources" + os.sep
-        agg = out.setdefault(mod, [0, 0.0, 0.0])
+        agg = out.setdefault(mod, [0, 0.0, 0.0, 0, 0.0])
         for i, v in enumerate(row):
             agg[i] += v
     return out
@@ -154,8 +169,9 @@ def by_module(sites: dict[str, list[float]]) -> dict[str, list[float]]:
 def _print_rows(totals: dict[str, list[float]], limit: int = 0) -> None:
     """One line per name, most jobs first; ``limit`` > 0 keeps the first."""
     rows = sorted(totals.items(), key=lambda kv: (-kv[1][0], kv[0]))
-    for name, (n, wall, idle) in rows[:limit or None]:
-        print(f"{n:>5} {wall:>10.2f} {idle:>8.2f}  {name}")
+    for name, (n, wall, idle, n_tasks, run_s) in rows[:limit or None]:
+        print(f"{n:>5} {wall:>10.2f} {idle:>8.2f} {n_tasks:>6} "
+              f"{run_s:>10.2f}  {name}")
 
 
 def codegen_compiles(spark) -> tuple[int, float]:
@@ -211,13 +227,13 @@ def main(argv=None) -> None:
 
         sites, (gap, gap_site), tail = attribute(
             read_jobs(log_dir), calls.calls, t0, t1)
-        head = f"{'jobs':>5} {'job wall s':>10} {'idle s':>8}"
+        head = (f"{'jobs':>5} {'job wall s':>10} {'idle s':>8} "
+                f"{'tasks':>6} {'task run s':>10}")
         print(f"{head}  call site")
         _print_rows(sites, args.sites)
-        n_all, wall_all, idle_all = (sum(v[i] for v in sites.values())
-                                     for i in range(3))
-        print(f"{n_all:>5} {wall_all:>10.2f} {idle_all:>8.2f}  total "
-              f"({res.n_triples} triples, build {t1 - t0:.1f} s)")
+        total = [sum(v[i] for v in sites.values()) for i in range(5)]
+        _print_rows({f"total ({res.n_triples} triples, build "
+                     f"{t1 - t0:.1f} s)": total})
         print(f"driver idle after the last job {tail:.2f} s; largest gap "
               f"{gap:.2f} s, before a job of {gap_site}")
         print(f"\n{head}  program module")
